@@ -37,6 +37,7 @@ from .differences import (
 )
 from .functions.fuzzy import fuzzy_ratio_py
 from .predicates import Predicate
+from .session import local_frame
 
 _KIND_OF = {Missing: "missing", Extra: "extra", Invalid: "invalid", Deviation: "deviation"}
 
@@ -191,13 +192,16 @@ class AcceptedInstance(BaseAcceptance):
                 F.lit(float(exp)) if exp is not None else F.lit(None).cast("double")
             )
         else:
-            cond = cond & F.col("value").eqNullSafe(F.lit(str(d.args[0])))
+            _kind, value, expected, _dev = _sig_cols_of(d)
+            cond = cond & F.col("value").eqNullSafe(F.lit(value).cast("string"))
             if isinstance(d, Invalid):
                 # arity-sensitive, matching driver __eq__: a one-arg
                 # Invalid must NOT absorb rows that carry an expected
                 # value (Invalid('a') != Invalid('a', 'exp'))
                 if len(d.args) > 1:
-                    cond = cond & F.col("expected").eqNullSafe(F.lit(str(d.args[1])))
+                    cond = cond & F.col("expected").eqNullSafe(
+                        F.lit(expected).cast("string")
+                    )
                 else:
                     cond = cond & F.col("expected").isNull()
         return cond
@@ -246,7 +250,8 @@ class AcceptedList(BaseAcceptance):
         # distributed form keys on (kind, value, expected, deviation)
         # signatures; Deviation instances key on (deviation, expected).
         bcounter = Counter(_sig_cols_of(d) for d in self.diffs)
-        bdf = spark.createDataFrame(
+        bdf = local_frame(
+            spark,
             [(k[0], k[1], k[2], float(k[3]) if k[3] is not None else None, n)
              for k, n in bcounter.items()],
             "kind string, value string, expected string, deviation double, _budget long",
@@ -290,11 +295,12 @@ def _sig_cols_of(d):
         dev, exp = d.args
         return (kind, None, str(float(exp)) if exp is not None else None,
                 float(dev) if dev is not None else None)
-    value = str(d.args[0])
-    expected = (
-        str(d.args[1]) if isinstance(d, Invalid) and len(d.args) > 1 else None
-    )
-    return (kind, value, expected, None)
+    value = d.args[0]
+    expected = d.args[1] if isinstance(d, Invalid) and len(d.args) > 1 else None
+    # None stays None: violation rows hold SQL NULL there, which sorts
+    # last and matches only NULL — never the string 'None'
+    return (kind, None if value is None else str(value),
+            None if expected is None else str(expected), None)
 
 
 def _sig_value_col():
@@ -341,7 +347,8 @@ class AcceptedMapping(BaseAcceptance):
         for k, diffs in self.mapping.items():
             for sig, n in Counter(_sig_cols_of(d) for d in diffs).items():
                 rows.append((str(k),) + sig + (n,))
-        bdf = spark.createDataFrame(
+        bdf = local_frame(
+            spark,
             rows,
             "group_key string, kind string, value string, expected string, "
             "deviation double, _budget long",

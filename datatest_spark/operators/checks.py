@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import VIOLATION_SCHEMA
+from ..session import local_frame
 
 _CORE_WITH_PK = [
     "check_id", "kind", "partition_key", "group_key", "doc_id",
@@ -57,25 +58,44 @@ class BaseCheck(object):
         scan by the suite runner (SURVEY §3.1 shuffle family (c)) — one
         pass emits every row-level violation via when()/explode instead
         of one scan per check. Return None to keep a dedicated plan.
+
+        No higher-order function (``forall``/``exists``/``filter``/
+        ``transform``/``aggregate`` with a lambda) in a ``cond``: those
+        are ``CodegenFallback`` expressions, so one of them drops the
+        whole fused ``Filter`` out of whole-stage codegen and evaluates
+        an interpreted lambda per array element on every input row.
+        ``value``/``expected``/``deviation``/``detail`` may use them —
+        they are evaluated only on the few violating rows.
         """
         return None
 
 
 def fuse_row_checks(df: DataFrame, checks) -> DataFrame | None:
-    """One scan for all fusable row-level checks.
-
-    Builds, per check condition, a nullable violation struct; an
-    array+explode emits 0..n violations per input row. Catalyst prunes
-    the scan to exactly the columns the fused conditions touch, and the
-    whole select stays inside one WholeStageCodegen span.
-    """
-    specs = []
+    """One scan for all fusable row-level ``checks`` (None when any of
+    them has no ``row_conditions``); see ``fuse_row_conditions``."""
+    built = []
     for check in checks:
         conds = check.row_conditions(df)
         if conds is None:
             return None
-        for c in conds:
-            specs.append((check.check_id, c))
+        built.append((check.check_id, conds))
+    return fuse_row_conditions(df, built)
+
+
+def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
+    """One scan for already-built row conditions: ``built`` is a list of
+    ``(check_id, row_conditions(df))`` pairs.
+
+    Builds, per check condition, a nullable violation struct; an
+    array+explode emits 0..n violations per input row. Catalyst prunes
+    the scan to exactly the columns the fused conditions touch. The
+    pre-filter on the disjunction of all conditions runs inside
+    whole-stage codegen (conditions hold no higher-order function, see
+    ``BaseCheck.row_conditions``). The ``Generate`` (explode) above it
+    falls back to interpretation when a violation value holds a lambda,
+    but it only sees the violating rows.
+    """
+    specs = [(check_id, c) for check_id, conds in built for c in conds]
     if not specs:
         return None
 
@@ -325,8 +345,8 @@ class ReferentialCheck(BaseCheck):
     def _allowed_df(self, spark, template_field):
         if isinstance(self.allowed, DataFrame):
             return self.allowed.select(F.col(self.allowed.columns[0]).alias(self.column))
-        return spark.createDataFrame(
-            [(v,) for v in self.allowed], T.StructType([template_field])
+        return local_frame(
+            spark, [(v,) for v in self.allowed], T.StructType([template_field])
         )
 
     def row_conditions(self, df):
@@ -521,8 +541,8 @@ class LengthBoundCheck(BaseCheck):
 
 
 class TokenRangeCheck(BaseCheck):
-    """Every token id within [0, vocab): native forall over the array —
-    no UDF, stays in codegen."""
+    """Every token id within [0, vocab) and non-null: one codegen'd
+    predicate over the array — no UDF and no per-element lambda."""
 
     check_id = "token_range"
 
@@ -531,36 +551,42 @@ class TokenRangeCheck(BaseCheck):
         self.vocab = vocab_size
         self.id_col = id_col
 
+    def _bad(self, ac):
+        # array_min/array_max skip nulls, so a null element is probed
+        # apart: arrays_overlap(ac, [-1]) is NULL exactly when the
+        # arrays share no element, both are non-empty and ac holds a
+        # null (a shared -1 is caught by array_min anyway). Empty and
+        # null arrays never violate.
+        return ac.isNotNull() & (
+            (F.array_min(ac) < 0)
+            | (F.array_max(ac) >= self.vocab)
+            | F.arrays_overlap(ac, F.array(F.lit(-1))).isNull()
+        )
+
+    def _first_bad(self, ac):
+        # a lambda, but only ever evaluated on violating rows
+        return F.filter(
+            ac, lambda t: t.isNull() | (t < 0) | (t >= self.vocab)
+        )[0]
+
     def row_conditions(self, df):
         if self.id_col != "doc_id":  # fused scan attributes via doc_id
             return None
         ac = F.col(self.array_col)
-        in_range = F.forall(
-            ac, lambda t: t.isNotNull() & (t >= 0) & (t < self.vocab)
-        )
-        first_bad = F.filter(
-            ac, lambda t: t.isNull() | (t < 0) | (t >= self.vocab)
-        )[0]
         return [
             dict(
-                cond=ac.isNotNull() & ~in_range,
+                cond=self._bad(ac),
                 kind="invalid",
-                value=first_bad,
+                value=self._first_bad(ac),
                 expected=F.lit("[0,{0})".format(self.vocab)),
             )
         ]
 
     def violations(self, df):
         ac = F.col(self.array_col)
-        in_range = F.forall(
-            ac, lambda t: t.isNotNull() & (t >= 0) & (t < self.vocab)
-        )
-        bad = df.filter(ac.isNotNull() & ~in_range)
-        first_bad = F.filter(
-            ac, lambda t: t.isNull() | (t < 0) | (t >= self.vocab)
-        )[0]
         return _sel(
-            bad, self.check_id, "invalid", first_bad,
+            df.filter(self._bad(ac)), self.check_id, "invalid",
+            self._first_bad(ac),
             expected=F.lit("[0,{0})".format(self.vocab)),
             doc_id=F.col(self.id_col),
         )
@@ -989,7 +1015,8 @@ def schema_drift(old: DataFrame, new: DataFrame) -> DataFrame:
             else None
         )
         out.append((c, status, oc, nc, orr, nrr, delta))
-    return old.sparkSession.createDataFrame(
+    return local_frame(
+        old.sparkSession,
         out,
         "column string, status string, old_class string, new_class string, "
         "old_null_rate double, new_null_rate double, null_rate_delta double",

@@ -144,6 +144,8 @@ def k_anonymity_profile(
     ``at_risk_share``, one correctly-rounded IEEE division mirrored
     verbatim in the oracle SQL.
     """
+    if k < 1:
+        raise ValueError("k_anonymity: k must be >= 1")
     if l is not None and l < 1:
         raise ValueError("k_anonymity: l must be >= 1")
     if (sensitive_col is None) != (l is None):

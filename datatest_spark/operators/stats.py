@@ -1944,6 +1944,12 @@ def consolidate_rare(
     """
     if min_count < 1:
         raise ValueError("consolidate_rare: min_count must be >= 1")
+    clash = {"_val", "_keep"} & set(df.columns)
+    if clash:
+        raise ValueError(
+            "consolidate_rare uses helper columns %s; rename or drop the "
+            "conflicting input columns first" % sorted(clash)
+        )
     v = F.col(col).cast("string")
     keep = (
         df.where(v.isNotNull())

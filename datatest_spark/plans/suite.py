@@ -18,9 +18,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..differences import ValidationError
-from ..schema import MANIFEST_SCHEMA, VIOLATION_SCHEMA
+from ..schema import MANIFEST_SCHEMA, VERDICT_SCHEMA, VIOLATION_SCHEMA
+from ..session import local_frame
 from ..validation import _rows_to_differences
-from ..operators.checks import SchemaConformanceCheck, UniquenessCheck
+from ..operators.checks import (
+    SchemaConformanceCheck,
+    UniquenessCheck,
+    fuse_row_conditions,
+)
 from ..operators.drift import DriftCheck
 from ..operators.stats import _stat_exprs, partition_key_col, DEFAULT_QUANTILES
 
@@ -152,7 +157,7 @@ class ValidationSuite(object):
             )
             for pk, metrics in partition_rows
         ]
-        mdf = spark.createDataFrame(rows, MANIFEST_SCHEMA)
+        mdf = local_frame(spark, rows, MANIFEST_SCHEMA)
         mdf.coalesce(1).write.mode("append").parquet(path)
 
     # -- main entry ---------------------------------------------------------
@@ -334,8 +339,7 @@ class ValidationSuite(object):
         # (b)+(c) violation plans per check. Row-level checks that expose
         # row_conditions() are FUSED into one input scan (shuffle family
         # (c) = exactly one job); join/agg checks keep dedicated plans.
-        from ..operators.checks import fuse_row_checks
-
+        # Each check's conditions are built once and handed to the fuser.
         driver_rows = []
         plans = []
         fusable = []
@@ -358,16 +362,17 @@ class ValidationSuite(object):
                     plans.append(plan)
             elif check.uses_stats:
                 driver_rows.extend(check.stats_violations(spark, stats_rows))
-            elif check.row_conditions(keyed) is not None:
-                fusable.append(check)
             else:
-                plan = check.violations(keyed)
-                if plan is not None:
-                    plans.append(plan)
-        if fusable:
-            fused = fuse_row_checks(keyed, fusable)
-            if fused is not None:
-                plans.append(fused)
+                conds = check.row_conditions(keyed)
+                if conds is not None:
+                    fusable.append((check.check_id, conds))
+                else:
+                    plan = check.violations(keyed)
+                    if plan is not None:
+                        plans.append(plan)
+        fused = fuse_row_conditions(keyed, fusable)
+        if fused is not None:
+            plans.append(fused)
 
         _mark("plan_build")
 
@@ -396,10 +401,10 @@ class ValidationSuite(object):
                 )
                 for d in driver_rows
             ]
-            ddf = spark.createDataFrame(rows, VIOLATION_SCHEMA)
+            ddf = local_frame(spark, rows, VIOLATION_SCHEMA)
             violations = ddf if violations is None else violations.unionByName(ddf)
         if violations is None:
-            violations = spark.createDataFrame([], VIOLATION_SCHEMA)
+            violations = local_frame(spark, [], VIOLATION_SCHEMA)
 
         violations = violations.persist()
         pre_counts = {
@@ -518,9 +523,7 @@ class ValidationSuite(object):
                     (run_id, pk, "__resumed__", "fail" if nv else "pass",
                      nv, nrows, rec_wall)
                 )
-        from ..schema import VERDICT_SCHEMA
-
-        verdicts = spark.createDataFrame(verdict_rows, VERDICT_SCHEMA)
+        verdicts = local_frame(spark, verdict_rows, VERDICT_SCHEMA)
 
         if manifest_dir:
             partition_rows = [

@@ -50,3 +50,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """DataFrame over driver-built ``rows`` (tuples in ``schema`` field
+    order; ``schema`` a StructType or DDL string) planned as a
+    ``LocalRelation``.
+
+    The rows travel as one Arrow table, so reading the frame runs no
+    Spark job. ``spark.createDataFrame(list, schema)`` would plan a
+    ``LogicalRDD`` instead: every read of it is a job with a Python
+    worker re-serializing the rows.
+    """
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, af, values in zip(schema.fields, arrow_schema, columns):
+        arr = pa.array(values, type=af.type)
+        if not field.nullable and arr.null_count:
+            raise ValueError(
+                "field {0}: not nullable, but got None".format(field.name)
+            )
+        arrays.append(arr)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )

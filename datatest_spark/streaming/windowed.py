@@ -696,6 +696,18 @@ _KMV_OUT_SCHEMA = (
 )
 
 
+def _kmv_estimate(merged, k):
+    """``kmv_distinct``'s estimate over a sorted bottom-k list: exact
+    below k values, else ``(k-1) / (u_k / 2^60)``. A u_k of 0 gives None,
+    the NULL of the batch division with ANSI off (ANSI raises there);
+    a ZeroDivisionError here would kill the streaming query."""
+    if len(merged) < k:
+        return float(len(merged))
+    if merged[-1] == 0:
+        return None
+    return round(float(k - 1) * float(1 << 60) / float(merged[-1]), 4)
+
+
 def streaming_kmv_distinct(
     stream: DataFrame,
     col: str,
@@ -729,8 +741,6 @@ def streaming_kmv_distinct(
         .cast("long")
         .alias("_u"),
     )
-    two60 = float(1 << 60)
-
     def update(key, pdfs, state: GroupState):
         import pandas as pd
 
@@ -748,10 +758,7 @@ def streaming_kmv_distinct(
         merged = sorted(seen)[:k]
         state.update((merged, n_ing))
         n_kept = len(merged)
-        if n_kept < k:
-            est = float(n_kept)
-        else:
-            est = round(float(k - 1) * two60 / float(merged[-1]), 4)
+        est = _kmv_estimate(merged, k)
         yield pd.DataFrame(
             {
                 "group": [g],

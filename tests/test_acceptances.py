@@ -262,6 +262,47 @@ class TestDistributedParity:
         assert kept[0] == kept[1] == kept[2]
 
 
+class TestNoneValueParity:
+    """A None value signs as None, not the string 'None': it sorts last
+    in the driver-side stable order and matches only NULL value rows,
+    as in the distributed form."""
+
+    IDS = ["b", None, "b", None, None, "d", "d"]
+
+    def test_count_with_repeated_null_ids(self, spark):
+        from datatest_spark.requirements import RequiredUnique
+
+        with pytest.raises(ValidationError) as ei:
+            with accepted.count(2):
+                validate.unique(self.IDS)
+        kept_drv = sorted(d.args[0] or "<null>" for d in ei.value.differences)
+        df = spark.createDataFrame([(v,) for v in self.IDS], "id string")
+        vdf = RequiredUnique().violations(df).repartition(3)
+        kept_dist = sorted(
+            r["value"] or "<null>" for r in accepted.count(2).apply(vdf).collect()
+        )
+        # nulls last: the budget goes to Extra('b') and Extra('d')
+        assert kept_drv == kept_dist == ["<null>", "<null>"]
+
+    @pytest.mark.parametrize("acc_fn", [
+        lambda: accepted(Extra(None)),
+        lambda: accepted([Extra(None)]),
+    ], ids=["instance", "list"])
+    def test_none_instance_absorbs_null_rows(self, spark, acc_fn):
+        from datatest_spark.requirements import RequiredUnique
+
+        with pytest.raises(ValidationError) as ei:
+            with acc_fn():
+                validate.unique(self.IDS)
+        kept_drv = sorted(d.args[0] or "<null>" for d in ei.value.differences)
+        df = spark.createDataFrame([(v,) for v in self.IDS], "id string")
+        vdf = RequiredUnique().violations(df)
+        kept_dist = sorted(
+            r["value"] or "<null>" for r in acc_fn().apply(vdf).collect()
+        )
+        assert kept_drv == kept_dist
+
+
 class TestAcceptedArgsDistributed:
     def test_args_predicate_distributed_parity(self, spark):
         diffs = [Missing(3), Missing(9), Extra(1), Deviation(2, 10), Deviation(7, 10)]

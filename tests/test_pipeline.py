@@ -7547,6 +7547,13 @@ class TestSession10ReviewFixes:
                 df, ["c"], k=2, sensitive_col="s", l=0
             )
 
+    def test_k_anonymity_profile_rejects_k_below_one(self, spark):
+        from datatest_spark.operators import privacy
+
+        df = spark.createDataFrame([("US",)], "c string")
+        with pytest.raises(ValueError, match="k must be"):
+            privacy.k_anonymity_profile(df, ["c"], k=0)
+
 
 class TestSession10OpsD:
     """Pins for the fourth session-10 batch: FD discovery and rare-
@@ -7617,6 +7624,13 @@ class TestSession10OpsD:
         assert set(out.columns) == {"id", "v"}
         got = {r["id"]: r["v"] for r in out.collect()}
         assert got == {1: "x", 2: "x", 3: "__other__"}
+
+    def test_consolidate_rare_rejects_helper_column_clash(self, spark):
+        from datatest_spark.operators.stats import consolidate_rare
+
+        df = spark.createDataFrame([("x", 1)], "v string, _keep int")
+        with pytest.raises(ValueError, match="_keep"):
+            consolidate_rare(df, "v", 1)
 
     def test_consolidate_rare_no_corpus_shuffle(self, spark, docs):
         from datatest_spark.operators.stats import consolidate_rare

@@ -868,3 +868,11 @@ def test_streaming_kmv_matches_batch_sketch(spark, tmp_path):
     assert batch["tiny"]["is_exact"]
     with pytest.raises(ValueError):
         windowed.streaming_kmv_distinct(stream, "v", "source", k=1)
+
+
+def test_streaming_kmv_zero_hash_estimate_is_null():
+    from datatest_spark.streaming import windowed
+
+    # u_k = 0: NULL as in the non-ANSI batch division, never a
+    # ZeroDivisionError that kills the streaming query
+    assert windowed._kmv_estimate([0], k=1) is None

@@ -2,6 +2,8 @@
 checks → violations → per-partition verdicts → manifest/resume →
 determinism, plus salted-stats parity."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -409,6 +411,105 @@ class TestRowCheckFusion:
         # one scan, no join/exchange in the fused row-check family
         assert "Exchange" not in plan
         assert plan.count("Scan") <= 1
+        # the pre-filter over all conditions runs inside whole-stage
+        # codegen: no condition holds an interpreted higher-order function
+        pre = [ln for ln in plan.splitlines()
+               if "Filter" in ln and "array_min" in ln]
+        assert len(pre) == 1, plan
+        assert re.match(r"^[\s:+-]*\*\(\d+\) Filter ", pre[0]), plan
+
+
+class TestTokenRangeEdges:
+    """The token-range predicate, fused and dedicated, against a
+    pure-Python oracle on the array edge cases."""
+
+    VOCAB = 10
+    CASES = {
+        "empty": [],
+        "all_null": [None, None],
+        "null_in_range": [3, None, 9],
+        "minus_one": [-1],
+        "last_id": [VOCAB - 1],
+        "vocab": [0, VOCAB],
+        "null_array": None,
+        "null_next_to_minus_one": [None, -1],
+        "clean": [0, 5, VOCAB - 1],
+    }
+
+    @classmethod
+    def _oracle(cls):
+        out = {}
+        for doc_id, tokens in cls.CASES.items():
+            bad = [t for t in (tokens or [])
+                   if t is None or t < 0 or t >= cls.VOCAB]
+            if bad:
+                out[doc_id] = None if bad[0] is None else str(bad[0])
+        return out
+
+    def test_fused_and_dedicated_match_oracle(self, spark):
+        from datatest_spark.operators.checks import fuse_row_checks
+
+        df = spark.createDataFrame(
+            list(self.CASES.items()), "doc_id string, tokens array<int>"
+        ).withColumn("partition_key", F.lit("all"))
+        check = TokenRangeCheck(vocab_size=self.VOCAB)
+        want = self._oracle()
+        assert set(want) == set(self.CASES) - {
+            "empty", "last_id", "null_array", "clean"
+        }
+        for plan in (fuse_row_checks(df, [check]), check.violations(df)):
+            got = {r["doc_id"]: r["value"] for r in plan.collect()}
+            assert got == want
+
+
+class TestDriverFrames:
+    """Driver-built frames are LocalRelations: reading one runs no job."""
+
+    def test_verdicts_collect_runs_no_job(self, spark, seqs):
+        res = north_star_suite(ALLOWED_SOURCES).run(seqs, run_id="nojob")
+        sc = spark.sparkContext
+        sc.setJobGroup("verdicts-probe", "collect the verdicts")
+        try:
+            rows = res.verdicts.collect()
+        finally:
+            sc.setJobGroup("verdicts-probe-done", "")
+        res.unpersist()
+        assert rows
+        assert list(sc.statusTracker().getJobIdsForGroup("verdicts-probe")) == []
+
+    def test_local_frame_matches_list_frame(self, spark):
+        import datetime
+
+        from datatest_spark.schema import (
+            MANIFEST_SCHEMA, VERDICT_SCHEMA, VIOLATION_SCHEMA,
+        )
+        from datatest_spark.session import local_frame
+
+        ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 678000,
+                               tzinfo=datetime.timezone.utc)
+        cases = [
+            (MANIFEST_SCHEMA, [
+                ("r", "p", None, "h", ["a", "b"], {"n": 1.0, "x": None}, ts),
+                ("r", None, "s", None, [], None, None),
+            ]),
+            (VERDICT_SCHEMA, [("r", "p", "c", "pass", 0, 3, 12),
+                              ("r", None, "c", "fail", 2, None, None)]),
+            (VIOLATION_SCHEMA, [("r", "c", "extra", None, None, "d", "v",
+                                 None, 1.5, {"k": "v"})]),
+            (VIOLATION_SCHEMA, []),
+        ]
+        for schema, rows in cases:
+            got = local_frame(spark, rows, schema)
+            want = spark.createDataFrame(rows, schema)
+            assert got.schema == want.schema
+            assert got.collect() == want.collect()
+            assert "LocalRelation" in (
+                got._jdf.queryExecution().optimizedPlan().toString()
+            )
+        # a null in a non-nullable field fails loudly, as the list path does
+        with pytest.raises(ValueError, match="check_id"):
+            local_frame(spark, [("r", "p", None, "pass", 0, 1, 1)],
+                        VERDICT_SCHEMA)
 
 
 class TestSaltedSuite:
