@@ -241,6 +241,8 @@ def main(argv=None) -> int:
         "run_id": res.run_id,
         "n_rows": res.n_rows_total,
         "wall_ms": res.wall_ms,
+        # wall seconds per suite phase, in run order
+        "phases": {k: round(v, 3) for k, v in res.phases.items()},
         "partitions": len(real(verdicts)),
         "failed_partitions": len(real(failed)),
         "global_fail": any(

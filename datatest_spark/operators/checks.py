@@ -1,11 +1,22 @@
 """Suite check operators over the tokenized-sequence table (SURVEY §7.0).
 
-Each check is a named object with
-    ``check_id``                      — stable identifier;
-    ``violations(df, pk)``            — core-violations plan (row-level), or
-    ``stats_violations(stats_rows)``  — violations derived from the collected
-                                        wide-agg stats (partition-level).
-``pk`` is the partition_key Column already attached to ``df``. All plans
+Each check is a named object with a stable ``check_id`` and one form:
+
+``row_conditions(df)``
+    Row checks: per-row violation conditions as Column dicts. The suite
+    fuses every row check into one input scan (``fuse_row_conditions``).
+    Their ``violations(df)`` is derived, not written: the fused plan of
+    that check's conditions alone, so a direct call and the suite share
+    one implementation.
+``violations(df)``
+    Join/aggregation checks (uniqueness, freshness, functional
+    dependency, Benford, token equality, a DataFrame-valued referential
+    set) write their own plan.
+``stats_violations(spark, stats_rows)``
+    Partition-level checks (``uses_stats``): violation row dicts derived
+    from the collected wide-agg stats.
+
+``df`` carries the ``partition_key`` column the suite attached. All plans
 stay JVM-side; the only pandas UDFs are the documented slow paths.
 """
 
@@ -15,13 +26,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import VIOLATION_SCHEMA
 from ..session import local_frame
 
 _CORE_WITH_PK = [
     "check_id", "kind", "partition_key", "group_key", "doc_id",
     "value", "expected", "deviation", "detail",
 ]
+
+
+def _doc_id(df, id_col):
+    """A violation's doc_id: the check's ``id_col``, or None (a NULL
+    doc_id) when the frame lacks that column."""
+    return F.col(id_col) if id_col in df.columns else None
 
 
 def _sel(df, check_id, kind, value, expected=None, deviation=None, doc_id=None,
@@ -31,7 +47,7 @@ def _sel(df, check_id, kind, value, expected=None, deviation=None, doc_id=None,
         (kind if isinstance(kind, F.Column) else F.lit(kind)).alias("kind"),
         F.col("partition_key").cast("string").alias("partition_key"),
         (group_key if group_key is not None else F.lit(None).cast("string")).alias("group_key"),
-        (doc_id if doc_id is not None else F.lit(None).cast("string")).alias("doc_id"),
+        (doc_id.cast("string") if doc_id is not None else F.lit(None).cast("string")).alias("doc_id"),
         value.cast("string").alias("value"),
         (expected.cast("string") if expected is not None else F.lit(None).cast("string")).alias("expected"),
         (deviation.cast("double") if deviation is not None else F.lit(None).cast("double")).alias("deviation"),
@@ -44,7 +60,12 @@ class BaseCheck(object):
     uses_stats = False
 
     def violations(self, df: DataFrame) -> DataFrame | None:
-        return None
+        """A row check's own plan: the fused plan of its conditions
+        alone. None for a check without ``row_conditions``."""
+        conds = self.row_conditions(df)
+        if conds is None:
+            return None
+        return fuse_row_conditions(df, [(self.check_id, conds)])
 
     def stats_violations(self, spark, stats_rows) -> list:
         """Return violation row dicts derived from collected stats."""
@@ -52,7 +73,9 @@ class BaseCheck(object):
 
     def row_conditions(self, df: DataFrame) -> list | None:
         """Fusable per-row form: list of dicts with Column entries
-        {cond, kind, value, expected, deviation, doc_id, detail}.
+        {cond, kind, value, expected, deviation, doc_id, detail}; absent
+        entries are NULL. ``doc_id`` is the check's id column
+        (``_doc_id``).
 
         Checks that return non-None here are FUSED into a single input
         scan by the suite runner (SURVEY §3.1 shuffle family (c)) — one
@@ -86,14 +109,15 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
     """One scan for already-built row conditions: ``built`` is a list of
     ``(check_id, row_conditions(df))`` pairs.
 
-    Builds, per check condition, a nullable violation struct; an
-    array+explode emits 0..n violations per input row. Catalyst prunes
-    the scan to exactly the columns the fused conditions touch. The
-    pre-filter on the disjunction of all conditions runs inside
-    whole-stage codegen (conditions hold no higher-order function, see
-    ``BaseCheck.row_conditions``). The ``Generate`` (explode) above it
-    falls back to interpretation when a violation value holds a lambda,
-    but it only sees the violating rows.
+    Builds, per check condition, a nullable violation struct that
+    carries its own check's ``doc_id``, so checks with different id
+    columns share the scan; an array+explode emits 0..n violations per
+    input row. Catalyst prunes the scan to exactly the columns the
+    fused conditions touch. The pre-filter on the disjunction of all
+    conditions runs inside whole-stage codegen (conditions hold no
+    higher-order function, see ``BaseCheck.row_conditions``). The
+    ``Generate`` (explode) above it falls back to interpretation when a
+    violation value holds a lambda, but it only sees the violating rows.
     """
     specs = [(check_id, c) for check_id, conds in built for c in conds]
     if not specs:
@@ -110,6 +134,7 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
                 F.struct(
                     F.lit(check_id).alias("check_id"),
                     F.lit(c["kind"]).alias("kind"),
+                    _s(c.get("doc_id")).alias("doc_id"),
                     _s(c.get("value")).alias("value"),
                     _s(c.get("expected")).alias("expected"),
                     (
@@ -128,11 +153,6 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
             ).alias("_v{0}".format(len(structs)))
         )
 
-    doc_col = (
-        F.col("doc_id").cast("string")
-        if "doc_id" in df.columns
-        else F.lit(None).cast("string")
-    )
     # Filter FIRST on the disjunction of all conditions — a pure codegen
     # predicate that prunes the ~99.9% clean rows before any struct/array
     # allocation. Without this the explode allocates per input row and
@@ -146,7 +166,6 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
         df.filter(any_cond)
         .select(
             F.col("partition_key"),
-            doc_col.alias("doc_id"),
             F.explode(F.array(*structs)).alias("_v"),
         )
         .filter(F.col("_v").isNotNull())
@@ -156,7 +175,7 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
         F.col("_v.kind").alias("kind"),
         F.col("partition_key").cast("string").alias("partition_key"),
         F.lit(None).cast("string").alias("group_key"),
-        F.col("doc_id"),
+        F.col("_v.doc_id").alias("doc_id"),
         F.col("_v.value").alias("value"),
         F.col("_v.expected").alias("expected"),
         F.col("_v.deviation").alias("deviation"),
@@ -329,9 +348,12 @@ class UniquenessCheck(BaseCheck):
 
 
 class ReferentialCheck(BaseCheck):
-    """Membership of a column in an allowed set (J1–J3): broadcast
-    left_anti join; one Extra row per offending data row (attributable),
-    plus optional Missing rows for required-but-absent members (J2)."""
+    """Membership of a column in an allowed set (J1–J3): one Extra row
+    per offending data row, attributed by ``id_col``; a null value is
+    always a violation. A literal list is a row condition (fused into
+    the suite's single scan). A DataFrame-valued set, or
+    ``require_all_present`` (J2: Missing rows for required-but-absent
+    members), runs a broadcast left_anti join instead."""
 
     check_id = "referential"
 
@@ -350,30 +372,32 @@ class ReferentialCheck(BaseCheck):
         )
 
     def row_conditions(self, df):
-        # literal allowed sets fuse into the single row-scan via isin;
-        # DataFrame-valued sets need the broadcast join path (violations()).
-        # Custom id columns also fall back: the fused scan attributes
-        # violations via the frame's literal 'doc_id' column.
-        if (isinstance(self.allowed, DataFrame) or self.require_all
-                or self.id_col != "doc_id"):
+        if isinstance(self.allowed, DataFrame) or self.require_all:
             return None
         c = F.col(self.column)
+        # isin over the non-null members only: one null member makes
+        # isin NULL, not false, for every non-member
+        members = [v for v in self.allowed if v is not None]
         return [
             dict(
-                cond=~c.isin(list(self.allowed)) | c.isNull(),
+                cond=~c.isin(members) | c.isNull(),
                 kind="extra",
                 value=c,
+                doc_id=_doc_id(df, self.id_col),
             )
         ]
 
     def violations(self, df):
+        plan = super().violations(df)
+        if plan is not None:
+            return plan
         spark = df.sparkSession
         field = [f for f in df.schema.fields if f.name == self.column][0]
         allowed = self._allowed_df(spark, field)
         bad = df.join(F.broadcast(allowed), self.column, "left_anti")
         plan = _sel(
             bad, self.check_id, "extra", F.col(self.column),
-            doc_id=F.col(self.id_col) if self.id_col in df.columns else None,
+            doc_id=_doc_id(df, self.id_col),
         )
         if self.require_all:
             from ..joins import required_minus_data
@@ -403,9 +427,8 @@ class ConsistencyCheck(BaseCheck):
         self.id_col = id_col
 
     def row_conditions(self, df):
-        if self.id_col != "doc_id":  # fused scan attributes via doc_id
-            return None
         lc, ac = F.col(self.length_col), F.col(self.array_col)
+        doc_id = _doc_id(df, self.id_col)
         return [
             dict(
                 cond=lc.isNotNull() & ac.isNotNull() & (F.size(ac) != lc),
@@ -413,36 +436,19 @@ class ConsistencyCheck(BaseCheck):
                 value=F.size(ac),
                 expected=lc,
                 deviation=F.size(ac).cast("double") - lc.cast("double"),
+                doc_id=doc_id,
             ),
             dict(
                 cond=lc.isNotNull() & ac.isNull(),
                 kind="invalid",
                 value=ac,
                 expected=lc,
+                doc_id=doc_id,
                 detail=F.create_map(
                     F.lit("reason"), F.lit("tokens null, n_tok set")
                 ),
             ),
         ]
-
-    def violations(self, df):
-        lc, ac = F.col(self.length_col), F.col(self.array_col)
-        both = df.filter(lc.isNotNull() & ac.isNotNull()).filter(
-            F.size(ac) != lc
-        )
-        dev = _sel(
-            both, self.check_id, "deviation",
-            F.size(ac), expected=lc,
-            deviation=F.size(ac).cast("double") - lc.cast("double"),
-            doc_id=F.col(self.id_col),
-        )
-        half_null = df.filter(lc.isNotNull() & ac.isNull())
-        inv = _sel(
-            half_null, self.check_id, "invalid", ac, expected=lc,
-            doc_id=F.col(self.id_col),
-            detail=F.create_map(F.lit("reason"), F.lit("tokens null, n_tok set")),
-        )
-        return dev.unionByName(inv)
 
 
 class LengthBoundCheck(BaseCheck):
@@ -497,15 +503,10 @@ class LengthBoundCheck(BaseCheck):
         return F.lit(lo if lo is not None else hi)
 
     def row_conditions(self, df):
-        # the fused scan attributes violations via the frame's literal
-        # 'doc_id' column; with a custom id column the fused rows would
-        # be unattributable (or wrongly attributed) — keep a dedicated
-        # plan in that case
-        if self.id_col != "doc_id":
-            return None
         lc = F.col(self.length_col)
         _lo, _hi, label = self._bounds()
         nearest = self._nearest(lc)
+        doc_id = _doc_id(df, self.id_col)
         return [
             dict(
                 cond=lc.isNotNull() & self._out_of_bounds(lc),
@@ -513,31 +514,16 @@ class LengthBoundCheck(BaseCheck):
                 value=lc,
                 expected=F.lit(label),
                 deviation=lc.cast("double") - nearest.cast("double"),
+                doc_id=doc_id,
             ),
             dict(
                 cond=lc.isNull(),
                 kind="invalid",
                 value=lc,
                 expected=F.lit(label),
+                doc_id=doc_id,
             ),
         ]
-
-    def violations(self, df):
-        lc = F.col(self.length_col)
-        _lo, _hi, label = self._bounds()
-        nearest = self._nearest(lc)
-        dev = _sel(
-            df.filter(lc.isNotNull() & self._out_of_bounds(lc)),
-            self.check_id, "deviation", lc, expected=F.lit(label),
-            deviation=lc.cast("double") - nearest.cast("double"),
-            doc_id=F.col(self.id_col).cast("string"),
-        )
-        inv = _sel(
-            df.filter(lc.isNull()),
-            self.check_id, "invalid", lc, expected=F.lit(label),
-            doc_id=F.col(self.id_col).cast("string"),
-        )
-        return dev.unionByName(inv)
 
 
 class TokenRangeCheck(BaseCheck):
@@ -570,8 +556,6 @@ class TokenRangeCheck(BaseCheck):
         )[0]
 
     def row_conditions(self, df):
-        if self.id_col != "doc_id":  # fused scan attributes via doc_id
-            return None
         ac = F.col(self.array_col)
         return [
             dict(
@@ -579,17 +563,9 @@ class TokenRangeCheck(BaseCheck):
                 kind="invalid",
                 value=self._first_bad(ac),
                 expected=F.lit("[0,{0})".format(self.vocab)),
+                doc_id=_doc_id(df, self.id_col),
             )
         ]
-
-    def violations(self, df):
-        ac = F.col(self.array_col)
-        return _sel(
-            df.filter(self._bad(ac)), self.check_id, "invalid",
-            self._first_bad(ac),
-            expected=F.lit("[0,{0})".format(self.vocab)),
-            doc_id=F.col(self.id_col),
-        )
 
 
 class TokenBoundaryCheck(BaseCheck):
@@ -649,8 +625,6 @@ class TokenBoundaryCheck(BaseCheck):
         )
 
     def row_conditions(self, df):
-        if self.id_col != "doc_id":  # fused scan attributes via doc_id
-            return None
         ac = F.col(self.array_col)
         return [
             dict(
@@ -658,17 +632,9 @@ class TokenBoundaryCheck(BaseCheck):
                 kind="invalid",
                 value=self._value(ac),
                 expected=F.lit(self._label()),
+                doc_id=_doc_id(df, self.id_col),
             )
         ]
-
-    def violations(self, df):
-        ac = F.col(self.array_col)
-        return _sel(
-            df.filter(self._bad(ac)),
-            self.check_id, "invalid", self._value(ac),
-            expected=F.lit(self._label()),
-            doc_id=F.col(self.id_col).cast("string"),
-        )
 
 
 class TokenEqualityCheck(BaseCheck):

@@ -768,8 +768,9 @@ def psi_equidepth(
     it) rather than classifying the whole corpus into a null bucket.
 
     Scale shape: one baseline-only aggregation producing ONE broadcast
-    row, a MAP-ONLY bucket assignment (array filter in codegen — no
-    join, no second scan shape), one (group, bucket) count aggregation,
+    row, a MAP-ONLY bucket assignment against it (no shuffle, no second
+    scan shape; its array ``filter`` lambda is interpreted, outside
+    whole-stage codegen), one (group, bucket) count aggregation,
     then PSI arithmetic on the dense |groups| × nbins grid, summed in
     bucket order on both engines. Returns (group, psi) including the
     baseline itself (its psi ≈ 0 — a cheap self-test).

@@ -140,8 +140,10 @@ def callable_violations(df, col, predicate, id_col=None, group_col=None):
 def arrays_equal_native(a, b):
     """JVM-side token-array equality: null-safe, length- and element-wise.
 
-    ``zip_with(a, b, <=>)`` + ``forall`` keeps the whole check inside
-    whole-stage codegen — the default at scale (SURVEY.md J5).
+    ``zip_with(a, b, <=>)`` + ``forall``: no UDF and no Python worker,
+    but both are higher-order functions (``CodegenFallback``), so the
+    operator that holds this predicate runs outside whole-stage codegen
+    and evaluates the lambdas per element, interpreted (SURVEY.md J5).
     """
     if isinstance(a, str):
         a = F.col(a)

@@ -699,8 +699,10 @@ def _sign_bits(v, n_planes: int, seed: int):
 
     Plane components are generated JVM-side from xxhash64(seed, p, dim
     index) — dimension-agnostic (adapts to each row's vector length),
-    no RNG state, reproducible at any parallelism, and the whole dot
-    product stays in codegen (zip_with + aggregate)."""
+    no RNG state, reproducible at any parallelism, and JVM-side. The dot
+    product is zip_with + aggregate, higher-order functions that Spark
+    does not compile: the projection holding them runs outside
+    whole-stage codegen, its lambdas interpreted per element."""
     idx = F.sequence(F.lit(0), F.size(v) - 1)
 
     def _component(p):

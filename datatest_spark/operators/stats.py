@@ -5,14 +5,6 @@ quantiles — BASELINE.json north_star) is computed in ONE
 ``groupBy(partition_key).agg(...)`` so the suite costs ~one shuffle at
 10^12 rows. Catalyst performs map-side partial aggregation for every
 expression here, so the 100x ``web`` skew is combined before the shuffle.
-
-An explicit **salted two-phase** variant (SURVEY C2) is provided for the
-mergeable subset (count / nulls / min / max / HLL union via
-``hll_sketch_agg`` + ``hll_union_agg``): phase 1 groups by
-``(partition_key, salt)``, phase 2 merges per partition_key. It exists for
-deployments where a single hot key saturates one reducer even after
-partial aggregation, and is property-tested to produce identical results
-to the unsalted pass (SURVEY §5.2.4).
 """
 
 from __future__ import annotations
@@ -96,76 +88,6 @@ def column_stats(
     columns = list(columns) if columns is not None else list(df.columns)
     keyed = df.withColumn("partition_key", partition_key_col(partition_cols))
     return keyed.groupBy("partition_key").agg(*_stat_exprs(df, columns, quantiles))
-
-
-def column_stats_salted(
-    df: DataFrame,
-    partition_cols=("source",),
-    columns=None,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase salted stats (C2) for the mergeable metric subset.
-
-    Salt is round-robin within each physical partition
-    (``monotonically_increasing_id() % n_salts``) — perfectly balanced
-    regardless of data values (a value-hash salt collapses when the hashed
-    column is low-cardinality), deterministic per layout, and never
-    ``rand()`` (resume/determinism, SURVEY C3/C5; cross-run determinism is
-    not required — the phase-2 merge is value-exact whatever the salt).
-    Quantiles are excluded: percentile sketches aren't union-mergeable
-    through the public API; they stay in the single-pass form where
-    Spark's own partial aggregation handles skew.
-    """
-    columns = list(columns) if columns is not None else list(df.columns)
-    types = dict((f.name, f.dataType) for f in df.schema.fields)
-    keyed = df.withColumn("partition_key", partition_key_col(partition_cols))
-    salted = keyed.withColumn(
-        "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
-    )
-
-    phase1_exprs = [F.count(F.lit(1)).alias("n_rows")]
-    complex_cols = set()
-    for c in columns:
-        phase1_exprs.append(F.sum(F.col(c).isNull().cast("long")).alias(c + "__nulls"))
-        if isinstance(types[c], (T.ArrayType, T.MapType, T.StructType)):
-            # same typed-exprs discipline as the single-pass form: no HLL
-            # over complex columns (stringifying every token array is the
-            # most expensive expression in the pass for marginal value)
-            complex_cols.add(c)
-        else:
-            phase1_exprs.append(
-                F.hll_sketch_agg(F.col(c).cast("string")).alias(c + "__hll")
-            )
-        if isinstance(types[c], _NUMERIC):
-            phase1_exprs.append(F.min(c).cast("double").alias(c + "__min"))
-            phase1_exprs.append(F.max(c).cast("double").alias(c + "__max"))
-            phase1_exprs.append(
-                F.sum(F.col(c).cast("double")).alias(c + "__sum")
-            )
-    p1 = salted.groupBy("partition_key", "_salt").agg(*phase1_exprs)
-
-    phase2_exprs = [F.sum("n_rows").alias("n_rows")]
-    for c in columns:
-        phase2_exprs.append(F.sum(c + "__nulls").alias(c + "__nulls"))
-        if c not in complex_cols:
-            phase2_exprs.append(
-                F.hll_sketch_estimate(F.hll_union_agg(F.col(c + "__hll"))).alias(
-                    c + "__approx_distinct"
-                )
-            )
-        if isinstance(types[c], _NUMERIC):
-            phase2_exprs.append(F.min(c + "__min").alias(c + "__min"))
-            phase2_exprs.append(F.max(c + "__max").alias(c + "__max"))
-            phase2_exprs.append(F.sum(c + "__sum").alias(c + "__sum"))
-    p2 = p1.groupBy("partition_key").agg(*phase2_exprs)
-    # derive avg from mergeable sum/count
-    for c in columns:
-        if isinstance(types[c], _NUMERIC):
-            p2 = p2.withColumn(
-                c + "__avg",
-                F.col(c + "__sum") / (F.col("n_rows") - F.col(c + "__nulls")),
-            )
-    return p2
 
 
 def group_shares(

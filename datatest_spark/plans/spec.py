@@ -31,6 +31,9 @@ Design rules:
 
 * Pure data in, existing objects out — no new check semantics live
   here, so spec-built and code-built suites are bitwise the same plan.
+  A check spec's keys are its class's constructor arguments (plus
+  ``type``); a missing or misspelled one is a ``SpecError``, never a
+  silently default-built check.
 * DataFrame-valued parameters (drift baselines, token-equality
   reference tables) cannot be serialized; a spec references them as
   ``"@name"`` strings resolved through the ``dataframes`` mapping.
@@ -50,6 +53,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..operators.checks import (
+    BenfordCheck,
+    ConsistencyCheck,
+    FreshnessCheck,
+    FunctionalDependencyCheck,
+    LengthBoundCheck,
+    NullRateCheck,
+    ReferentialCheck,
+    SchemaConformanceCheck,
+    StatIntervalCheck,
+    TokenBoundaryCheck,
+    TokenEqualityCheck,
+    TokenRangeCheck,
+    UniquenessCheck,
+)
+from ..operators.drift import DriftCheck
 
 __all__ = ["SpecError", "suite_from_spec", "suite_from_spec_file",
            "CHECK_BUILDERS", "ACCEPTANCE_BUILDERS"]
@@ -149,159 +169,68 @@ def _pair(value, what):
     return (value[0], value[1])
 
 
-def _take(params, spec, *names, **renames):
-    """Copy present keys through (specs stay sparse; check defaults rule)."""
-    out = {}
-    for n in names:
-        if n in spec:
-            out[n] = spec[n]
-    for spec_name, kw in renames.items():
-        if spec_name in spec:
-            out[kw] = spec[spec_name]
-    out.update(params)
-    return out
+# -- checks ----------------------------------------------------------------
+
+def _bounds(value, dataframes, where):
+    if not isinstance(value, dict):
+        raise SpecError("%s needs {stat: [lo, hi]}" % where)
+    return {k: _pair(v, "%s %r" % (where, k)) for k, v in value.items()}
 
 
-# -- check builders --------------------------------------------------------
-
-def _build_schema_conformance(spec, dataframes):
-    from ..operators.checks import SchemaConformanceCheck
-
-    if "fields" not in spec:
-        raise SpecError("schema_conformance needs 'fields'")
-    return SchemaConformanceCheck(_parse_fields(spec["fields"]))
-
-
-def _build_null_rate(spec, dataframes):
-    from ..operators.checks import NullRateCheck
-
-    if not isinstance(spec.get("max_null_rate"), dict):
-        raise SpecError("null_rate needs a 'max_null_rate' {column: rate}")
-    return NullRateCheck(spec["max_null_rate"])
-
-
-def _build_stat_interval(spec, dataframes):
-    from ..operators.checks import StatIntervalCheck
-
-    bounds = spec.get("bounds")
-    if not isinstance(bounds, dict):
-        raise SpecError("stat_interval needs 'bounds' {stat: [lo, hi]}")
-    return StatIntervalCheck({
-        k: _pair(v, "stat_interval bound %r" % k) for k, v in bounds.items()
-    })
-
-
-def _build_uniqueness(spec, dataframes):
-    from ..operators.checks import UniquenessCheck
-
-    return UniquenessCheck(**_take({}, spec, "column", "hll_rsd_margin",
-                                   "exact"))
-
-
-def _build_referential(spec, dataframes):
-    from ..operators.checks import ReferentialCheck
-
-    return ReferentialCheck(**_take({}, spec, "column", "allowed",
-                                    "require_all_present", "id_col"))
-
-
-def _build_consistency(spec, dataframes):
-    from ..operators.checks import ConsistencyCheck
-
-    return ConsistencyCheck(**_take({}, spec, "length_col", "array_col",
-                                    "id_col"))
-
-
-def _build_length_bound(spec, dataframes):
-    from ..operators.checks import LengthBoundCheck
-
-    return LengthBoundCheck(**_take({}, spec, "length_col", "min_len",
-                                    "max_len", "id_col"))
-
-
-def _build_token_range(spec, dataframes):
-    from ..operators.checks import TokenRangeCheck
-
-    return TokenRangeCheck(**_take({}, spec, "array_col", "vocab_size",
-                                   "id_col"))
-
-
-def _build_token_boundary(spec, dataframes):
-    from ..operators.checks import TokenBoundaryCheck
-
-    return TokenBoundaryCheck(**_take({}, spec, "array_col", "bos_id",
-                                      "eos_id", "id_col"))
-
-
-def _build_token_equality(spec, dataframes):
-    from ..operators.checks import TokenEqualityCheck
-
-    ref = _resolve_df(spec.get("reference"), dataframes,
-                      "token_equality.reference")
-    return TokenEqualityCheck(ref, **_take({}, spec, "id_col", "tokens_col",
-                                           "use_udf"))
-
-
-def _build_freshness(spec, dataframes):
-    from ..operators.checks import FreshnessCheck
-
-    return FreshnessCheck(**_take({}, spec, "ts_col", "as_of_ms",
-                                  "max_age_ms", "min_ts_ms"))
-
-
-def _build_functional_dependency(spec, dataframes):
-    from ..operators.checks import FunctionalDependencyCheck
-
-    if "determinant" not in spec or "dependent" not in spec:
-        raise SpecError("functional_dependency needs 'determinant' and "
-                        "'dependent'")
-    return FunctionalDependencyCheck(
-        spec["determinant"], spec["dependent"],
-        **_take({}, spec, "max_violation_rate", "check_id")
-    )
-
-
-def _build_benford(spec, dataframes):
-    from ..operators.checks import BenfordCheck
-
-    if "value_col" not in spec:
-        raise SpecError("benford needs 'value_col'")
-    return BenfordCheck(spec["value_col"],
-                        **_take({}, spec, "max_chi2", "min_rows", "decimals",
-                                "check_id"))
-
-
-def _build_drift(spec, dataframes):
-    from ..operators.drift import DriftCheck
-
-    baseline = spec.get("baseline")
-    if isinstance(baseline, list):
+def _baseline(value, dataframes, where):
+    if isinstance(value, list):
         # inline [[group, bucket, p], ...] rows — a baseline small enough
         # to live in the spec file itself
-        baseline = [tuple(r) for r in baseline]
-    else:
-        baseline = _resolve_df(baseline, dataframes, "drift.baseline")
-    return DriftCheck(baseline, **_take({}, spec, "value_col", "group_col",
-                                        "lo", "hi", "nbins", "metric",
-                                        "threshold"))
+        return [tuple(r) for r in value]
+    return _resolve_df(value, dataframes, where)
 
+
+# the values JSON cannot carry: spec key -> (constructor keyword,
+# converter(value, dataframes, where)); every other key of a check spec
+# goes to the check's constructor as it is
+_CONVERTERS = {
+    "fields": ("expected_schema", lambda v, d, w: _parse_fields(v)),
+    "bounds": ("bounds", _bounds),
+    "reference": ("reference_df", _resolve_df),
+    "baseline": ("baseline", _baseline),
+}
 
 CHECK_BUILDERS = {
-    "schema_conformance": _build_schema_conformance,
-    "null_rate": _build_null_rate,
-    "stat_interval": _build_stat_interval,
-    "uniqueness": _build_uniqueness,
-    "referential": _build_referential,
-    "consistency": _build_consistency,
-    "length_bound": _build_length_bound,
-    "token_range": _build_token_range,
-    "token_boundary": _build_token_boundary,
-    "token_equality": _build_token_equality,
-    "freshness": _build_freshness,
-    "functional_dependency": _build_functional_dependency,
-    "benford": _build_benford,
-    "drift": _build_drift,
+    "schema_conformance": SchemaConformanceCheck,
+    "null_rate": NullRateCheck,
+    "stat_interval": StatIntervalCheck,
+    "uniqueness": UniquenessCheck,
+    "referential": ReferentialCheck,
+    "consistency": ConsistencyCheck,
+    "length_bound": LengthBoundCheck,
+    "token_range": TokenRangeCheck,
+    "token_boundary": TokenBoundaryCheck,
+    "token_equality": TokenEqualityCheck,
+    "freshness": FreshnessCheck,
+    "functional_dependency": FunctionalDependencyCheck,
+    "benford": BenfordCheck,
+    "drift": DriftCheck,
 }
+
+
+def _build_check(spec, dataframes):
+    """``cls(**params)`` for the spec's type: a missing, unknown or
+    misspelled parameter is the constructor's TypeError, raised as a
+    SpecError."""
+    t = spec["type"]
+    params = {}
+    for key, value in spec.items():
+        if key == "type":
+            continue
+        if key in _CONVERTERS:
+            kw, convert = _CONVERTERS[key]
+            params[kw] = convert(value, dataframes, "%s.%s" % (t, key))
+        else:
+            params[key] = value
+    try:
+        return CHECK_BUILDERS[t](**params)
+    except TypeError as e:
+        raise SpecError("%s check: %s" % (t, e))
 
 
 # -- acceptance builders ---------------------------------------------------
@@ -365,7 +294,8 @@ def _build_acc_instance(spec, dataframes):
 def _build_acc_fuzzy(spec, dataframes):
     from ..acceptances import AcceptedFuzzy
 
-    return AcceptedFuzzy(**_take({}, spec, "cutoff"))
+    kw = {"cutoff": spec["cutoff"]} if "cutoff" in spec else {}
+    return AcceptedFuzzy(**kw)
 
 
 def _build_acc_keys(spec, dataframes):
@@ -419,8 +349,7 @@ def _build_acceptance(spec, dataframes):
 
 # -- entry points ----------------------------------------------------------
 
-_SUITE_KEYS = ("partition_cols", "stats_columns", "quantiles",
-               "salted_stats", "n_salts")
+_SUITE_KEYS = ("partition_cols", "stats_columns", "quantiles")
 
 
 def suite_from_spec(spec, dataframes=None):
@@ -450,8 +379,7 @@ def suite_from_spec(spec, dataframes=None):
         if t not in CHECK_BUILDERS:
             raise SpecError("unknown check type %r (known: %s)"
                             % (t, ", ".join(sorted(CHECK_BUILDERS))))
-        params = {k: v for k, v in c.items() if k != "type"}
-        checks.append(CHECK_BUILDERS[t](params, dataframes))
+        checks.append(_build_check(c, dataframes))
     acceptances = [_build_acceptance(a, dataframes)
                    for a in spec.get("acceptances", [])]
     kwargs = {k: spec[k] for k in _SUITE_KEYS if k in spec}

@@ -32,13 +32,15 @@ from ..operators.stats import _stat_exprs, partition_key_col, DEFAULT_QUANTILES
 
 class SuiteResult(object):
     def __init__(self, run_id, violations, verdicts, stats_rows, wall_ms,
-                 n_rows_total, persisted=None):
+                 n_rows_total, persisted=None, phases=None):
         self.run_id = run_id
         self.violations = violations      # DataFrame (post-acceptance)
         self.verdicts = verdicts          # DataFrame
         self.stats_rows = stats_rows      # list[dict] collected wide-agg stats
         self.wall_ms = wall_ms
         self.n_rows_total = n_rows_total
+        # {phase: wall seconds}, in run order (see ValidationSuite.run)
+        self.phases = dict(phases or {})
         self._persisted = list(persisted or [])
 
     def unpersist(self):
@@ -72,19 +74,12 @@ class ValidationSuite(object):
     """
 
     def __init__(self, checks, partition_cols=("source",), acceptances=None,
-                 stats_columns=None, quantiles=DEFAULT_QUANTILES,
-                 salted_stats=False, n_salts=16):
+                 stats_columns=None, quantiles=DEFAULT_QUANTILES):
         self.checks = list(checks)
         self.partition_cols = list(partition_cols)
         self.acceptances = list(acceptances or [])
         self.stats_columns = stats_columns
         self.quantiles = quantiles
-        # C2: explicit two-phase salted aggregation for deployments where
-        # one hot partition key saturates a reducer even after Spark's
-        # map-side partial aggregation. Mergeable metrics only (count/
-        # nulls/min/max/HLL-union); quantile sketches stay single-pass.
-        self.salted_stats = salted_stats
-        self.n_salts = n_salts
 
     # -- manifest / resume (C3) -------------------------------------------
     @staticmethod
@@ -176,7 +171,13 @@ class ValidationSuite(object):
         invocation fails fast with instructions. Only local/POSIX
         manifest dirs are lockable — object-store paths (`://`) skip the
         lock and the single-writer discipline falls to the orchestrator
-        (documented, same as Delta-less parquet sinks everywhere)."""
+        (documented, same as Delta-less parquet sinks everywhere).
+
+        ``SuiteResult.phases`` records the wall seconds of each phase,
+        in order: setup, stats_pass, plan_build, violations_eval,
+        acceptances, sink_write, verdicts_manifest — the first place to
+        look when a run's scaling is worse than its data volume explains
+        (time in the scans, or in driver-side gaps?)."""
         run_id = run_id or uuid.uuid4().hex[:12]
         lock_path = None
         lock_fd = None
@@ -223,15 +224,10 @@ class ValidationSuite(object):
                   violations_sink, input_snapshot_id=None) -> SuiteResult:
         spark = df.sparkSession
         t0 = time.time()
-        # opt-in phase log (DATATEST_SUITE_PHASE_LOG=1): wall seconds
-        # per suite phase to stderr — the first tool to reach for when
-        # a cluster run's scaling looks worse than its data volume
-        # explains (is the time in the scans, or in driver-side gaps?)
-        _phases = []
+        marks = [(None, time.perf_counter())]
 
         def _mark(name):
-            if os.environ.get("DATATEST_SUITE_PHASE_LOG"):
-                _phases.append((name, time.time()))
+            marks.append((name, time.perf_counter()))
 
         keyed = df.withColumn(
             "partition_key", partition_key_col(self.partition_cols)
@@ -307,28 +303,18 @@ class ValidationSuite(object):
             int(m.get("n_rows") or 0) for m in skipped_metrics.values()
         )
 
-        # (a) the single wide aggregation pass (C1) — or the salted
-        # two-phase variant (C2) when configured.
+        # (a) the single wide aggregation pass (C1): Spark's map-side
+        # partial aggregation combines every metric before the one
+        # shuffle, which absorbs a hot partition key
         stats_cols = self.stats_columns or [
             c for c in df.columns if c != "partition_key"
         ]
-        if self.salted_stats:
-            from ..operators.stats import column_stats_salted
-
-            stats_rows = [
-                r.asDict()
-                for r in column_stats_salted(
-                    keyed.drop("partition_key"), self.partition_cols,
-                    stats_cols, n_salts=self.n_salts
-                ).collect()
-            ]
-        else:
-            stats_rows = [
-                r.asDict()
-                for r in keyed.groupBy("partition_key")
-                .agg(*_stat_exprs(df, stats_cols, self.quantiles))
-                .collect()
-            ]
+        stats_rows = [
+            r.asDict()
+            for r in keyed.groupBy("partition_key")
+            .agg(*_stat_exprs(df, stats_cols, self.quantiles))
+            .collect()
+        ]
         _mark("stats_pass")
         # resumed partitions count toward the total: a monitor comparing
         # n_rows against the expected table size must not false-alarm on
@@ -575,27 +561,16 @@ class ValidationSuite(object):
                 input_files_hash, input_snapshot_id,
             )
 
-        if os.environ.get("DATATEST_SUITE_PHASE_LOG"):
-            import sys as _sys
-
-            _mark("verdicts_manifest")
-            prev = t0
-            parts = []
-            for name, ts in _phases:
-                parts.append("{0}={1:.2f}s".format(name, ts - prev))
-                prev = ts
-            print(
-                "[suite-phases run_id={0}] {1}".format(
-                    run_id, " ".join(parts)
-                ),
-                file=_sys.stderr,
-            )
+        _mark("verdicts_manifest")
+        phases = {
+            name: t - prev for (_, prev), (name, t) in zip(marks, marks[1:])
+        }
         persisted = [violations]
         if self.acceptances:
             persisted.append(accepted_df)
         return SuiteResult(
             run_id, accepted_df, verdicts, stats_rows, wall_ms, n_rows_total,
-            persisted=persisted,
+            persisted=persisted, phases=phases,
         )
 
 

@@ -9,7 +9,8 @@ Tables:
   * ``tokenized_sequences(doc_id, tokens, n_tok, source)`` — the binding
     input schema (BASELINE.json:15) with configurable injected defects:
     duplicate doc_ids, n_tok != size(tokens), out-of-set sources, nulls,
-    and a 100x skewed ``web`` source (exercises salting, SURVEY.md C2).
+    and a 100x skewed ``web`` source (exercises the stats pass's
+    map-side partial aggregation under key skew, SURVEY.md C2).
   * ``ref_tokens(doc_id, tokens)`` — reference copy with configurable
     corruption for the token-array-equality check (SURVEY.md J5/U3).
   * ``allowed_sources(source)`` — the legal source set (SURVEY.md J3).

@@ -33,6 +33,10 @@ class TestValidateJob:
         ])
         assert rc == 0 and s["status"] == "pass"
         assert s["partitions"] == 2 and s["n_rows"] == 100
+        assert list(s["phases"]) == [
+            "setup", "stats_pass", "plan_build", "violations_eval",
+            "acceptances", "sink_write", "verdicts_manifest",
+        ]
 
     def test_fail_exit_code_and_sample(self, spark, token_table, capsys):
         rc, s = _run(capsys, [

@@ -76,13 +76,6 @@ class TestStatsShuffles:
         p = _plan(column_stats(docs, ("source",), ["n_chars", "lang"]))
         assert _exchanges(p) == 1  # partial agg -> ONE shuffle -> final
 
-    def test_salted_stats_two_exchanges(self, docs):
-        from datatest_spark.operators.stats import column_stats_salted
-
-        # two-phase by design: salt-local agg + merge
-        p = _plan(column_stats_salted(docs, ("source",), ["n_chars"]))
-        assert _exchanges(p) == 2
-
 
 class TestBroadcasts:
     def test_mapping_requirement_broadcasts(self, spark):

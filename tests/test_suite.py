@@ -1,6 +1,6 @@
 """Suite runner end-to-end (SURVEY §7.1 step 1, §5.2.3-4): synth table →
 checks → violations → per-partition verdicts → manifest/resume →
-determinism, plus salted-stats parity."""
+determinism."""
 
 import re
 
@@ -16,7 +16,7 @@ from datatest_spark.operators.checks import (
     UniquenessCheck,
 )
 from datatest_spark.operators.drift import DriftCheck, histogram, kl_divergence, psi
-from datatest_spark.operators.stats import column_stats, column_stats_salted
+from datatest_spark.operators.stats import column_stats
 from datatest_spark.plans.suite import ValidationSuite, north_star_suite
 from datatest_spark.sources.synth import (
     ALLOWED_SOURCES,
@@ -61,22 +61,6 @@ class TestStats:
         assert any(pk.startswith("source=web") for pk in pks)
         row = stats[0]
         assert "n_rows" in row and "n_tok__min" in row.asDict()
-
-    def test_salted_matches_unsalted(self, seqs):
-        plain = {
-            r["partition_key"]: r.asDict()
-            for r in column_stats(seqs, ("source",), ["n_tok"], quantiles=None).collect()
-        }
-        salted = {
-            r["partition_key"]: r.asDict()
-            for r in column_stats_salted(seqs, ("source",), ["n_tok"], n_salts=8).collect()
-        }
-        assert set(plain) == set(salted)
-        for pk in plain:
-            assert plain[pk]["n_rows"] == salted[pk]["n_rows"]
-            assert plain[pk]["n_tok__nulls"] == salted[pk]["n_tok__nulls"]
-            assert plain[pk]["n_tok__min"] == salted[pk]["n_tok__min"]
-            assert plain[pk]["n_tok__max"] == salted[pk]["n_tok__max"]
 
 
 class TestChecks:
@@ -512,26 +496,57 @@ class TestDriverFrames:
                         VERDICT_SCHEMA)
 
 
-class TestSaltedSuite:
-    """C2 wiring: the salted two-phase stats path produces the same
-    verdicts as the single-pass suite."""
+class TestOneCheckForm:
+    """A row check has one implementation: its ``violations`` is the
+    fused plan of its own conditions, and every row check joins the
+    suite's single scan whatever its id column."""
 
-    def test_salted_suite_same_verdicts(self, spark, seqs):
-        plain = north_star_suite(ALLOWED_SOURCES)
-        res_p = plain.run(seqs, run_id="sp")
-        salted = north_star_suite(ALLOWED_SOURCES)
-        salted.salted_stats = True
-        res_s = salted.run(seqs, run_id="ss")
-        vp = sorted(
-            (r["partition_key"], r["check_id"], r["status"], r["n_violations"])
-            for r in res_p.verdicts.collect()
-        )
-        vs = sorted(
-            (r["partition_key"], r["check_id"], r["status"], r["n_violations"])
-            for r in res_s.verdicts.collect()
-        )
-        assert vp == vs
-        assert res_p.n_rows_total == res_s.n_rows_total
+    def test_referential_null_member_flags_non_members(self, spark):
+        from datatest_spark.operators.checks import fuse_row_checks
+
+        df = spark.createDataFrame(
+            [("a", "web"), ("b", "zzz"), ("c", None)],
+            "doc_id string, source string",
+        ).withColumn("partition_key", F.lit("all"))
+        check = ReferentialCheck("source", allowed=["web", None])
+        for plan in (fuse_row_checks(df, [check]), check.violations(df)):
+            got = sorted((r["doc_id"], r["value"]) for r in plan.collect())
+            assert got == [("b", "zzz"), ("c", None)]
+
+    def test_custom_id_col_attributes_fused_rows(self, spark):
+        from datatest_spark.operators.checks import fuse_row_checks
+
+        df = spark.createDataFrame(
+            [("d1", "u1", [1, 2], 3), ("d2", "u2", [1, -5], 2),
+             ("d3", "u3", [4], 1)],
+            "doc_id string, uid string, tokens array<int>, n_tok int",
+        ).withColumn("partition_key", F.lit("all"))
+        fused = fuse_row_checks(df, [ConsistencyCheck(id_col="uid"),
+                                     TokenRangeCheck(id_col="uid")])
+        assert fused is not None
+        got = sorted((r["check_id"], r["doc_id"]) for r in fused.collect())
+        assert got == [("n_tok_consistency", "u1"), ("token_range", "u2")]
+
+    def test_spec_check_key_typo_raises(self):
+        from datatest_spark.plans.spec import SpecError, suite_from_spec
+
+        with pytest.raises(SpecError, match="lenght_col"):
+            suite_from_spec({"checks": [
+                {"type": "consistency", "lenght_col": "x"}]})
+        for key, value in (("salted_stats", True), ("n_salts", 8)):
+            with pytest.raises(SpecError, match="unknown suite keys"):
+                suite_from_spec({"checks": [{"type": "uniqueness"}],
+                                 key: value})
+
+    def test_phases_recorded_by_default(self, spark, seqs, monkeypatch):
+        monkeypatch.delenv("DATATEST_SUITE_PHASE_LOG", raising=False)
+        res = north_star_suite(ALLOWED_SOURCES).run(seqs, run_id="phases")
+        res.unpersist()
+        assert list(res.phases) == [
+            "setup", "stats_pass", "plan_build", "violations_eval",
+            "acceptances", "sink_write", "verdicts_manifest",
+        ]
+        assert all(v >= 0 for v in res.phases.values())
 
 
 class TestFreshness:
