@@ -418,35 +418,6 @@ def q_freq_spectrum(spark, sf_dir):
     )
 
 
-def q_funnel_conversion(spark, sf_dir):
-    """Ordered view -> click -> purchase funnel over events
-    (temporal.funnel_conversion): first-touch sequential-min
-    semantics, strictly-increasing timestamps, TZ-free."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    return temporal.funnel_conversion(
-        e, ["view", "click", "purchase"]
-    )
-
-
-def q_event_cadence(spark, sf_dir):
-    """Per-user inter-arrival cadence (temporal.inter_event_cadence):
-    integer-second gaps, DECIMAL(38,0) fixed-point moments so the
-    4-dp stats are bit-identical across engines and partitionings."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    return temporal.inter_event_cadence(e).select(
-        F.col("user").alias("user_id"),
-        "n_intervals",
-        "mean_gap_s",
-        "std_gap_s",
-        "cv",
-        "zero_gap_frac",
-    )
-
-
 def q_jaccard_sweep(spark, sf_dir):
     """Dedup-aggressiveness curve (dedup.jaccard_threshold_sweep):
     cumulative near-dup pair + touched-document counts per candidate
@@ -473,38 +444,6 @@ def q_hubness(spark, sf_dir):
     in_degree 0 = antihub."""
     e = _t(spark, sf_dir, "embeddings")
     return similarity.hubness_audit(e, k=10)
-
-
-def q_event_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event
-    streams (temporal.event_transition_matrix): scripted traffic shows
-    near-deterministic rows; never-before-seen transitions are
-    instrumentation bugs. Deterministic (ts, event_id) ordering."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    return temporal.event_transition_matrix(e)
-
-
-def q_audience_overlap(spark, sf_dir):
-    """User-audience overlap between event types
-    (temporal.audience_overlap): jaccard + independence lift per
-    unordered type pair, zero-overlap pairs included — near-disjoint
-    audiences are different populations wearing one schema."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    return temporal.audience_overlap(e)
-
-
-def q_path_trigrams(spark, sf_dir):
-    """Second-order path mining vs the first-order null model
-    (temporal.path_trigrams): lift >> 1 = genuinely second-order
-    behavior (scripted flows), lift << 1 = forbidden continuations."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    return temporal.path_trigrams(e, min_count=2)
 
 
 def q_dup_embedding_check(spark, sf_dir):
@@ -759,23 +698,6 @@ def q_ivf_md5_topk(spark, sf_dir):
     )
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal plumbing end-to-end. The driver's rows-only check sorts
-    a pandas frame, so the output must be scalar columns only — the
-    feature array is exploded to (media_id, dim, feature)."""
-    from datatest_spark.operators import multimodal
-
-    media = multimodal.synth_media(spark, 200)
-    feats = multimodal.extract_features(media, out_dim=8)
-    return feats.select(
-        "media_id",
-        "modality",
-        "n_bytes",
-        "payload_hash",
-        F.posexplode("features").alias("dim", "feature"),
-    ).withColumn("feature", F.round(F.col("feature").cast("double"), 4))
-
-
 _MIX_RATES = {"src0": 0.25, "src1": 0.5, "src2": 1.0, "src3": 1.75, "src4": 2.5}
 
 
@@ -874,65 +796,6 @@ def q_weighted_sample(spark, sf_dir):
     return packing.weighted_sample(
         d, 10, weight_col="n_chars", hash_fn="md5"
     ).select("doc_id", "source")
-
-
-def q_asof_enrich(spark, sf_dir):
-    """As-of join (operators/temporal.asof_join): each purchase event
-    enriched with the latest signup at-or-before it per user — the
-    union + hash-partition + last(struct) merge plan, one Exchange.
-    DuckDB's native ASOF LEFT JOIN is the oracle; the right side is
-    pre-deduped per (user_id, ts) so tie-breaking is engine-independent.
-    The microsecond delta keeps the comparison TZ-free (NTZ arithmetic,
-    no epoch conversion)."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    left = e.where("event_type = 'purchase'").select("event_id", "user_id", "ts")
-    right = (
-        e.where("event_type = 'signup'")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("event_id"))
-    )
-    j = temporal.asof_join(left, right, on="ts", by="user_id")
-    return j.select(
-        "event_id",
-        "user_id",
-        F.col("event_id_r").cast("long").alias("event_id_r"),
-        F.timestamp_diff("MICROSECOND", F.col("ts_r"), F.col("ts"))
-        .cast("long")
-        .alias("usecs_since_signup"),
-    )
-
-
-def q_range_join_windows(spark, sf_dir):
-    """Bucketized interval join (operators/temporal.range_join): every
-    purchase inside a [signup, signup+24h] window per user. The interval
-    side explodes to ~25 one-hour buckets; both sides equi-join on
-    (user, bucket) then the exact BETWEEN filter — no theta-join. NTZ
-    arithmetic throughout (timestamp_add + epoch_ms), so the result is
-    session-TZ-independent."""
-    from datatest_spark.operators import temporal
-
-    e = _t(spark, sf_dir, "events")
-    left = e.where("event_type = 'purchase'").select("event_id", "user_id", "ts")
-    right = (
-        e.where("event_type = 'signup'")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            "user_id",
-            F.col("ts").alias("start"),
-            F.timestamp_add("HOUR", F.lit(24), F.col("ts")).alias("end"),
-        )
-    )
-    j = temporal.range_join(left, right, on="ts", by="user_id")
-    return j.select(
-        "event_id",
-        "user_id",
-        F.col("signup_id_r").alias("signup_id"),
-        F.timestamp_diff("MICROSECOND", F.col("start_r"), F.col("ts"))
-        .cast("long")
-        .alias("usecs_after_signup"),
-    )
 
 
 def q_contamination_hits(spark, sf_dir):
@@ -1887,8 +1750,8 @@ def q_compression_profile(spark, sf_dir):
     (operators/text.compression_profile): the information-density
     quality gate — templated boilerplate collapses under DEFLATE long
     before n-gram heuristics name it. DEFLATE has no SQL oracle, so
-    this is a documented rows-only entry (multimodal-family Arrow
-    kernel); semantics pinned by construction tests."""
+    this is a documented rows-only entry (Arrow kernel); semantics
+    pinned by construction tests."""
     from datatest_spark.operators.text import compression_profile
 
     d = _t(spark, sf_dir, "documents")
@@ -2049,54 +1912,6 @@ def q_position_entropy(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = d.select(F.split(F.col("text"), " ").alias("tokens"))
     return position_entropy(toks, max_pos=16)
-
-
-def q_windowed_drift(spark, sf_dir):
-    """Per-day PSI of event values per event_type vs the corpus-wide
-    distribution — the BATCH twin of the streaming drift gate, run
-    through the SAME streaming.drift_from_windowed code the sink uses
-    (windowed_histogram's width_bucket path is stream≡batch pinned;
-    this value-oracles the PSI half). TZ-free epoch-day windows;
-    buckets from EXACT integer cents (round(value*100) // 5000) so a
-    double sitting one ulp off a boundary cannot flip buckets across
-    engines — same under/overflow convention as width_bucket."""
-    from datatest_spark.streaming.windowed import drift_from_windowed
-
-    e = _t(spark, sf_dir, "events")
-    ms = F.timestamp_diff(
-        "MILLISECOND",
-        F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
-        F.col("ts"),
-    )
-    day = F.floor(ms / F.lit(86_400_000)).cast("long")
-    cents = F.round(F.col("value").cast("double") * F.lit(100.0)).cast("long")
-    bucket = (
-        F.when(cents < 0, F.lit(0))
-        .when(cents >= 50_000, F.lit(11))
-        .otherwise(F.floor(cents / F.lit(5_000)).cast("int") + 1)
-    )
-    base = e.where(F.col("value").isNotNull()).select(
-        day.alias("window_start"),
-        (day + 1).alias("window_end"),
-        F.coalesce(F.col("event_type").cast("string"), F.lit("__null__"))
-        .alias("group"),
-        bucket.alias("bucket"),
-    )
-    hist = base.groupBy(
-        "window_start", "window_end", "group", "bucket"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    ref = (
-        base.groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("double").alias("q"))
-    )
-    out = drift_from_windowed(hist, ref, nbins=10, threshold=0.2)
-    return out.select(
-        F.col("window_start").alias("day"),
-        F.col("group").alias("event_type"),
-        "n_rows",
-        "psi",
-        "status",
-    )
 
 
 def q_association(spark, sf_dir):
@@ -2689,76 +2504,6 @@ def q_split_leakage(spark, sf_dir):
     )
 
 
-def q_k_anonymity(spark, sf_dir):
-    """Privacy scorecard (operators/privacy.k_anonymity_profile): the
-    dataset's achieved k-anonymity and l-diversity over the
-    (nation, market-segment) quasi-identifier pair with an
-    account-balance band as the sensitive attribute — one
-    map-side-combinable groupBy plus a scalar pass over |classes|
-    rows, the audit a user-data ingest runs before the corpus ships."""
-    from datatest_spark.operators import privacy
-
-    c = _t(spark, sf_dir, "customer").withColumn(
-        "bal_band",
-        F.when(F.col("c_acctbal") < 0, "neg")
-        .when(F.col("c_acctbal") < 5000, "low")
-        .otherwise("high"),
-    )
-    return privacy.k_anonymity_profile(
-        c, ["c_nationkey", "c_mktsegment"], k=12,
-        sensitive_col="bal_band", l=3,
-    )
-
-
-def q_k_anonymity_classes(spark, sf_dir):
-    """Violating equivalence classes (operators/privacy.
-    k_anonymity_violations): the difference-row surface of the privacy
-    audit — every (nation, segment) class smaller than k or with fewer
-    than l distinct balance bands, the rows a validation suite asserts
-    empty or wraps in accepted.count tolerances."""
-    from datatest_spark.operators import privacy
-
-    c = _t(spark, sf_dir, "customer").withColumn(
-        "bal_band",
-        F.when(F.col("c_acctbal") < 0, "neg")
-        .when(F.col("c_acctbal") < 5000, "low")
-        .otherwise("high"),
-    )
-    return privacy.k_anonymity_violations(
-        c, ["c_nationkey", "c_mktsegment"], k=12,
-        sensitive_col="bal_band", l=3,
-    )
-
-
-def q_kmv_error(spark, sf_dir):
-    """KMV sketch-vs-truth audit (operators/sketch.kmv_error_audit):
-    per-event-type distinct-user estimates from the md5 bottom-64
-    sketch next to the exact countDistinct, with signed relative error
-    — the certification run for the k you deploy at 10^12 scale, where
-    only the sketch is affordable. The 60-bit hash domain makes the
-    whole sketch (not just the estimate) DuckDB-reproducible."""
-    from datatest_spark.operators import sketch
-
-    e = _t(spark, sf_dir, "events")
-    return sketch.kmv_error_audit(e, "user_id", "event_type", k=64)
-
-
-def q_kmv_overlap(spark, sf_dir):
-    """Cross-source vocabulary overlap from merged KMV signatures
-    (operators/sketch.kmv_overlap_matrix): bottom-128 coordinated
-    sample of each source's distinct words, pairwise Jaccard from the
-    bottom-k of each union — the mirrors-and-scrapes lens with ZERO
-    corpus-side pair join (the pair stage is |sources|² rows of
-    128-long arrays)."""
-    from datatest_spark.operators import sketch
-
-    d = _t(spark, sf_dir, "documents")
-    w = d.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("word")
-    )
-    return sketch.kmv_overlap_matrix(w, "word", "source", k=128)
-
-
 def q_token_burstiness(spark, sf_dir):
     """Church–Gale burstiness top-50 (operators/text.token_burstiness):
     tokens whose occurrences concentrate in few docs far beyond
@@ -2843,19 +2588,6 @@ def q_dup_label_conflict(spark, sf_dir):
     )
 
 
-def q_log2_quantiles(spark, sf_dir):
-    """Mergeable quantile bounds (operators/sketch.log2_quantiles):
-    per-source p50/p90/p99 upper bounds from the power-of-two
-    histogram sketch — ≤64 exact counters per group, bin = base-2
-    digit count (exact integer arithmetic, no log-ulp hazard), a
-    certified ≤2× envelope the context-length monitor reads at 10^12
-    scale where only mergeable state is affordable."""
-    from datatest_spark.operators import sketch
-
-    d = _t(spark, sf_dir, "documents")
-    return sketch.log2_quantiles(d, "n_chars", "source", qs=(0.5, 0.9, 0.99))
-
-
 def q_lang_agreement(spark, sf_dir):
     """Chance-corrected annotation agreement (operators/stats.
     cohen_kappa): Cohen's κ between the declared lang column and the
@@ -2895,19 +2627,6 @@ def q_ess_audit(spark, sf_dir):
     return ess_audit(d, "n_chars", "source")
 
 
-def q_km_survival(spark, sf_dir):
-    """Kaplan–Meier user-lifetime curve with right-censoring
-    (operators/temporal.km_survival) over events: survival Π(1 − d/n)
-    at each observed lifetime, censoring still-active users instead of
-    counting them churned. One groupBy(user) exchange; the curve and
-    its left-fold product run on |lifetimes| rows (recursive-CTE
-    running product in the oracle)."""
-    from datatest_spark.operators.temporal import km_survival
-
-    e = _t(spark, sf_dir, "events")
-    return km_survival(e, "user_id", "ts", censor_days=7)
-
-
 def q_candidate_keys(spark, sf_dir):
     """Candidate-key mining (operators/stats.candidate_keys): per
     column set of the events profile list (singletons + pairs),
@@ -2920,27 +2639,6 @@ def q_candidate_keys(spark, sf_dir):
     return candidate_keys(
         e, ["event_id", "user_id", "event_type"], max_arity=2
     )
-
-
-def q_kmv_snapshot_delta(spark, sf_dir):
-    """Cross-snapshot content growth from persisted KMV signatures
-    (operators/sketch.kmv_snapshot_delta): the old snapshot (docs with
-    doc_id % 3 != 0) vs the full current corpus, per-source estimated
-    added distinct words — zero corpus rescan, pure signature math;
-    the oracle rebuilds BOTH sketches and gets bit-identical
-    estimates (the whole-state-reproducible payoff)."""
-    from datatest_spark.operators import sketch
-
-    d = _t(spark, sf_dir, "documents")
-    w = d.select(
-        "doc_id", "source",
-        F.explode(F.split(F.col("text"), " ")).alias("word"),
-    )
-    old = sketch.kmv_signatures(
-        w.where(F.col("doc_id") % 3 != 0), "word", "source", k=64
-    )
-    new = sketch.kmv_signatures(w, "word", "source", k=64)
-    return sketch.kmv_snapshot_delta(old, new, k=64)
 
 
 def q_partition_fingerprints(spark, sf_dir):
@@ -3090,13 +2788,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #   shard_manifest / vocab_overlap / retention_cohorts /
 #   fd_violations / benford_digits / null_pattern /
 #   pmi_collocations / heavy_hitters / bootstrap_ci / association /
-#   windowed_drift / position_entropy / oov_profile / mwu_drift /
+#   position_entropy / oov_profile / mwu_drift /
 #   ngram_novelty / sample_rate_audit / volume_anomalies
 #                        — session-3+ operators, each value-oracled and
 #                          pinned by dedicated pytest tests; the window
 #                          was already full of never-driver-checked
 #                          round-5 ops when they landed
-#   k_anonymity / k_anonymity_classes / kmv_error / kmv_overlap /
 #   token_burstiness / lexical_types
 #                        — session-10 operators, same contract
 #                          (mirror-sweep value oracle + pytest pins in
@@ -3211,22 +2908,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_recall": q_ann_recall,
         "percentile_rank": q_percentile_rank,
         "freq_spectrum": q_freq_spectrum,
-        "funnel_conversion": q_funnel_conversion,
-        "event_cadence": q_event_cadence,
         # --- group 3c: round-5 session-7 operators (same overflow
         # contract: mirror-sweep value oracle + pytest pins in
         # test_pipeline.py::TestSession7Ops) ---
         "jaccard_sweep": q_jaccard_sweep,
         "chain_collapse": q_chain_collapse,
         "hubness": q_hubness,
-        "event_transitions": q_event_transitions,
         "dup_embedding_check": q_dup_embedding_check,
         # --- group 3d: round-5 session-8 operators (same overflow
         # contract: mirror-sweep value oracle + pytest pins in
         # test_pipeline.py::TestSession8Ops) ---
         "embedding_covariance": q_embedding_covariance,
-        "audience_overlap": q_audience_overlap,
-        "path_trigrams": q_path_trigrams,
         "series_autocorr": q_series_autocorr,
         "schema_drift": q_schema_drift,
         "band_migration": q_band_migration,
@@ -3245,7 +2937,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsh_candidate_pairs": q_lsh_candidate_pairs,
         "dedup_cluster_labels": q_dedup_cluster_labels,
         "embedding_dedup_survivors": q_embedding_dedup_survivors,
-        "asof_enrich": q_asof_enrich,
         "ivf_md5_topk": q_ivf_md5_topk,
         "simhash_md5_signatures": q_simhash_md5_signatures,
         # --- group 4: long-green veterans past the 50-query window ---
@@ -3259,7 +2950,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "uniqueness_surplus": q_uniqueness_surplus,
         "jaccard_pairs": q_jaccard_pairs,
         # (mixture_sample / pack_sequences / stratified_sample /
-        # decontam_survivors / contamination_hits / range_join_windows
+        # decontam_survivors / contamination_hits
         # rotated out in round 5 to admit the paragraph-dedup family,
         # dsir_weights, snapshot_delta and temperature_mixture: each is
         # a 2x-driver-green veteran, still swept by check_oracles.py)
@@ -3271,7 +2962,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_survivors": q_bloom_survivors,
         "source_signatures": q_source_signatures,
         "lang_mix": q_lang_mix,
-        "range_join_windows": q_range_join_windows,
         "exact_dup_groups": q_exact_dup_groups,
         "minhash_signatures": q_minhash_signatures,
         "cosine_threshold_pairs": q_cosine_threshold_pairs,
@@ -3307,7 +2997,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "heavy_hitters": q_heavy_hitters,
         "bootstrap_ci": q_bootstrap_ci,
         "association": q_association,
-        "windowed_drift": q_windowed_drift,
         "position_entropy": q_position_entropy,
         "oov_profile": q_oov_profile,
         "mwu_drift": q_mwu_drift,
@@ -3320,24 +3009,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_revenue": q_rollup_revenue,
         "simhash_pairs": q_simhash_pairs,
         "ivf_ann_topk": q_ivf_ann_topk,
-        "multimodal_features": q_multimodal_features,
-        "k_anonymity": q_k_anonymity,
-        "k_anonymity_classes": q_k_anonymity_classes,
-        "kmv_error": q_kmv_error,
-        "kmv_overlap": q_kmv_overlap,
         "token_burstiness": q_token_burstiness,
         "lexical_types": q_lexical_types,
         "split_balance": q_split_balance,
         "epoch_mixture": q_epoch_mixture,
         "dup_label_conflict": q_dup_label_conflict,
-        "log2_quantiles": q_log2_quantiles,
         "lang_agreement": q_lang_agreement,
         "chao1_richness": q_chao1_richness,
         "ess_audit": q_ess_audit,
-        "km_survival": q_km_survival,
         "fd_discovery": q_fd_discovery,
         "consolidate_rare": q_consolidate_rare,
-        "kmv_snapshot_delta": q_kmv_snapshot_delta,
         "partition_fingerprints": q_partition_fingerprints,
         "fingerprint_diff": q_fingerprint_diff,
         "candidate_keys": q_candidate_keys,
@@ -3497,7 +3178,6 @@ ROUND((
      / GREATEST(LENGTH(text), 1))
 ) / 2.0, 4)
 """
-
 
 
 def _lang_mix_oracle_sql():
@@ -3975,7 +3655,8 @@ def oracle_sql() -> dict[str, str]:
                     WHERE cum_tokens > 0 AND cum_vocab > 0
                 )
             )
-            SELECT bucket, cum_tokens, cum_vocab,
+            SELECT bucket, CAST(cum_tokens AS BIGINT) AS cum_tokens,
+                   CAST(cum_vocab AS BIGINT) AS cum_vocab,
                    CASE WHEN k * sxx - sx * sx > 0 THEN
                        ROUND(CAST(k * sxy - sx * sy AS DOUBLE)
                              / CAST(k * sxx - sx * sx AS DOUBLE), 4)
@@ -4167,87 +3848,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(r) AS BIGINT) AS token_mass
             FROM B GROUP BY 1, 2
         """,
-        "funnel_conversion": """
-            WITH S0 AS (
-                SELECT user_id, MIN(ts) AS t FROM events
-                WHERE event_type = 'view' GROUP BY 1
-            ),
-            S1 AS (
-                SELECT e.user_id, MIN(e.ts) AS t
-                FROM events e JOIN S0 ON e.user_id = S0.user_id
-                WHERE e.event_type = 'click' AND e.ts > S0.t GROUP BY 1
-            ),
-            S2 AS (
-                SELECT e.user_id, MIN(e.ts) AS t
-                FROM events e JOIN S1 ON e.user_id = S1.user_id
-                WHERE e.event_type = 'purchase' AND e.ts > S1.t GROUP BY 1
-            ),
-            C AS (
-                SELECT (SELECT COUNT(*) FROM S0) AS c0,
-                       (SELECT COUNT(*) FROM S1) AS c1,
-                       (SELECT COUNT(*) FROM S2) AS c2
-            )
-            SELECT CAST(1 AS INT) AS step_idx, 'view' AS step,
-                   CAST(c0 AS BIGINT) AS n_users,
-                   ROUND(CASE WHEN c0 > 0 THEN c0 * 1.0 / c0 END, 6)
-                       AS rate_vs_first,
-                   CAST(NULL AS DOUBLE) AS rate_vs_prev
-            FROM C
-            UNION ALL
-            SELECT CAST(2 AS INT), 'click', CAST(c1 AS BIGINT),
-                   ROUND(CASE WHEN c0 > 0 THEN c1 * 1.0 / c0 END, 6),
-                   ROUND(CASE WHEN c0 > 0 THEN c1 * 1.0 / c0 END, 6)
-            FROM C
-            UNION ALL
-            SELECT CAST(3 AS INT), 'purchase', CAST(c2 AS BIGINT),
-                   ROUND(CASE WHEN c0 > 0 THEN c2 * 1.0 / c0 END, 6),
-                   ROUND(CASE WHEN c1 > 0 THEN c2 * 1.0 / c1 END, 6)
-            FROM C
-        """,
-        "event_cadence": """
-            WITH O AS (
-                SELECT user_id, ts,
-                       LAG(ts) OVER (
-                           PARTITION BY user_id ORDER BY ts
-                       ) AS pts
-                FROM events WHERE ts IS NOT NULL
-            ),
-            G AS (
-                -- microseconds: the unit where elapsed time and
-                -- boundary-crossing counts coincide on both engines
-                SELECT user_id, date_diff('microsecond', pts, ts) AS gap
-                FROM O WHERE pts IS NOT NULL
-            ),
-            A AS (
-                SELECT user_id,
-                       CAST(COUNT(*) AS BIGINT) AS n_intervals,
-                       CAST(SUM(gap) AS HUGEINT) AS s,
-                       CAST(SUM(CAST(gap AS HUGEINT) * gap) AS HUGEINT)
-                           AS ss,
-                       SUM(CASE WHEN gap = 0 THEN 1 ELSE 0 END) AS z
-                FROM G GROUP BY 1
-            )
-            SELECT user_id, n_intervals,
-                   ROUND(CAST(s AS DOUBLE) / CAST(n_intervals AS DOUBLE)
-                         / 1000000.0, 4) AS mean_gap_s,
-                   CASE WHEN n_intervals >= 2 THEN
-                       ROUND(SQRT(CAST(n_intervals * ss - s * s AS DOUBLE)
-                             / (CAST(n_intervals AS DOUBLE)
-                                * (CAST(n_intervals AS DOUBLE) - 1.0)))
-                             / 1000000.0, 4)
-                   END AS std_gap_s,
-                   CASE WHEN n_intervals >= 2
-                             AND CAST(s AS DOUBLE)
-                                 / CAST(n_intervals AS DOUBLE) > 0 THEN
-                       ROUND(SQRT(CAST(n_intervals * ss - s * s AS DOUBLE)
-                             / (CAST(n_intervals AS DOUBLE)
-                                * (CAST(n_intervals AS DOUBLE) - 1.0)))
-                             / (CAST(s AS DOUBLE)
-                                / CAST(n_intervals AS DOUBLE)), 4)
-                   END AS cv,
-                   ROUND(z * 1.0 / n_intervals, 4) AS zero_gap_frac
-            FROM A WHERE n_intervals >= 2
-        """,
         "jaccard_sweep": """
             WITH {cte},
             SC AS (
@@ -4340,25 +3940,6 @@ def oracle_sql() -> dict[str, str]:
                        AS transitivity
             FROM CL
         """.format(cte=_SHINGLE_CTE),
-        "event_transitions": """
-            WITH O AS (
-                SELECT event_type,
-                       LAG(event_type) OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id
-                       ) AS prev
-                FROM events WHERE ts IS NOT NULL
-            ),
-            C AS (
-                SELECT prev AS prev_type, event_type AS next_type,
-                       COUNT(*) AS n
-                FROM O WHERE prev IS NOT NULL GROUP BY 1, 2
-            ),
-            T AS (SELECT prev_type, SUM(n) AS tot FROM C GROUP BY 1)
-            SELECT c.prev_type, c.next_type, CAST(c.n AS BIGINT) AS n,
-                   ROUND(c.n * 1.0 / t.tot, 6) AS prob
-            FROM C c JOIN T t ON t.prev_type = c.prev_type
-            WHERE c.n >= 1
-        """,
         "dup_embedding_check": """
             WITH N AS (
                 SELECT doc_id,
@@ -4583,69 +4164,6 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(CASE WHEN np >= 2 AND dx > 0 AND dy > 0
                               THEN num / SQRT(dx * dy) END, 6) AS autocorr
             FROM M
-        """,
-        "audience_overlap": """
-            WITH P AS (
-                SELECT DISTINCT user_id AS u,
-                       CAST(event_type AS VARCHAR) AS t
-                FROM events
-                WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-            ),
-            A AS (SELECT t, COUNT(*) AS n FROM P GROUP BY 1),
-            NU AS (SELECT COUNT(DISTINCT u) AS n_users FROM P),
-            B AS (
-                SELECT a.t AS ta, b.t AS tb, COUNT(*) AS nb
-                FROM P a JOIN P b ON a.u = b.u AND a.t < b.t
-                GROUP BY 1, 2
-            )
-            SELECT a1.t AS type_a, a2.t AS type_b,
-                   CAST(a1.n AS BIGINT) AS users_a,
-                   CAST(a2.n AS BIGINT) AS users_b,
-                   CAST(COALESCE(B.nb, 0) AS BIGINT) AS users_both,
-                   ROUND(COALESCE(B.nb, 0) * 1.0
-                         / (a1.n + a2.n - COALESCE(B.nb, 0)), 6) AS jaccard,
-                   ROUND(COALESCE(B.nb, 0) * 1.0 / a1.n / a2.n
-                         * nu.n_users, 6) AS lift
-            FROM A a1
-            JOIN A a2 ON a1.t < a2.t
-            LEFT JOIN B ON B.ta = a1.t AND B.tb = a2.t
-            CROSS JOIN NU nu
-        """,
-        "path_trigrams": """
-            WITH S AS (
-                SELECT COALESCE(CAST(event_type AS VARCHAR), '__null__')
-                           AS t3,
-                       LAG(COALESCE(CAST(event_type AS VARCHAR),
-                           '__null__'), 1) OVER w AS t2,
-                       LAG(COALESCE(CAST(event_type AS VARCHAR),
-                           '__null__'), 2) OVER w AS t1
-                FROM events WHERE ts IS NOT NULL
-                WINDOW w AS (
-                    PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                )
-            ),
-            TRI AS (
-                SELECT t1, t2, t3, COUNT(*) AS n FROM S
-                WHERE t1 IS NOT NULL GROUP BY 1, 2, 3
-            ),
-            FO AS (
-                SELECT t2, t3, COUNT(*) AS n2 FROM S
-                WHERE t2 IS NOT NULL GROUP BY 1, 2
-            ),
-            FOT AS (SELECT t2, SUM(n2) AS n2_tot FROM FO GROUP BY 1),
-            PRE AS (
-                SELECT t1, t2, t3, n,
-                       SUM(n) OVER (PARTITION BY t1, t2) AS pfx
-                FROM TRI
-            )
-            SELECT p.t1, p.t2, p.t3, CAST(p.n AS BIGINT) AS n,
-                   ROUND(p.pfx * 1.0 * f.n2 / ft.n2_tot, 4) AS expected_n,
-                   ROUND(p.n * 1.0
-                         / (p.pfx * 1.0 * f.n2 / ft.n2_tot), 4) AS lift
-            FROM PRE p
-            JOIN FO f ON f.t2 = p.t2 AND f.t3 = p.t3
-            JOIN FOT ft ON ft.t2 = p.t2
-            WHERE p.n >= 2
         """,
         "embedding_covariance": """
             WITH V AS (
@@ -5275,58 +4793,6 @@ def oracle_sql() -> dict[str, str]:
                        AS top_frac
             FROM R WHERE rk = 1
         """,
-        "windowed_drift": """
-            WITH B AS (
-                SELECT CAST(FLOOR(epoch_ms(ts) / 86400000) AS BIGINT)
-                           AS day,
-                       COALESCE(CAST(event_type AS VARCHAR), '__null__')
-                           AS grp,
-                       CASE WHEN CAST(ROUND(value * 100) AS BIGINT) < 0
-                                THEN 0
-                            WHEN CAST(ROUND(value * 100) AS BIGINT) >= 50000
-                                THEN 11
-                            ELSE CAST(FLOOR(CAST(ROUND(value * 100)
-                                     AS BIGINT) / 5000.0) AS INT) + 1
-                       END AS bucket
-                FROM events WHERE value IS NOT NULL
-            ),
-            H AS (
-                SELECT day, grp, bucket, COUNT(*) AS n
-                FROM B GROUP BY day, grp, bucket
-            ),
-            REF AS (
-                SELECT bucket, CAST(COUNT(*) AS DOUBLE) AS q
-                FROM B GROUP BY bucket
-            ),
-            REFN AS (
-                SELECT bucket, q / (SELECT SUM(q) FROM REF) AS qn FROM REF
-            ),
-            SLICES AS (SELECT DISTINCT day, grp FROM H),
-            GRID AS (
-                SELECT s.day, s.grp, CAST(g.b AS INT) AS bucket
-                FROM SLICES s, UNNEST(range(0, 12)) AS g(b)
-            ),
-            DENSE AS (
-                SELECT g.day, g.grp, g.bucket, COALESCE(h.n, 0) AS n
-                FROM GRID g LEFT JOIN H h
-                  ON h.day = g.day AND h.grp = g.grp AND h.bucket = g.bucket
-            ),
-            PQ AS (
-                SELECT day, grp, n,
-                       GREATEST(COALESCE(
-                           CAST(n AS DOUBLE)
-                           / SUM(n) OVER (PARTITION BY day, grp), 0.0),
-                           1e-9) AS pe,
-                       GREATEST(COALESCE(r.qn, 0.0), 1e-9) AS qe
-                FROM DENSE LEFT JOIN REFN r USING (bucket)
-            )
-            SELECT day, grp AS event_type,
-                   CAST(SUM(n) AS BIGINT) AS n_rows,
-                   ROUND(SUM((pe - qe) * LN(pe / qe)), 4) AS psi,
-                   CASE WHEN ROUND(SUM((pe - qe) * LN(pe / qe)), 4) > 0.2
-                        THEN 'drift' ELSE 'ok' END AS status
-            FROM PQ GROUP BY day, grp
-        """,
         "association": """
             WITH CELLS AS (
                 SELECT COALESCE(CAST(source AS VARCHAR), '__null__') AS a,
@@ -5526,9 +4992,9 @@ def oracle_sql() -> dict[str, str]:
                        COUNT(*) OVER (PARTITION BY lang) AS n_distinct_dep
                 FROM P
             )
-            SELECT lang, n_rows, n_distinct_dep,
+            SELECT lang, CAST(n_rows AS BIGINT) AS n_rows, n_distinct_dep,
                    source AS majority_dep,
-                   n_rows - n AS n_violations
+                   CAST(n_rows - n AS BIGINT) AS n_violations
             FROM R WHERE rk = 1
         """,
         "benford_digits": """
@@ -5737,33 +5203,6 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents
             ) WHERE rk <= 7
         """,
-        "asof_enrich": """
-            WITH L AS (
-                SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'purchase'
-            ),
-            R AS (
-                SELECT user_id, ts, MAX(event_id) AS event_id_r
-                FROM events WHERE event_type = 'signup'
-                GROUP BY user_id, ts
-            )
-            SELECT l.event_id, l.user_id, r.event_id_r,
-                   CAST(date_diff('microsecond', r.ts, l.ts) AS BIGINT)
-                       AS usecs_since_signup
-            FROM L l ASOF LEFT JOIN R r
-                 ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        "range_join_windows": """
-            SELECT l.event_id, l.user_id, r.event_id AS signup_id,
-                   CAST(date_diff('microsecond', r.ts, l.ts) AS BIGINT)
-                       AS usecs_after_signup
-            FROM (SELECT event_id, user_id, ts FROM events
-                  WHERE event_type = 'purchase') l
-            JOIN (SELECT event_id, user_id, ts FROM events
-                  WHERE event_type = 'signup') r
-              ON l.user_id = r.user_id
-             AND l.ts >= r.ts AND l.ts <= r.ts + INTERVAL 24 HOUR
-        """,
         "contamination_hits": """
             WITH WB AS (
                 SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -5932,7 +5371,8 @@ def oracle_sql() -> dict[str, str]:
                        SUM(CASE WHEN md = d THEN 1 ELSE 0 END) AS n_hits
                 FROM SH GROUP BY doc_id
             )
-            SELECT n.doc_id, n.n_shingles, h.n_hits
+            SELECT n.doc_id, n.n_shingles,
+                   CAST(h.n_hits AS BIGINT) AS n_hits
             FROM NS n JOIN HITS h ON n.doc_id = h.doc_id
             WHERE h.n_hits >= 1
         """,
@@ -8280,149 +7720,6 @@ def oracle_sql() -> dict[str, str]:
                 AND NOT isnan(dev) AND dev BETWEEN -500.0 AND 0.0,
                 FALSE)
         """,
-        "k_anonymity": """
-            WITH C AS (
-                SELECT concat_ws(chr(31),
-                           COALESCE(CAST(c_nationkey AS VARCHAR),
-                                    chr(0) || 'null' || chr(0)),
-                           COALESCE(c_mktsegment,
-                                    chr(0) || 'null' || chr(0))) AS qi_key,
-                       CASE WHEN c_acctbal < 0 THEN 'neg'
-                            WHEN c_acctbal < 5000 THEN 'low'
-                            ELSE 'high' END AS bal_band
-                FROM customer
-            ),
-            G AS (
-                SELECT qi_key, CAST(COUNT(*) AS BIGINT) AS class_size,
-                       CAST(COUNT(DISTINCT COALESCE(bal_band,
-                           chr(0) || 'null' || chr(0))) AS BIGINT)
-                           AS distinct_sensitive
-                FROM C GROUP BY 1
-            )
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_classes,
-                   CAST(SUM(class_size) AS BIGINT) AS n_rows,
-                   MIN(class_size) AS k_anonymity,
-                   CAST(SUM(CASE WHEN class_size < 12 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS k_violating_classes,
-                   CAST(SUM(CASE WHEN class_size < 12 THEN class_size
-                            ELSE 0 END) AS BIGINT) AS rows_at_risk,
-                   ROUND(CAST(SUM(CASE WHEN class_size < 12 THEN class_size
-                                  ELSE 0 END) AS DOUBLE)
-                         / CAST(SUM(class_size) AS DOUBLE), 6)
-                       AS at_risk_share,
-                   MIN(distinct_sensitive) AS l_diversity,
-                   CAST(SUM(CASE WHEN distinct_sensitive < 3 THEN 1
-                            ELSE 0 END) AS BIGINT) AS l_violating_classes
-            FROM G
-        """,
-        "k_anonymity_classes": """
-            WITH C AS (
-                SELECT concat_ws(chr(31),
-                           COALESCE(CAST(c_nationkey AS VARCHAR),
-                                    chr(0) || 'null' || chr(0)),
-                           COALESCE(c_mktsegment,
-                                    chr(0) || 'null' || chr(0))) AS qi_key,
-                       CASE WHEN c_acctbal < 0 THEN 'neg'
-                            WHEN c_acctbal < 5000 THEN 'low'
-                            ELSE 'high' END AS bal_band
-                FROM customer
-            ),
-            G AS (
-                SELECT qi_key, CAST(COUNT(*) AS BIGINT) AS class_size,
-                       CAST(COUNT(DISTINCT COALESCE(bal_band,
-                           chr(0) || 'null' || chr(0))) AS BIGINT)
-                           AS distinct_sensitive
-                FROM C GROUP BY 1
-            )
-            SELECT qi_key, class_size, distinct_sensitive,
-                   class_size < 12 AS k_violation,
-                   distinct_sensitive < 3 AS l_violation
-            FROM G
-            WHERE class_size < 12 OR distinct_sensitive < 3
-        """,
-        "kmv_error": """
-            -- KMV bottom-64: u_k exact BIGINT; 63*2^60 is an exact
-            -- power-of-two-scaled double, so the estimate is ONE
-            -- correctly-rounded division on both engines
-            WITH H AS (
-                SELECT DISTINCT COALESCE(event_type, '__null__') AS grp,
-                       CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-                                           1, 15) AS BIGINT) AS u
-                FROM events WHERE user_id IS NOT NULL
-            ),
-            R AS (
-                SELECT grp, u,
-                       ROW_NUMBER() OVER (PARTITION BY grp
-                                          ORDER BY u ASC) AS rk
-                FROM H
-            ),
-            B AS (
-                SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_kept,
-                       MAX(u) AS uk
-                FROM R WHERE rk <= 64 GROUP BY grp
-            ),
-            E AS (
-                SELECT COALESCE(event_type, '__null__') AS grp,
-                       CAST(COUNT(DISTINCT user_id) AS BIGINT)
-                           AS exact_distinct
-                FROM events WHERE user_id IS NOT NULL GROUP BY 1
-            ),
-            J AS (
-                SELECT E.grp, exact_distinct, n_kept,
-                       n_kept < 64 AS is_exact,
-                       CASE WHEN n_kept < 64 THEN CAST(n_kept AS DOUBLE)
-                            ELSE ROUND(63.0 * 1152921504606846976.0
-                                       / CAST(uk AS DOUBLE), 4)
-                       END AS est_distinct
-                FROM E JOIN B ON E.grp = B.grp
-            )
-            SELECT grp AS "group", exact_distinct, n_kept, is_exact,
-                   est_distinct,
-                   ROUND((est_distinct - CAST(exact_distinct AS DOUBLE))
-                         / CAST(exact_distinct AS DOUBLE), 6) AS rel_error
-            FROM J
-        """,
-        "kmv_overlap": """
-            WITH W AS (
-                SELECT COALESCE(source, '__null__') AS grp,
-                       UNNEST(string_split(text, ' ')) AS word
-                FROM documents
-            ),
-            H AS (
-                SELECT DISTINCT grp,
-                       CAST('0x' || substr(md5(word), 1, 15) AS BIGINT) AS u
-                FROM W WHERE word IS NOT NULL
-            ),
-            R AS (
-                SELECT grp, u,
-                       ROW_NUMBER() OVER (PARTITION BY grp
-                                          ORDER BY u ASC) AS rk
-                FROM H
-            ),
-            S AS (
-                SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_kept,
-                       list(u ORDER BY u ASC) AS sig
-                FROM R WHERE rk <= 128 GROUP BY grp
-            ),
-            P AS (
-                SELECT a.grp AS group_a, b.grp AS group_b,
-                       a.n_kept AS n_a, b.n_kept AS n_b,
-                       (list_sort(list_distinct(
-                           list_concat(a.sig, b.sig))))[1:128] AS m,
-                       a.sig AS sa, b.sig AS sb
-                FROM S a JOIN S b ON a.grp < b.grp
-            )
-            SELECT group_a, group_b, n_a, n_b,
-                   CAST(len(list_intersect(list_intersect(m, sa), sb))
-                        AS BIGINT) AS inter,
-                   CAST(len(m) AS BIGINT) AS depth,
-                   CASE WHEN len(m) > 0 THEN
-                       ROUND(CAST(len(list_intersect(
-                                 list_intersect(m, sa), sb)) AS DOUBLE)
-                             / CAST(len(m) AS DOUBLE), 6)
-                   END AS jaccard_est
-            FROM P
-        """,
         "token_burstiness": """
             -- df/cf/sumsq exact BIGINTs; the ratios are a fixed IEEE op
             -- sequence; LIMIT selection is deterministic (rounded
@@ -8572,41 +7869,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT * FROM G WHERE n_members > 1 AND n_labels > 1
         """,
-        "log2_quantiles": """
-            -- bin = base-2 digit count − 1: exact integer floor(log2),
-            -- no floating log on either engine
-            WITH H AS (
-                SELECT COALESCE(source, '__null__') AS grp,
-                       CASE WHEN CAST(n_chars AS BIGINT) = 0 THEN -1
-                            ELSE CAST(length(bin(CAST(n_chars AS BIGINT)))
-                                      - 1 AS INT) END AS bin,
-                       CAST(COUNT(*) AS BIGINT) AS n
-                FROM documents
-                WHERE n_chars IS NOT NULL AND n_chars >= 0
-                GROUP BY 1, 2
-            ),
-            C AS (
-                SELECT grp, bin,
-                       CAST(SUM(n) OVER (PARTITION BY grp ORDER BY bin ASC
-                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-                       CAST(SUM(n) OVER (PARTITION BY grp) AS BIGINT)
-                           AS n_g
-                FROM H
-            ),
-            Q(q) AS (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)),
-                            (CAST(0.99 AS DOUBLE))),
-            X AS (
-                SELECT grp, q, MAX(n_g) AS n, MIN(bin) AS bin
-                FROM C CROSS JOIN Q
-                WHERE CAST(cum AS DOUBLE) >= q * CAST(n_g AS DOUBLE)
-                GROUP BY 1, 2
-            )
-            SELECT grp AS "group", q, n, bin,
-                   CASE WHEN bin < 0 THEN CAST(0 AS BIGINT)
-                        ELSE CAST((CAST(1 AS BIGINT) << (bin + 1)) - 1
-                                  AS BIGINT) END AS est_hi
-            FROM X
-        """,
         "lang_agreement": """
             WITH {cte},
             B AS (
@@ -8699,139 +7961,6 @@ def oracle_sql() -> dict[str, str]:
                              (sw * sw / sw2) / CAST(n AS DOUBLE)
                          END, 6) AS ess_ratio
             FROM G
-        """,
-        "km_survival": """
-            -- survival is a LEFT FOLD in ascending-t order: the
-            -- recursive CTE multiplies factors one at a time, exactly
-            -- like the engine's F.aggregate over the sorted array
-            WITH RECURSIVE U AS (
-                SELECT COALESCE(CAST(user_id AS VARCHAR), '__null__') AS u,
-                       MIN(CAST(ts AS DATE)) AS first_d,
-                       MAX(CAST(ts AS DATE)) AS last_d
-                FROM events WHERE ts IS NOT NULL GROUP BY 1
-            ),
-            H AS (SELECT MAX(last_d) AS h FROM U),
-            P AS (
-                SELECT date_diff('day', first_d, last_d) AS t,
-                       date_diff('day', last_d, h) < 7 AS cens
-                FROM U, H
-            ),
-            C AS (
-                SELECT t,
-                       CAST(SUM(CASE WHEN NOT cens THEN 1 ELSE 0 END)
-                            AS BIGINT) AS d,
-                       CAST(SUM(CASE WHEN cens THEN 1 ELSE 0 END)
-                            AS BIGINT) AS c
-                FROM P GROUP BY 1
-            ),
-            R AS (
-                SELECT t, d, c,
-                       CAST(SUM(d + c) OVER ()
-                            - SUM(d + c) OVER (ORDER BY t ASC
-                                ROWS UNBOUNDED PRECEDING)
-                            + (d + c) AS BIGINT) AS n_at_risk,
-                       ROW_NUMBER() OVER (ORDER BY t ASC) AS i
-                FROM C
-            ),
-            S(i, surv) AS (
-                SELECT i, 1.0 * (1.0 - CAST(d AS DOUBLE)
-                                 / CAST(n_at_risk AS DOUBLE))
-                FROM R WHERE i = 1
-                UNION ALL
-                SELECT R.i, S.surv * (1.0 - CAST(R.d AS DOUBLE)
-                                      / CAST(R.n_at_risk AS DOUBLE))
-                FROM S JOIN R ON R.i = S.i + 1
-            )
-            SELECT R.t, R.n_at_risk, R.d, R.c,
-                   ROUND(S.surv, 6) AS survival
-            FROM R JOIN S ON R.i = S.i
-        """,
-        "kmv_snapshot_delta": """
-            -- both sketches rebuilt from scratch; every estimate is the
-            -- kmv_distinct arithmetic (inner ROUND(...,4) on the
-            -- estimator branch), repeated verbatim where the engine
-            -- reuses the unrounded-case expression
-            WITH W AS (
-                SELECT doc_id, COALESCE(source, '__null__') AS grp,
-                       UNNEST(string_split(text, ' ')) AS word
-                FROM documents
-            ),
-            HO AS (
-                SELECT DISTINCT grp,
-                       CAST('0x' || substr(md5(word), 1, 15) AS BIGINT) AS u
-                FROM W WHERE word IS NOT NULL AND doc_id % 3 <> 0
-            ),
-            RO AS (
-                SELECT grp, u, ROW_NUMBER() OVER (PARTITION BY grp
-                                                  ORDER BY u ASC) AS rk
-                FROM HO
-            ),
-            SO AS (
-                SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_old,
-                       list(u ORDER BY u ASC) AS so
-                FROM RO WHERE rk <= 64 GROUP BY grp
-            ),
-            HN AS (
-                SELECT DISTINCT grp,
-                       CAST('0x' || substr(md5(word), 1, 15) AS BIGINT) AS u
-                FROM W WHERE word IS NOT NULL
-            ),
-            RN AS (
-                SELECT grp, u, ROW_NUMBER() OVER (PARTITION BY grp
-                                                  ORDER BY u ASC) AS rk
-                FROM HN
-            ),
-            SN AS (
-                SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_new,
-                       list(u ORDER BY u ASC) AS sn
-                FROM RN WHERE rk <= 64 GROUP BY grp
-            ),
-            J AS (
-                SELECT COALESCE(SO.grp, SN.grp) AS grp,
-                       COALESCE(n_old, 0) AS n_old,
-                       COALESCE(so, CAST([] AS BIGINT[])) AS so,
-                       COALESCE(n_new, 0) AS n_new,
-                       COALESCE(sn, CAST([] AS BIGINT[])) AS sn
-                FROM SO FULL OUTER JOIN SN ON SO.grp = SN.grp
-            ),
-            M AS (
-                SELECT grp, n_old, so, n_new, sn,
-                       (list_sort(list_distinct(
-                           list_concat(so, sn))))[1:64] AS m
-                FROM J
-            ),
-            E AS (
-                SELECT grp, n_old, n_new, m, so, sn,
-                       CAST(len(m) AS BIGINT) AS n_m,
-                       CASE WHEN n_old < 64 THEN CAST(n_old AS DOUBLE)
-                            ELSE ROUND(63.0 * 1152921504606846976.0
-                                       / CAST(so[64] AS DOUBLE), 4)
-                       END AS eo,
-                       CASE WHEN n_new < 64 THEN CAST(n_new AS DOUBLE)
-                            ELSE ROUND(63.0 * 1152921504606846976.0
-                                       / CAST(sn[64] AS DOUBLE), 4)
-                       END AS en
-                FROM M
-            ),
-            E2 AS (
-                SELECT grp, n_old, n_new, eo, en, n_m, m, so, sn,
-                       CASE WHEN n_m < 64 THEN CAST(n_m AS DOUBLE)
-                            ELSE ROUND(63.0 * 1152921504606846976.0
-                                       / CAST(m[64] AS DOUBLE), 4)
-                       END AS eu
-                FROM E
-            )
-            SELECT grp AS "group", n_old, n_new,
-                   ROUND(eo, 4) AS est_old,
-                   ROUND(en, 4) AS est_new,
-                   ROUND(eu, 4) AS est_union,
-                   ROUND(GREATEST(eu - eo, 0.0), 4) AS est_added,
-                   CASE WHEN n_m > 0 THEN
-                       ROUND(CAST(len(list_intersect(
-                                 list_intersect(m, so), sn)) AS DOUBLE)
-                             / CAST(n_m AS DOUBLE), 6)
-                   END AS jaccard_est
-            FROM E2
         """,
         "partition_fingerprints": """
             SELECT 'source=' || COALESCE(source, '__null__')
@@ -8969,6 +8098,6 @@ def oracle_sql() -> dict[str, str]:
             FROM W LEFT JOIN K ON W.word = K.word
             GROUP BY 1
         """,
-        # simhash_pairs / ivf_ann_topk / multimodal_features: xxhash64- or
+        # simhash_pairs / ivf_ann_topk: xxhash64- or
         # numpy-derived (not expressible in DuckDB) — rows-only checks.
     }

@@ -3,14 +3,10 @@ from . import (
     decontam,
     dedup,
     drift,
-    multimodal,
     packing,
-    privacy,
     rowpred,
-    sketch,
     similarity,
     stats,
-    temporal,
     text,
 )
 
@@ -19,13 +15,9 @@ __all__ = [
     "decontam",
     "dedup",
     "drift",
-    "multimodal",
     "packing",
-    "privacy",
     "rowpred",
-    "sketch",
     "similarity",
     "stats",
-    "temporal",
     "text",
 ]

@@ -215,6 +215,14 @@ class SchemaConformanceCheck(BaseCheck):
         return out
 
 
+def _stat(row, name, check_id):
+    """``row[name]``; a stat the pass never computed raises ValueError."""
+    if name not in row:
+        raise ValueError("%s: stat %r was not computed; available stats: %s" % (
+            check_id, name, ", ".join(sorted(set(row) - {"partition_key"}))))
+    return row[name]
+
+
 class NullRateCheck(BaseCheck):
     """Per-partition null-rate thresholds, derived from the wide agg (A10)."""
 
@@ -232,7 +240,7 @@ class NullRateCheck(BaseCheck):
             if not n:
                 continue
             for col, limit in self.max_null_rate.items():
-                nulls = row.get(col + "__nulls")
+                nulls = _stat(row, col + "__nulls", self.check_id)
                 if nulls is None:
                     continue
                 rate = nulls / n
@@ -267,7 +275,7 @@ class StatIntervalCheck(BaseCheck):
         out = []
         for row in stats_rows:
             for stat, (lo, hi) in self.bounds.items():
-                v = row.get(stat)
+                v = _stat(row, stat, self.check_id)
                 if v is None:
                     continue
                 bad_lo = lo is not None and v < lo

@@ -2419,7 +2419,7 @@ def compression_ratio(
     shuffle, no state); column pruning reaches the scan because the
     kernel input is pre-projected to keep_cols + text. DEFLATE is
     genuinely inexpressible in Spark SQL / any SQL oracle, so this is
-    one of the documented Arrow-kernel operators (multimodal family):
+    one of the documented Arrow-kernel operators:
     the driver gate covers it rows-only, and semantics are pinned by
     construction tests (templated text compresses ~an order of
     magnitude better than high-entropy text; ratio is invariant to

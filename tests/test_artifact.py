@@ -114,7 +114,7 @@ def test_driver_window_holds_every_value_oracled_query_once():
     # same core or a dedicated pytest pin — see the _DRIVER_WINDOW
     # comment in __spark_entry__.py)
     rows_only = {
-        "simhash_pairs", "ivf_ann_topk", "multimodal_features",
+        "simhash_pairs", "ivf_ann_topk",
         # DEFLATE has no SQL oracle — documented Arrow-kernel entry,
         # pinned by tests/test_pipeline.py::TestCompressionRatio
         "compression_profile",
@@ -133,7 +133,7 @@ def test_driver_window_holds_every_value_oracled_query_once():
         "shard_manifest", "vocab_overlap", "retention_cohorts",
         "fd_violations", "benford_digits", "null_pattern",
         "pmi_collocations", "heavy_hitters", "bootstrap_ci",
-        "association", "windowed_drift", "position_entropy",
+        "association", "position_entropy",
         "oov_profile", "mwu_drift", "ngram_novelty", "sample_rate_audit",
         "volume_anomalies",
         # session-5 operators: same contract (value-oracled in the
@@ -147,16 +147,15 @@ def test_driver_window_holds_every_value_oracled_query_once():
         # + pytest pins in test_pipeline.py::TestSession6Ops)
         "minhash_error_audit", "dup_ngram_fraction", "heaps_fit",
         "fuzzy_dup_pairs", "quantile_shift", "ann_recall",
-        "percentile_rank", "freq_spectrum", "funnel_conversion",
-        "event_cadence",
+        "percentile_rank", "freq_spectrum",
         # session-7 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession7Ops)
         "jaccard_sweep", "chain_collapse", "hubness",
-        "event_transitions", "dup_embedding_check",
+        "dup_embedding_check",
         # session-8 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession8Ops)
-        "embedding_covariance", "audience_overlap", "path_trigrams",
-        "series_autocorr", "schema_drift", "band_migration",
+        "embedding_covariance", "series_autocorr", "schema_drift",
+        "band_migration",
         # session-9 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSemanticContamination /
         # TestTrigramBackoff)
@@ -164,11 +163,10 @@ def test_driver_window_holds_every_value_oracled_query_once():
         "surprisal_spans",
         # session-10 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession10Ops/B)
-        "k_anonymity", "k_anonymity_classes", "kmv_error", "kmv_overlap",
         "token_burstiness", "lexical_types", "split_balance",
-        "epoch_mixture", "dup_label_conflict", "log2_quantiles",
-        "lang_agreement", "chao1_richness", "ess_audit", "km_survival",
-        "fd_discovery", "consolidate_rare", "kmv_snapshot_delta",
+        "epoch_mixture", "dup_label_conflict",
+        "lang_agreement", "chao1_richness", "ess_audit",
+        "fd_discovery", "consolidate_rare",
         "partition_fingerprints", "fingerprint_diff", "candidate_keys",
     }
     import glob

@@ -1,11 +1,10 @@
 """Training-data pipeline operators: text analysis, dedup family,
-similarity search, multimodal plumbing (task brief: first-class alongside
-SURVEY §2)."""
+similarity search (task brief: first-class alongside SURVEY §2)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from datatest_spark.operators import dedup, multimodal, similarity, text
+from datatest_spark.operators import dedup, similarity, text
 
 
 @pytest.fixture(scope="module")
@@ -504,101 +503,6 @@ class TestPackingMixture:
             assert abs(kept / total - 0.5) < 0.15, (fn, kept, total)
 
 
-class TestAsofJoin:
-    def _frames(self, spark):
-        left = spark.createDataFrame(
-            [(1, 100, 10), (2, 100, 25), (3, 200, 5)],
-            "event_id long, user_id long, t long",
-        )
-        right = spark.createDataFrame(
-            [(100, 10, "a"), (100, 20, "b"), (300, 1, "z")],
-            "user_id long, t long, tag string",
-        )
-        return left, right
-
-    def test_backward_inclusive_and_no_match(self, spark):
-        from datatest_spark.operators import temporal
-
-        left, right = self._frames(spark)
-        got = {
-            r["event_id"]: (r["tag_r"], r["t_r"])
-            for r in temporal.asof_join(left, right, on="t", by="user_id").collect()
-        }
-        assert got == {
-            1: ("a", 10),   # equal timestamp matches (inclusive)
-            2: ("b", 20),   # latest at-or-before 25
-            3: (None, None),  # user 200 has no right rows
-        }
-
-    def test_null_by_keys_never_match(self, spark):
-        # equi/ASOF semantics: NULL = NULL is not a match. A null-key
-        # left row must come back unenriched even when a null-key right
-        # row precedes it in time (the window partitioning would
-        # otherwise group them together).
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame(
-            [(1, None, 10), (2, 100, 10)],
-            "event_id long, user_id long, t long",
-        )
-        right = spark.createDataFrame(
-            [(None, 5, "ghost"), (100, 5, "real")],
-            "user_id long, t long, tag string",
-        )
-        got = {
-            r["event_id"]: r["tag_r"]
-            for r in temporal.asof_join(left, right, on="t", by="user_id").collect()
-        }
-        assert got == {1: None, 2: "real"}
-
-    def test_forward_direction(self, spark):
-        from datatest_spark.operators import temporal
-
-        left, right = self._frames(spark)
-        got = {
-            r["event_id"]: r["t_r"]
-            for r in temporal.asof_join(
-                left, right, on="t", by="user_id", direction="forward"
-            ).collect()
-        }
-        assert got == {1: 10, 2: None, 3: None}  # nearest at-or-after
-
-    def test_matched_fields_come_from_one_row(self, spark):
-        """Right payload columns with interleaved nulls: the matched
-        (a, b) must both come from the nearest row — a per-column
-        last(ignorenulls) would stitch values from different rows."""
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 1, 30)], "event_id long, k long, t long")
-        right = spark.createDataFrame(
-            [(1, 10, 7, None), (1, 20, None, 8)],
-            "k long, t long, a int, b int",
-        )
-        row = temporal.asof_join(left, right, on="t", by="k").collect()[0]
-        assert (row["a_r"], row["b_r"], row["t_r"]) == (None, 8, 20)
-
-    def test_tiebreak_deterministic(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 1, 10)], "event_id long, k long, t long")
-        right = spark.createDataFrame(
-            [(1, 10, 100, "x"), (1, 10, 200, "y")],
-            "k long, t long, rid long, tag string",
-        )
-        row = temporal.asof_join(
-            left, right, on="t", by="k", tiebreak_col="rid"
-        ).collect()[0]
-        assert (row["rid_r"], row["tag_r"]) == (200, "y")  # largest rid wins
-
-    def test_suffix_collision_raises(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 1, "l")], "k long, t long, tag_r string")
-        right = spark.createDataFrame([(1, 1, "r")], "k long, t long, tag string")
-        with pytest.raises(ValueError, match="collide"):
-            temporal.asof_join(left, right, on="t", by="k")
-
-
 class TestStratifiedSample:
     def test_exact_counts_and_determinism(self, spark, docs):
         from datatest_spark.operators import packing
@@ -628,100 +532,6 @@ class TestStratifiedSample:
             for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()
         }
         assert counts == {"src0": 3, "src1": 5}  # absent groups -> nothing
-
-
-class TestMultimodal:
-    def test_synth_media_deterministic(self, spark):
-        a = multimodal.synth_media(spark, 50).collect()
-        b = multimodal.synth_media(spark, 50).collect()
-        assert sorted(r["media_id"] for r in a) == sorted(r["media_id"] for r in b)
-
-    def test_extract_features_shapes(self, spark):
-        media = multimodal.synth_media(spark, 100)
-        feats = multimodal.extract_features(media, out_dim=16)
-        rows = feats.collect()
-        assert len(rows) == 100
-        assert all(len(r["features"]) == 16 for r in rows)
-        assert all(r["payload_hash"] is not None for r in rows)
-        # deterministic features
-        rows2 = multimodal.extract_features(media, out_dim=16).collect()
-        assert sorted(r["payload_hash"] for r in rows) == sorted(
-            r["payload_hash"] for r in rows2
-        )
-
-    def test_resize_images_plumbing(self, spark):
-        media = multimodal.synth_media(spark, 90)
-        out = multimodal.resize_images(media, 224, 224)
-        rows = out.collect()
-        n_images = media.filter("modality = 'image'").count()
-        assert len(rows) == n_images > 0
-        assert all(r["width"] == 224 and r["height"] == 224 for r in rows)
-        assert all(r["orig_width"] >= 1 for r in rows)
-        # deterministic payload rewrite, distinct from the original
-        again = {r["media_id"]: bytes(r["payload"])
-                 for r in multimodal.resize_images(media, 224, 224).collect()}
-        orig = {r["media_id"]: bytes(r["payload"])
-                for r in media.filter("modality = 'image'").collect()}
-        for r in rows:
-            assert bytes(r["payload"]) == again[r["media_id"]]
-            assert bytes(r["payload"]) != orig[r["media_id"]]
-
-    def test_frame_sample_plan(self, spark):
-        media = multimodal.synth_media(spark, 60)
-        frames = multimodal.frame_sample_plan(media, every_ms=10000)
-        joined = frames.groupBy("media_id").count()
-        vids = media.filter("modality = 'video'").count()
-        assert joined.count() == vids
-
-    def test_stub_raises_on_none(self):
-        with pytest.raises(NotImplementedError):
-            multimodal._decode_image_stub(None, 4)
-
-    def test_sample_frames_null_duration_dropped_not_crashed(self, spark):
-        # null roughly half of ALL rows (including videos — a single
-        # fixed id could land on an image and never reach the kernel)
-        media = multimodal.synth_media(spark, 30).withColumn(
-            "duration_ms",
-            F.when(F.xxhash64("media_id") % 2 == 0, None).otherwise(
-                F.col("duration_ms")
-            ),
-        )
-        # the kernel really sees null ts arrays: some videos are nulled
-        n_null_videos = media.filter(
-            (F.col("modality") == "video") & F.col("duration_ms").isNull()
-        ).count()
-        assert n_null_videos > 0
-        # parity with frame_sample_plan: explode of a null sequence emits
-        # nothing; the kernel must do the same instead of raising
-        got = multimodal.sample_frames(media, every_ms=20000).count()
-        assert got == multimodal.frame_sample_plan(media, every_ms=20000).count()
-        assert got > 0
-
-    def test_sample_frames_kernel(self, spark):
-        media = multimodal.synth_media(spark, 60)
-        frames = multimodal.sample_frames(media, every_ms=10000).collect()
-        plan_n = multimodal.frame_sample_plan(media, every_ms=10000).count()
-        assert len(frames) == plan_n
-        # per-frame payloads are distinct per timestamp and deterministic
-        seen = {}
-        for r in frames:
-            key = (r["media_id"], r["frame_ts_ms"])
-            assert key not in seen
-            seen[key] = r["frame_payload"]
-            assert r["frame_payload"] is not None
-        again = {
-            (r["media_id"], r["frame_ts_ms"]): r["frame_payload"]
-            for r in multimodal.sample_frames(media, every_ms=10000).collect()
-        }
-        assert again == seen
-        per_vid = {}
-        for (mid, _), p in seen.items():
-            per_vid.setdefault(mid, set()).add(bytes(p))
-        # distinct frames within one video (stub varies with ts)
-        assert all(
-            len(v) == sum(1 for k in seen if k[0] == mid)
-            for mid, v in per_vid.items()
-        )
 
 
 class TestDedupClusters:
@@ -2229,39 +2039,6 @@ class TestConcentrationIndices:
 
 
 class TestReviewFixesR3:
-    def test_asof_numeric_tiebreak_not_lexicographic(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 10, "L")],
-                                     "user_id long, ts long, tag string")
-        right = spark.createDataFrame(
-            [(1, 10, 9, "nine"), (1, 10, 100, "hundred")],
-            "user_id long, ts long, pri long, val string",
-        )
-        out = temporal.asof_join(left, right, on="ts", by="user_id",
-                                 tiebreak_col="pri").collect()[0]
-        # '9' > '100' lexicographically; numerically 100 wins
-        assert out["val_r"] == "hundred"
-
-    def test_asof_null_right_timestamp_never_matches(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 5)], "user_id long, ts long")
-        right = spark.createDataFrame([(1, None, "ghost")],
-                                      "user_id long, ts long, val string")
-        out = temporal.asof_join(left, right, on="ts", by="user_id").collect()[0]
-        assert out["val_r"] is None and out["ts_r"] is None
-
-    def test_asof_null_left_timestamp_no_match_forward(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, None)], "user_id long, ts long")
-        right = spark.createDataFrame([(1, 3, "x")],
-                                      "user_id long, ts long, val string")
-        out = temporal.asof_join(left, right, on="ts", by="user_id",
-                                 direction="forward").collect()[0]
-        assert out["val_r"] is None
-
     def test_decontaminate_custom_id_col(self, spark):
         from datatest_spark.operators import decontam
 
@@ -2318,126 +2095,6 @@ class TestReviewFixesR3:
         plan = (sim.ivf_assign(vecs, cents)._jdf.queryExecution()
                 .executedPlan().toString())
         assert "Exchange hashpartitioning" not in plan
-
-
-class TestRangeJoin:
-    def test_inclusive_bounds_and_nulls(self, spark):
-        import datetime as dt
-
-        from datatest_spark.operators import temporal
-
-        T = dt.datetime
-        left = spark.createDataFrame(
-            [(1, T(2024, 1, 1, 10, 30)), (2, T(2024, 1, 1, 13, 0)),
-             (3, None)],
-            "event_id long, ts timestamp_ntz",
-        )
-        right = spark.createDataFrame(
-            [(100, T(2024, 1, 1, 10, 0), T(2024, 1, 1, 11, 0)),
-             (101, T(2024, 1, 1, 9, 0), T(2024, 1, 1, 13, 0)),  # end == l2.ts
-             (102, None, T(2024, 1, 5, 0, 0))],
-            "win_id long, start timestamp_ntz, end timestamp_ntz",
-        )
-        got = sorted(
-            (r["event_id"], r["win_id_r"])
-            for r in temporal.range_join(left, right).collect()
-        )
-        assert got == [(1, 100), (1, 101), (2, 101)]
-
-    def test_keyed_numeric_ranges(self, spark):
-        from datatest_spark.operators import temporal
-
-        ln = spark.createDataFrame([(1, 5, 7), (2, 50, 7)],
-                                   "id long, x long, user_id long")
-        rn = spark.createDataFrame(
-            [(9, 0, 10, 7), (10, 0, 100, 8)],
-            "rid long, s long, e long, user_id long",
-        )
-        got = [
-            (r["id"], r["rid_r"])
-            for r in temporal.range_join(
-                ln, rn, on="x", start="s", end="e", by="user_id",
-                bucket_ms=16,
-            ).collect()
-        ]
-        assert got == [(1, 9)]  # user mismatch excludes (2, 10)
-
-    def test_span_guard_raises(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 0)], "id long, x long")
-        right = spark.createDataFrame([(9, 0, 10_000_000)],
-                                      "rid long, s long, e long")
-        with pytest.raises(Exception, match="spans more than"):
-            temporal.range_join(
-                left, right, on="x", start="s", end="e",
-                bucket_ms=10, max_span_buckets=100,
-            ).collect()
-
-    def test_suffix_collision_raises(self, spark):
-        from datatest_spark.operators import temporal
-
-        left = spark.createDataFrame([(1, 0, "z")], "id long, ts long, s_r string")
-        right = spark.createDataFrame([(9, 0, 10)], "rid long, s long, end long")
-        with pytest.raises(ValueError, match="collide"):
-            temporal.range_join(left, right, on="ts", start="s", end="end")
-
-    def test_microsecond_boundary_exact(self, spark):
-        # the exact filter must compare at full resolution: a left row in
-        # the same MILLISECOND as a boundary but microseconds outside
-        # [start, end] must NOT match (epoch_ms truncation would let it)
-        import datetime as dt
-
-        from datatest_spark.operators import temporal
-
-        T = dt.datetime
-        left = spark.createDataFrame(
-            [(1, T(2024, 1, 1, 10, 0, 0, 200)),    # 200us: before 500us start
-             (2, T(2024, 1, 1, 10, 0, 0, 999950))],  # after 999900us end
-            "event_id long, ts timestamp_ntz",
-        )
-        right = spark.createDataFrame(
-            [(9, T(2024, 1, 1, 10, 0, 0, 500), T(2024, 1, 1, 10, 0, 0, 999900))],
-            "win_id long, start timestamp_ntz, end timestamp_ntz",
-        )
-        assert temporal.range_join(left, right).count() == 0
-        # and exact microsecond boundaries DO match (inclusive)
-        left2 = spark.createDataFrame(
-            [(3, T(2024, 1, 1, 10, 0, 0, 500))], "event_id long, ts timestamp_ntz"
-        )
-        assert temporal.range_join(left2, right).count() == 1
-
-    def test_bucket_ms_validated(self, spark):
-        from datatest_spark.operators import temporal
-
-        l = spark.createDataFrame([(1, 0)], "id long, x long")
-        r = spark.createDataFrame([(9, 0, 1)], "rid long, s long, e long")
-        with pytest.raises(ValueError, match="bucket_ms"):
-            temporal.range_join(l, r, on="x", start="s", end="e", bucket_ms=0)
-
-    def test_reserved_bkt_column_raises(self, spark):
-        from datatest_spark.operators import temporal
-
-        l = spark.createDataFrame([(1, 0, 5)], "id long, ts long, _bkt long")
-        r = spark.createDataFrame([(9, 0, 1)], "rid long, start long, end long")
-        with pytest.raises(ValueError, match="_bkt"):
-            temporal.range_join(l, r)
-
-    def test_equi_join_plan_not_theta(self, spark):
-        from datatest_spark.operators import temporal
-
-        l = spark.createDataFrame([(1, 5, 7)], "id long, x long, user_id long")
-        r = spark.createDataFrame([(9, 0, 10, 7)],
-                                  "rid long, s long, e long, user_id long")
-        plan = (
-            temporal.range_join(l, r, on="x", start="s", end="e",
-                                by="user_id", bucket_ms=16)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        # the whole point: an EQUI-join on (key, bucket), never a
-        # nested-loop/cartesian theta-join
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
 
 
 class TestVocabAndKs:
@@ -5594,163 +5251,6 @@ class TestFreqSpectrum:
         assert rows[2]["n_types"] == 1 and rows[2]["min_count"] == 2
 
 
-class TestFunnelConversion:
-    def _ev(self, spark, rows):
-        return spark.createDataFrame(
-            [(i, u, t, s) for i, (u, t, s) in enumerate(rows)],
-            "event_id long, user_id long, event_type string, ts string",
-        ).select(
-            "event_id", "user_id", "event_type",
-            F.col("ts").cast("timestamp_ntz").alias("ts"),
-        )
-
-    def test_sequential_order_enforced(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [
-            # user 1 converts in order
-            (1, "view", "2026-01-01 10:00:00"),
-            (1, "click", "2026-01-01 10:05:00"),
-            (1, "purchase", "2026-01-01 10:10:00"),
-            # user 2 clicked BEFORE viewing: click must not count
-            (2, "click", "2026-01-01 09:00:00"),
-            (2, "view", "2026-01-01 10:00:00"),
-            # user 3 view only
-            (3, "view", "2026-01-01 08:00:00"),
-            # user 4 simultaneous view+click: strict > breaks the chain
-            (4, "view", "2026-01-01 07:00:00"),
-            (4, "click", "2026-01-01 07:00:00"),
-        ])
-        out = {r["step"]: r for r in temporal.funnel_conversion(
-            ev, ["view", "click", "purchase"]).collect()}
-        assert out["view"]["n_users"] == 4
-        assert out["click"]["n_users"] == 1
-        assert out["purchase"]["n_users"] == 1
-        assert out["view"]["rate_vs_first"] == 1.0
-        assert out["view"]["rate_vs_prev"] is None
-        assert out["click"]["rate_vs_first"] == 0.25
-        assert out["purchase"]["rate_vs_prev"] == 1.0
-
-    def test_within_seconds_window(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [
-            (1, "view", "2026-01-01 10:00:00"),
-            (1, "click", "2026-01-01 10:00:30"),   # inside 60s
-            (2, "view", "2026-01-01 10:00:00"),
-            (2, "click", "2026-01-01 10:02:00"),   # outside 60s
-        ])
-        out = {r["step"]: r["n_users"] for r in temporal.funnel_conversion(
-            ev, ["view", "click"], within_seconds=60).collect()}
-        assert out == {"view": 2, "click": 1}
-
-    def test_empty_first_step_null_rates(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [(1, "click", "2026-01-01 10:00:00")])
-        out = temporal.funnel_conversion(ev, ["view", "click"]).collect()
-        by = {r["step"]: r for r in out}
-        assert by["view"]["n_users"] == 0
-        assert by["view"]["rate_vs_first"] is None
-        assert by["click"]["rate_vs_prev"] is None
-
-    def test_param_validation(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [(1, "view", "2026-01-01 10:00:00")])
-        with pytest.raises(ValueError, match="non-empty"):
-            temporal.funnel_conversion(ev, [])
-        with pytest.raises(ValueError, match="distinct"):
-            temporal.funnel_conversion(ev, ["a", "a"])
-        with pytest.raises(ValueError, match="within_seconds"):
-            temporal.funnel_conversion(ev, ["a", "b"], within_seconds=0)
-
-
-class TestInterEventCadence:
-    def _ev(self, spark, rows):
-        return spark.createDataFrame(
-            rows, "user_id long, ts string"
-        ).select(
-            "user_id", F.col("ts").cast("timestamp_ntz").alias("ts")
-        )
-
-    def test_metronome_bot_vs_bursty_human(self, spark):
-        from datatest_spark.operators import temporal
-
-        rows = []
-        # user 1: a metronome — exactly 60s apart
-        for i in range(10):
-            rows.append((1, "2026-01-01 10:%02d:00" % i))
-        # user 2: bursty — gaps 1s, 1s, 3600s, 2s
-        for t in ("10:00:00", "10:00:01", "10:00:02", "11:00:02",
-                  "11:00:04"):
-            rows.append((2, "2026-01-01 " + t))
-        # user 3: duplicate-timestamp flood
-        for _ in range(5):
-            rows.append((3, "2026-01-01 10:00:00"))
-        out = {r["user"]: r for r in temporal.inter_event_cadence(
-            self._ev(spark, rows)).collect()}
-        assert out[1]["mean_gap_s"] == 60.0
-        assert out[1]["std_gap_s"] == 0.0
-        assert out[1]["cv"] == 0.0
-        assert out[1]["zero_gap_frac"] == 0.0
-        assert out[2]["cv"] > 1.0
-        assert out[2]["n_intervals"] == 4
-        assert out[3]["mean_gap_s"] == 0.0
-        assert out[3]["cv"] is None  # zero mean has no scale
-        assert out[3]["zero_gap_frac"] == 1.0
-
-    def test_python_moment_mirror(self, spark):
-        import math
-
-        from datatest_spark.operators import temporal
-
-        gaps = [7, 11, 2, 40, 19]  # seconds
-        rows, t = [], 0
-        for g in [0] + gaps:
-            t += g
-            rows.append((1, "2026-01-01 10:%02d:%02d" % (t // 60, t % 60)))
-        out = temporal.inter_event_cadence(self._ev(spark, rows)).collect()[0]
-        n, s = len(gaps), sum(gaps)
-        ss = sum(g * g for g in gaps)
-        mean = s / n
-        std = math.sqrt((n * ss - s * s) / (n * (n - 1)))
-        assert out["mean_gap_s"] == round(mean, 4)
-        assert out["std_gap_s"] == round(std, 4)
-        assert out["cv"] == round(std / mean, 4)
-
-    def test_min_intervals_filter_and_validation(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [
-            (1, "2026-01-01 10:00:00"), (1, "2026-01-01 10:01:00"),
-            (2, "2026-01-01 10:00:00"),
-        ])
-        # user 1 has one interval, user 2 none: default min_intervals=2
-        # drops both
-        assert temporal.inter_event_cadence(ev).count() == 0
-        got = temporal.inter_event_cadence(ev, min_intervals=1).collect()
-        assert [(r["user"], r["n_intervals"]) for r in got] == [(1, 1)]
-        assert got[0]["std_gap_s"] is None  # undefined at n=1
-        with pytest.raises(ValueError, match="min_intervals"):
-            temporal.inter_event_cadence(ev, min_intervals=0)
-
-    def test_subsecond_gaps_measured_in_microseconds(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [
-            (1, "2026-01-01 10:00:00.900000"),
-            (1, "2026-01-01 10:00:01.100000"),   # 0.2s elapsed
-            (1, "2026-01-01 10:00:01.300000"),   # 0.2s elapsed
-        ])
-        out = temporal.inter_event_cadence(ev).collect()[0]
-        # a second-boundary-crossing definition would call the first
-        # gap 1s and the second 0s; elapsed microseconds say 0.2 both
-        assert out["mean_gap_s"] == 0.2
-        assert out["std_gap_s"] == 0.0
-        assert out["zero_gap_frac"] == 0.0
-
-
 class TestSession7Ops:
     """Pins for the session-7 overflow-window operators
     (jaccard_sweep, chain_collapse, hubness): each is value-oracled in
@@ -5902,84 +5402,8 @@ class TestSession7Ops:
 
 
 class TestSession7Batch2:
-    """Pins for event_transition_matrix and dup_embedding_consistency
-    (q:event_transitions, q:dup_embedding_check in the mirror sweep)."""
-
-    def _ev(self, spark, rows):
-        return spark.createDataFrame(
-            [(i, u, t, ts) for i, (u, t, ts) in enumerate(rows)],
-            "event_id long, user_id long, event_type string, ts string",
-        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-
-    def test_transition_hand_counts_and_probs(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [
-            (1, "A", "2026-01-01 10:00:00"),
-            (1, "B", "2026-01-01 10:01:00"),
-            (1, "A", "2026-01-01 10:02:00"),
-            (1, "B", "2026-01-01 10:03:00"),
-            (2, "A", "2026-01-01 11:00:00"),
-            (2, "A", "2026-01-01 11:05:00"),
-        ])
-        rows = {
-            (r["prev_type"], r["next_type"]): (r["n"], r["prob"])
-            for r in temporal.event_transition_matrix(ev).collect()
-        }
-        assert rows[("A", "B")] == (2, 0.666667)
-        assert rows[("A", "A")] == (1, 0.333333)
-        assert rows[("B", "A")] == (1, 1.0)
-        assert len(rows) == 3  # streams never chain across users
-
-    def test_transition_simultaneous_ts_breaks_on_event_id(self, spark):
-        from datatest_spark.operators import temporal
-
-        # both orderings of the same-instant pair are defensible; the
-        # event_id tiebreak makes ONE of them the contract
-        ev = self._ev(spark, [
-            (1, "X", "2026-01-01 10:00:00"),
-            (1, "Y", "2026-01-01 10:00:00"),
-        ])
-        rows = [
-            (r["prev_type"], r["next_type"])
-            for r in temporal.event_transition_matrix(ev).collect()
-        ]
-        assert rows == [("X", "Y")]
-
-    def test_transition_min_count_keeps_denominator(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._ev(spark, [
-            (1, "A", "2026-01-01 10:00:00"),
-            (1, "B", "2026-01-01 10:01:00"),
-            (1, "A", "2026-01-01 10:02:00"),
-            (1, "B", "2026-01-01 10:03:00"),
-            (2, "A", "2026-01-01 11:00:00"),
-            (2, "A", "2026-01-01 11:05:00"),
-        ])
-        rows = {
-            (r["prev_type"], r["next_type"]): r["prob"]
-            for r in temporal.event_transition_matrix(
-                ev, min_count=2
-            ).collect()
-        }
-        # (A,A) and (B,A) fall below the cut but A->B keeps its 2/3:
-        # the cut hides rows, it never renormalizes survivors
-        assert rows == {("A", "B"): 0.666667}
-        with pytest.raises(ValueError, match="min_count"):
-            temporal.event_transition_matrix(ev, min_count=0)
-
-    def test_transition_null_ts_and_singletons_excluded(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = spark.createDataFrame(
-            [(0, 1, "A", None), (1, 1, "B", "2026-01-01 10:00:00"),
-             (2, 2, "C", "2026-01-01 10:00:00")],
-            "event_id long, user_id long, event_type string, ts string",
-        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        # user 1's null-ts event has no stream position; user 2 has a
-        # single event — no transitions anywhere
-        assert temporal.event_transition_matrix(ev).count() == 0
+    """Pins for dup_embedding_consistency (q:dup_embedding_check in the
+    mirror sweep)."""
 
     def _dup_frames(self, spark):
         docs = spark.createDataFrame(
@@ -6149,134 +5573,6 @@ class TestSession8Ops:
         iso_rows = similarity.covariance_spectrum(iso).collect()
         assert iso_rows[0]["effective_rank"] > 2.99
         assert abs(iso_rows[-1]["cum_var"] - 1.0) < 1e-6
-
-
-class TestSession8EventOps:
-    """Hand-fixture pins for audience_overlap and path_trigrams (both
-    value-oracled in the mirror sweep)."""
-
-    def _events(self, spark, rows):
-        import datetime as dt
-
-        t0 = dt.datetime(2026, 1, 1)
-        return spark.createDataFrame(
-            [
-                (i, u, ty, t0 + dt.timedelta(seconds=i))
-                for i, (u, ty) in enumerate(rows)
-            ],
-            "event_id long, user_id long, event_type string, ts timestamp",
-        )
-
-    def test_audience_overlap_hand_counts(self, spark):
-        from datatest_spark.operators import temporal
-
-        # A: users {1,2,3}; B: {2,3}; C: {4}; duplicate (1, A) events
-        # must not double-count the audience
-        ev = self._events(
-            spark,
-            [(1, "A"), (1, "A"), (2, "A"), (3, "A"),
-             (2, "B"), (3, "B"), (4, "C")],
-        )
-        got = {
-            (r["type_a"], r["type_b"]): r
-            for r in temporal.audience_overlap(ev).collect()
-        }
-        assert set(got) == {("A", "B"), ("A", "C"), ("B", "C")}
-        ab = got[("A", "B")]
-        assert (ab["users_a"], ab["users_b"], ab["users_both"]) == (3, 2, 2)
-        assert ab["jaccard"] == round(2 / 3, 6)
-        assert ab["lift"] == round(2.0 / 3 / 2 * 4, 6)
-        # zero-overlap pairs are PRESENT with jaccard 0
-        assert got[("A", "C")]["users_both"] == 0
-        assert got[("A", "C")]["jaccard"] == 0.0
-        assert got[("B", "C")]["lift"] == 0.0
-
-    def test_audience_overlap_drops_nulls(self, spark):
-        import datetime as dt
-
-        from datatest_spark.operators import temporal
-
-        t0 = dt.datetime(2026, 1, 1)
-        ev = spark.createDataFrame(
-            [
-                (1, 1, "A", t0), (2, None, "B", t0), (3, 2, None, t0),
-                (4, 2, "B", t0),
-            ],
-            "event_id long, user_id long, event_type string, ts timestamp",
-        )
-        got = {
-            (r["type_a"], r["type_b"]): r
-            for r in temporal.audience_overlap(ev).collect()
-        }
-        assert set(got) == {("A", "B")}
-        assert got[("A", "B")]["users_b"] == 1  # null user dropped
-
-    def test_path_trigrams_first_order_stream_lift_one(self, spark):
-        from datatest_spark.operators import temporal
-
-        # A B C A B C: trigram ABC appears twice; P(C|B) = 1 so the
-        # first-order model predicts it exactly -> lift 1.0
-        ev = self._events(
-            spark, [(1, t) for t in ["A", "B", "C", "A", "B", "C"]]
-        )
-        got = {
-            (r["t1"], r["t2"], r["t3"]): r
-            for r in temporal.path_trigrams(ev).collect()
-        }
-        abc = got[("A", "B", "C")]
-        assert abc["n"] == 2
-        assert abc["expected_n"] == 2.0
-        assert abc["lift"] == 1.0
-
-    def test_path_trigrams_second_order_lift(self, spark):
-        from datatest_spark.operators import temporal
-
-        # u1: X A P, u2: Y A Q -> P(P|A) = 1/2 but (X,A)->P is
-        # deterministic: expected 0.5, lift 2.0
-        ev = self._events(
-            spark,
-            [(1, "X"), (1, "A"), (1, "P"), (2, "Y"), (2, "A"), (2, "Q")],
-        )
-        got = {
-            (r["t1"], r["t2"], r["t3"]): r
-            for r in temporal.path_trigrams(ev).collect()
-        }
-        xap = got[("X", "A", "P")]
-        assert xap["n"] == 1
-        assert xap["expected_n"] == 0.5
-        assert xap["lift"] == 2.0
-        # streams never chain across users: no (P, Y, ...) trigram
-        assert not any(k[0] == "P" or k[1] == "P" for k in got)
-
-    def test_path_trigrams_min_count_after_denominator(self, spark):
-        from datatest_spark.operators import temporal
-
-        ev = self._events(
-            spark, [(1, t) for t in ["A", "B", "C", "A", "B", "D"]]
-        )
-        # min_count=2 cuts ABD/BCA/CAB (n=1) but ABC stays... both ABC
-        # and ABD have n 1 here (stream ABCABD: tri ABC, BCA, CAB, ABD)
-        all_rows = temporal.path_trigrams(ev, min_count=1).collect()
-        cut_rows = temporal.path_trigrams(ev, min_count=2).collect()
-        assert len(all_rows) == 4 and cut_rows == []
-        # the denominator (expected_n) of surviving rows is unchanged
-        # by the cut: recompute with a stream where ABC repeats
-        ev2 = self._events(
-            spark, [(1, t) for t in ["A", "B", "C", "A", "B", "C", "A",
-                                     "B", "D"]]
-        )
-        full = {
-            (r["t1"], r["t2"], r["t3"]): r["expected_n"]
-            for r in temporal.path_trigrams(ev2, min_count=1).collect()
-        }
-        cut = {
-            (r["t1"], r["t2"], r["t3"]): r["expected_n"]
-            for r in temporal.path_trigrams(ev2, min_count=2).collect()
-        }
-        for k, v in cut.items():
-            assert full[k] == v
-        with pytest.raises(ValueError, match="min_count"):
-            temporal.path_trigrams(ev, min_count=0)
 
 
 class TestSeriesAutocorr:
@@ -6983,160 +6279,10 @@ class TestSurprisalSpans:
 
 
 class TestSession10Ops:
-    """Pins for the session-10 overflow-window operators (privacy
-    k-anonymity/l-diversity, KMV bottom-k sketches, token burstiness,
-    lexical type inference): each is value-oracled in the
+    """Pins for the session-10 overflow-window operators (token
+    burstiness, lexical type inference): each is value-oracled in the
     tools/check_oracles.py mirror sweep; these pins lock the semantics
     on hand-built fixtures."""
-
-    # --- privacy -----------------------------------------------------
-
-    def _people(self, spark):
-        # classes: (US,a)x4  (US,b)x2  (UK,a)x1  (null,a)x2
-        rows = [
-            ("US", "a", "x"), ("US", "a", "x"), ("US", "a", "y"),
-            ("US", "a", "z"),
-            ("US", "b", "x"), ("US", "b", "x"),
-            ("UK", "a", "q"),
-            (None, "a", "x"), (None, "a", None),
-        ]
-        return spark.createDataFrame(
-            rows, "country string, seg string, sens string"
-        )
-
-    def test_k_anonymity_violations_classes_and_flags(self, spark):
-        from datatest_spark.operators import privacy
-
-        got = {
-            r["qi_key"]: r
-            for r in privacy.k_anonymity_violations(
-                self._people(spark), ["country", "seg"], k=3,
-                sensitive_col="sens", l=3,
-            ).collect()
-        }
-        sep, null = "\x1f", "\x00null\x00"
-        # (US,b): size 2 < 3 AND 1 distinct sens < 3 -> both flags
-        us_b = got["US" + sep + "b"]
-        assert (us_b["class_size"], us_b["distinct_sensitive"]) == (2, 1)
-        assert us_b["k_violation"] and us_b["l_violation"]
-        # (UK,a): singleton
-        uk = got["UK" + sep + "a"]
-        assert uk["class_size"] == 1 and uk["k_violation"]
-        # null country forms its OWN class (not merged with any string)
-        nl = got[null + sep + "a"]
-        assert nl["class_size"] == 2
-        # null sensitive counts as one distinct disclosure bucket
-        assert nl["distinct_sensitive"] == 2
-        # (US,a) size 4 but only 3 distinct sens -> NOT a violation at l=3
-        assert ("US" + sep + "a") not in got
-        assert set(got) == {
-            "US" + sep + "b", "UK" + sep + "a", null + sep + "a"
-        }
-
-    def test_k_anonymity_profile_scorecard(self, spark):
-        from datatest_spark.operators import privacy
-
-        row = privacy.k_anonymity_profile(
-            self._people(spark), ["country", "seg"], k=3,
-            sensitive_col="sens", l=2,
-        ).collect()[0]
-        assert row["n_classes"] == 4
-        assert row["n_rows"] == 9
-        assert row["k_anonymity"] == 1          # the UK singleton
-        assert row["k_violating_classes"] == 3  # sizes 2,1,2
-        assert row["rows_at_risk"] == 5
-        assert row["at_risk_share"] == round(5 / 9, 6)
-        assert row["l_diversity"] == 1          # (US,b) or (UK,a)
-        assert row["l_violating_classes"] == 2  # distinct_sens {1,1}
-
-    def test_k_anonymity_empty_and_guards(self, spark):
-        from datatest_spark.operators import privacy
-
-        empty = self._people(spark).where(F.lit(False))
-        row = privacy.k_anonymity_profile(empty, ["country"], k=3).collect()[0]
-        assert row["n_classes"] == 0 and row["n_rows"] == 0
-        assert row["k_anonymity"] is None and row["rows_at_risk"] == 0
-        with pytest.raises(ValueError):
-            privacy.k_anonymity_violations(empty, [], k=3)
-        with pytest.raises(ValueError):
-            privacy.k_anonymity_violations(empty, ["country"], k=0)
-        with pytest.raises(ValueError):
-            # sensitive without l (and vice versa) is a caller bug
-            privacy.k_anonymity_profile(
-                empty, ["country"], k=3, sensitive_col="sens"
-            )
-
-    # --- KMV sketches ------------------------------------------------
-
-    def test_kmv_exact_below_k(self, spark):
-        from datatest_spark.operators import sketch
-
-        df = spark.createDataFrame(
-            [("a", i % 7) for i in range(100)], "g string, v int"
-        )
-        row = sketch.kmv_distinct(df, "v", "g", k=64).collect()[0]
-        assert row["is_exact"] and row["n_kept"] == 7
-        assert row["est_distinct"] == 7.0
-
-    def test_kmv_estimate_within_bound(self, spark):
-        from datatest_spark.operators import sketch
-
-        df = spark.createDataFrame(
-            [("a", i) for i in range(1000)], "g string, v int"
-        )
-        row = sketch.kmv_error_audit(df, "v", "g", k=64).collect()[0]
-        assert row["exact_distinct"] == 1000 and not row["is_exact"]
-        # rel std error ~ 1/sqrt(k-2) ~ 12.7%; allow 4 sigma
-        assert abs(row["rel_error"]) < 0.5, row
-
-    def test_kmv_signatures_merge_like_the_sketch(self, spark):
-        """Mergeability: bottom-k of the union of two groups' signatures
-        equals the signature of the pooled data — the property that lets
-        snapshots merge without rescanning history."""
-        from datatest_spark.operators import sketch
-
-        k = 16
-        a = spark.createDataFrame(
-            [("a", i) for i in range(60)], "g string, v int"
-        )
-        b = spark.createDataFrame(
-            [("b", i) for i in range(30, 90)], "g string, v int"
-        )
-        sig = {
-            r["group"]: r["signature"]
-            for r in sketch.kmv_signatures(
-                a.union(b), "v", "g", k=k
-            ).collect()
-        }
-        pooled = sketch.kmv_signatures(
-            a.union(b).withColumn("g", F.lit("all")), "v", "g", k=k
-        ).collect()[0]["signature"]
-        merged = sorted(set(sig["a"]) | set(sig["b"]))[:k]
-        assert merged == pooled
-
-    def test_kmv_overlap_identical_and_disjoint(self, spark):
-        from datatest_spark.operators import sketch
-
-        rows = [("a", i) for i in range(50)] + [("b", i) for i in range(50)]
-        same = sketch.kmv_overlap_matrix(
-            spark.createDataFrame(rows, "g string, v int"), "v", "g", k=32
-        ).collect()[0]
-        assert same["jaccard_est"] == 1.0 and same["inter"] == same["depth"]
-        rows = [("a", i) for i in range(50)] + [
-            ("b", i) for i in range(100, 150)
-        ]
-        disj = sketch.kmv_overlap_matrix(
-            spark.createDataFrame(rows, "g string, v int"), "v", "g", k=32
-        ).collect()[0]
-        assert disj["jaccard_est"] == 0.0 and disj["inter"] == 0
-        assert disj["depth"] == 32
-
-    def test_kmv_guards(self, spark):
-        from datatest_spark.operators import sketch
-
-        df = spark.createDataFrame([("a", 1)], "g string, v int")
-        with pytest.raises(ValueError):
-            sketch.kmv_distinct(df, "v", "g", k=1)
 
     # --- burstiness --------------------------------------------------
 
@@ -7251,8 +6397,8 @@ class TestSession10Ops:
 
 class TestSession10OpsB:
     """Pins for the second session-10 batch: split-balance audit,
-    data-constrained epoch mixture plan, duplicate label-conflict
-    audit, and the log2 histogram quantile sketch."""
+    data-constrained epoch mixture plan and duplicate label-conflict
+    audit."""
 
     def test_split_balance_shares_and_z(self, spark):
         from datatest_spark.operators import packing
@@ -7344,70 +6490,10 @@ class TestSession10OpsB:
         assert (r["n_members"], r["n_labeled"], r["n_labels"]) == (3, 3, 2)
         assert (r["label_min"], r["label_max"]) == ("x", "y")
 
-    def test_log2_histogram_bins_exact(self, spark):
-        from datatest_spark.operators import sketch
-
-        df = spark.createDataFrame(
-            [("a", v) for v in [0, 1, 2, 3, 4, 7, 8, 1023, 1024, -5, None]],
-            "g string, v int",
-        )
-        got = {
-            r["bin"]: r["n"]
-            for r in sketch.log2_histogram(df, "v", "g").collect()
-        }
-        # -5 and null dropped; boundaries land exactly
-        assert got == {-1: 1, 0: 1, 1: 2, 2: 2, 3: 1, 9: 1, 10: 1}
-
-    def test_log2_quantiles_selection_and_bound(self, spark):
-        from datatest_spark.operators import sketch
-
-        vals = [1] * 50 + [10] * 40 + [1000] * 10   # bins 0, 3, 9
-        df = spark.createDataFrame([("a", v) for v in vals], "g string, v int")
-        got = {
-            r["q"]: r
-            for r in sketch.log2_quantiles(
-                df, "v", "g", qs=(0.5, 0.9, 0.99)
-            ).collect()
-        }
-        assert (got[0.5]["bin"], got[0.5]["est_hi"]) == (0, 1)
-        assert (got[0.9]["bin"], got[0.9]["est_hi"]) == (3, 15)
-        assert (got[0.99]["bin"], got[0.99]["est_hi"]) == (9, 1023)
-        # certified envelope under the sketch's quantile definition
-        # (smallest value whose cumulative count reaches q*n): the true
-        # empirical quantile never exceeds the bin's upper bound
-        import math
-
-        s = sorted(vals)
-        for q in (0.5, 0.9, 0.99):
-            true_q = s[math.ceil(q * len(s)) - 1]
-            assert true_q <= got[q]["est_hi"] < 2 * max(true_q, 1)
-        with pytest.raises(ValueError):
-            sketch.log2_quantiles(df, "v", "g", qs=(0.0,))
-
-    def test_log2_histogram_merges_by_addition(self, spark):
-        from datatest_spark.operators import sketch
-
-        a = spark.createDataFrame(
-            [("g", v) for v in [1, 2, 3]], "g string, v int"
-        )
-        b = spark.createDataFrame(
-            [("g", v) for v in [3, 8]], "g string, v int"
-        )
-        def hist(df):
-            return {
-                r["bin"]: r["n"]
-                for r in sketch.log2_histogram(df, "v", "g").collect()
-            }
-        ha, hb, hu = hist(a), hist(b), hist(a.union(b))
-        merged = {
-            k: ha.get(k, 0) + hb.get(k, 0) for k in set(ha) | set(hb)
-        }
-        assert merged == hu
-
 
 class TestSession10OpsC:
     """Pins for the third session-10 batch: Cohen's kappa, Chao1
-    richness, effective-sample-size audit, Kaplan-Meier survival."""
+    richness and effective-sample-size audit."""
 
     def test_kappa_perfect_and_chance(self, spark):
         from datatest_spark.operators.stats import cohen_kappa
@@ -7492,37 +6578,6 @@ class TestSession10OpsC:
         with pytest.raises(ValueError):
             ess_audit(neg, "w", "source", scale_bits=0)
 
-    def test_km_survival_hand_curve(self, spark):
-        from datatest_spark.operators.temporal import km_survival
-
-        rows = [
-            # u1: lifetime 2, horizon gap 8 -> event
-            (1, "2024-01-01 08:00:00"), (1, "2024-01-03 09:00:00"),
-            # u2: lifetime 0, gap 10 -> event
-            (2, "2024-01-01 12:00:00"),
-            # u3: lifetime 4, last at day5, gap 6 < 7 -> censored
-            (3, "2024-01-02 01:00:00"), (3, "2024-01-06 23:00:00"),
-            # u4: lifetime 10, last at horizon -> censored
-            (4, "2024-01-01 00:30:00"), (4, "2024-01-11 10:00:00"),
-        ]
-        df = spark.createDataFrame(
-            rows, "user_id long, s string"
-        ).withColumn("ts", F.col("s").cast("timestamp"))
-        got = {
-            r["t"]: r
-            for r in km_survival(df, "user_id", "ts", censor_days=7).collect()
-        }
-        assert (got[0]["n_at_risk"], got[0]["d"], got[0]["c"]) == (4, 1, 0)
-        assert got[0]["survival"] == 0.75
-        assert (got[2]["n_at_risk"], got[2]["d"]) == (3, 1)
-        assert got[2]["survival"] == 0.5
-        assert (got[4]["n_at_risk"], got[4]["c"], got[4]["d"]) == (2, 1, 0)
-        assert got[4]["survival"] == 0.5          # censoring multiplies 1
-        assert (got[10]["n_at_risk"], got[10]["c"]) == (1, 1)
-        assert got[10]["survival"] == 0.5
-        with pytest.raises(ValueError):
-            km_survival(df, "user_id", "ts", censor_days=-1)
-
 
 class TestSession10ReviewFixes:
     """Pins for the session-10 self-review hardening items."""
@@ -7533,26 +6588,6 @@ class TestSession10ReviewFixes:
         df = spark.createDataFrame([("1",)], "a string")
         with pytest.raises(ValueError, match="duplicate"):
             lexical_type_profile(df, ["a", "a"])
-
-    def test_k_anonymity_rejects_l_below_one(self, spark):
-        from datatest_spark.operators import privacy
-
-        df = spark.createDataFrame([("US", "x")], "c string, s string")
-        with pytest.raises(ValueError, match="l must be"):
-            privacy.k_anonymity_violations(
-                df, ["c"], k=2, sensitive_col="s", l=0
-            )
-        with pytest.raises(ValueError, match="l must be"):
-            privacy.k_anonymity_profile(
-                df, ["c"], k=2, sensitive_col="s", l=0
-            )
-
-    def test_k_anonymity_profile_rejects_k_below_one(self, spark):
-        from datatest_spark.operators import privacy
-
-        df = spark.createDataFrame([("US",)], "c string")
-        with pytest.raises(ValueError, match="k must be"):
-            privacy.k_anonymity_profile(df, ["c"], k=0)
 
 
 class TestSession10OpsD:
@@ -7646,66 +6681,6 @@ class TestSession10OpsD:
         plan = buf.getvalue()
         assert "BroadcastHashJoin" in plan, plan
         assert "SortMergeJoin" not in plan, plan
-
-
-class TestKmvSnapshotDelta:
-    """Pins for sketch.kmv_snapshot_delta (signature-frame algebra)."""
-
-    def _sigs(self, spark, rows):
-        from datatest_spark.operators import sketch
-
-        df = spark.createDataFrame(rows, "g string, v int")
-        return sketch.kmv_signatures(df, "v", "g", k=16)
-
-    def test_identical_snapshots_add_nothing(self, spark):
-        from datatest_spark.operators import sketch
-
-        s = self._sigs(spark, [("a", i) for i in range(40)])
-        r = sketch.kmv_snapshot_delta(s, s, k=16).collect()[0]
-        assert r["est_added"] == 0.0 and r["jaccard_est"] == 1.0
-        assert r["est_old"] == r["est_new"] == r["est_union"]
-
-    def test_subset_growth_detected_exactly_below_k(self, spark):
-        from datatest_spark.operators import sketch
-
-        old = self._sigs(spark, [("a", i) for i in range(10)])
-        new = self._sigs(spark, [("a", i) for i in range(14)])
-        r = sketch.kmv_snapshot_delta(old, new, k=16).collect()[0]
-        # below k everything is exact: 10 -> 14 distinct, +4
-        assert (r["est_old"], r["est_new"], r["est_union"]) == (
-            10.0, 14.0, 14.0,
-        )
-        assert r["est_added"] == 4.0
-
-    def test_new_and_vanished_groups(self, spark):
-        from datatest_spark.operators import sketch
-
-        old = self._sigs(spark, [("gone", i) for i in range(5)])
-        new = self._sigs(spark, [("fresh", i) for i in range(7)])
-        got = {
-            r["group"]: r
-            for r in sketch.kmv_snapshot_delta(old, new, k=16).collect()
-        }
-        assert got["fresh"]["est_old"] == 0.0
-        assert got["fresh"]["est_added"] == 7.0
-        assert got["gone"]["est_new"] == 0.0 and got["gone"]["est_added"] == 0.0
-
-    def test_matches_direct_union_sketch(self, spark):
-        """Merging signatures must estimate the union exactly as a
-        sketch built over the pooled data would — the mergeability
-        contract that makes persisted snapshots composable."""
-        from datatest_spark.operators import sketch
-
-        rows_a = [("a", i) for i in range(100)]
-        rows_b = [("a", i) for i in range(50, 180)]
-        old = self._sigs(spark, rows_a)
-        new = self._sigs(spark, rows_b)
-        delta = sketch.kmv_snapshot_delta(old, new, k=16).collect()[0]
-        pooled = spark.createDataFrame(
-            rows_a + rows_b, "g string, v int"
-        )
-        direct = sketch.kmv_distinct(pooled, "v", "g", k=16).collect()[0]
-        assert delta["est_union"] == direct["est_distinct"]
 
 
 class TestPartitionFingerprint:

@@ -156,18 +156,6 @@ class TestPackingPlans:
 
 
 class TestTemporalSamplingPlans:
-    def test_asof_join_costs_one_exchange(self, spark, sf_dir):
-        # union + single hash partition on the key + running last():
-        # no range-join blowup, no second shuffle
-        from datatest_spark.operators import temporal
-
-        e = spark.read.parquet(sf_dir + "/events.parquet")
-        left = e.where("event_type = 'purchase'").select("event_id", "user_id", "ts")
-        right = e.where("event_type = 'signup'").select("user_id", "ts", "value")
-        p = _plan(temporal.asof_join(left, right, on="ts", by="user_id"))
-        assert _exchanges(p) == 1
-        assert "CartesianProduct" not in p and "SortMergeJoin" not in p
-
     def test_stratified_sample_uses_window_group_limit(self, docs):
         # the rank<=N filter must push a partial top-N below the shuffle
         # so the exchange carries O(groups x N) rows, not the table
@@ -668,17 +656,6 @@ class TestSession6Plans:
         assert "SortMergeJoin" not in plan, plan
         assert "CartesianProduct" not in plan, plan
 
-    def test_funnel_no_cartesian_all_equi_joins(self, spark, sf_dir):
-        """Every hop is an equi-join on user_id; the k-element explode
-        runs on a one-row frame."""
-        from datatest_spark.operators import temporal
-
-        ev = spark.read.parquet(sf_dir + "/events.parquet")
-        plan = _plan(
-            temporal.funnel_conversion(ev, ["view", "click", "purchase"])
-        )
-        assert "CartesianProduct" not in plan, plan
-
     def test_minhash_error_audit_no_cartesian(self, docs):
         """Exact pairs come from the shared-shingle equi-join; the
         signature join touches only audited pairs — no all-pairs shape
@@ -741,17 +718,6 @@ class TestSession7Plans:
         # the 1-row count frame must come in broadcast, not shuffled
         assert "BroadcastNestedLoopJoin" in plan, plan
 
-    def test_transition_matrix_one_event_scale_window(self, spark, sf_dir):
-        """One user-partitioned lag window over the events; the
-        probability denominator is a window over the |types|^2
-        aggregate, never a join back to the events."""
-        from datatest_spark.operators import temporal
-
-        ev = spark.read.parquet(sf_dir + "/events.parquet")
-        plan = _plan(temporal.event_transition_matrix(ev))
-        assert "CartesianProduct" not in plan, plan
-        assert "Join" not in plan, plan  # windows + aggs only
-
     def test_dup_consistency_no_cartesian_single_rep_fanout(
         self, spark, sf_dir
     ):
@@ -781,32 +747,6 @@ class TestSession8Plans:
         assert _exchanges(plan) == 1, plan
         assert "Join" not in plan, plan
         assert "partial_sum" in plan or "HashAggregate" in plan, plan
-
-    def test_audience_overlap_one_user_exchange_no_smj(self, spark, sf_dir):
-        """ONE groupBy(user) exchange builds the bounded per-user type
-        set; pair expansion is map-only and every downstream join is
-        broadcast-sized — no sort-merge join anywhere."""
-        from datatest_spark.operators import temporal
-
-        ev = spark.read.parquet(sf_dir + "/events.parquet")
-        plan = _plan(temporal.audience_overlap(ev))
-        assert "SortMergeJoin" not in plan, plan
-
-    def test_path_trigrams_single_window_no_smj(self, spark, sf_dir):
-        """Both lags ride one user-partitioned window; the model joins
-        are broadcast (tiny aggregates), never sort-merge."""
-        from datatest_spark.operators import temporal
-
-        ev = spark.read.parquet(sf_dir + "/events.parquet")
-        plan = _plan(temporal.path_trigrams(ev))
-        assert "SortMergeJoin" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        # the events are scanned exactly ONCE: trigram counts, the
-        # first-order model and both denominators all derive from one
-        # tiny (t1, t2, t3) aggregate (window sums over |types|^3 rows)
-        import re as _re
-
-        assert len(_re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
 
 
 class TestSemanticContaminationPlan:
@@ -908,15 +848,6 @@ class TestSession10Plans:
         assert "Join" not in plan, plan
         assert "Window" not in plan, plan
 
-    def test_kmv_bottom_k_uses_window_group_limit(self, spark, docs):
-        """The per-group rank filter must compile to WindowGroupLimit so
-        each task forwards only its local bottom-k — no task ever sorts
-        a full group's distinct-hash set."""
-        from datatest_spark.operators import sketch
-
-        plan = _plan(sketch.kmv_distinct(docs, "doc_id", "source", k=64))
-        assert "WindowGroupLimit" in plan, plan
-
     def test_burstiness_top_n_is_take_ordered(self, spark, docs):
         """Global top-n compiles to TakeOrderedAndProject (bounded
         per-task heaps), never a single-partition global sort; both
@@ -932,33 +863,8 @@ class TestSession10Plans:
         assert "TakeOrderedAndProject" in plan, plan
         assert "partial_count" in plan, plan
 
-    def test_k_anonymity_profile_two_aggs_no_window(self, spark, docs):
-        """Class agg (one keyed Exchange + the distinct expansion) plus
-        a scalar pass: no Window, no Join anywhere in the plan."""
-        from datatest_spark.operators import privacy
-
-        plan = _plan(
-            privacy.k_anonymity_profile(
-                docs, ["source", "lang"], k=5,
-                sensitive_col="doc_id", l=2,
-            )
-        )
-        assert "Join" not in plan, plan
-        assert "Window" not in plan, plan
-
 
 class TestSession10PlansB:
-    def test_log2_histogram_one_exchange_no_window(self, spark, docs):
-        """The corpus-side sketch build is one map-side-combinable
-        groupBy: exactly ONE Exchange, no Window, no Join."""
-        from datatest_spark.operators import sketch
-
-        plan = _plan(sketch.log2_histogram(docs, "n_chars", "source"))
-        assert _exchanges(plan) == 1, plan
-        assert "Window" not in plan, plan
-        assert "Join" not in plan, plan
-        assert "partial_count" in plan, plan
-
     def test_split_balance_no_window_no_data_side_join(self, spark, docs):
         """Split assignment stays map-only; the audit aggregates then
         joins only the tiny |splits|x|groups| frames (broadcast)."""

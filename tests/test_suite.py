@@ -549,6 +549,45 @@ class TestOneCheckForm:
         assert all(v >= 0 for v in res.phases.values())
 
 
+class TestStatsCheckKeys:
+    """A bound on a stat the wide pass never computed is a configuration
+    error, not a pass; a computed stat that is NULL is skipped."""
+
+    def test_misspelled_stat_interval_key_raises(self, spark, seqs):
+        from datatest_spark.operators.checks import StatIntervalCheck
+
+        suite = north_star_suite(ALLOWED_SOURCES, extra_checks=[
+            StatIntervalCheck({"n_tok__mx": (None, 0)})])
+        with pytest.raises(ValueError, match="n_tok__mx.*n_tok__max"):
+            suite.run(seqs, run_id="stat_typo")
+
+    def test_null_rate_outside_stats_columns_raises(self, spark, seqs):
+        # north_star_suite keeps `tokens` out of the stats pass
+        suite = north_star_suite(ALLOWED_SOURCES, extra_checks=[
+            NullRateCheck({"tokens": 0.5})])
+        with pytest.raises(ValueError, match="tokens__nulls"):
+            suite.run(seqs, run_id="null_rate_unstatted")
+
+    def test_all_null_partition_is_skipped(self, spark):
+        from datatest_spark.operators.checks import StatIntervalCheck
+
+        df = spark.createDataFrame(
+            [(1, "web", 10), (2, "web", 20), (3, "wiki", None),
+             (4, "wiki", None)],
+            "doc_id long, source string, n_tok long",
+        )
+        suite = ValidationSuite(
+            [StatIntervalCheck({"n_tok__max": (None, 0)})],
+            partition_cols=("source",),
+            stats_columns=["n_tok"],
+        )
+        res = suite.run(df, run_id="stat_all_null")
+        rows = [(r["partition_key"], r["value"])
+                for r in res.violations.collect()]
+        assert len(rows) == 1 and "web" in rows[0][0], rows
+        assert rows[0][1] == "20.0"
+
+
 class TestFreshness:
     def test_stale_partition_flagged(self, spark):
         from datatest_spark.operators.checks import FreshnessCheck

@@ -4,7 +4,9 @@ Runs every ``queries()`` entry at sf0.01 on Spark AND the matching
 ``oracle_sql()`` on DuckDB (tables pre-registered as views), then
 compares row count, column names, and order-insensitive values (columns
 sorted by name, rows sorted, exact string/int equality, float equality
-to 1e-9). Usage:  python tools/check_oracles.py [name ...]
+to 1e-9). An oracle column typed HUGEINT fails: pandas reads it as
+float64, so its value hash can never match Spark's long (cast it to
+BIGINT in the oracle). Usage:  python tools/check_oracles.py [name ...]
 """
 
 from __future__ import annotations
@@ -80,12 +82,18 @@ def main(names=None):
             print("[rows-only] {0}: {1} rows".format(name, len(s_rows)))
             continue
         try:
-            res = con.execute(oracles[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = [tuple(r) for r in res.fetchall()]
+            rel = con.sql(oracles[name])
+            d_cols = list(rel.columns)
+            huge = [c for c, t in zip(d_cols, rel.types) if str(t) == "HUGEINT"]
+            d_rows = [tuple(r) for r in rel.fetchall()]
         except Exception as e:
             failures.append((name, "DUCKDB ERROR: {0}".format(e)))
             print("[FAIL-duckdb] {0}: {1}".format(name, str(e)[:300]))
+            continue
+        if huge:
+            failures.append((name, "HUGEINT columns {0}".format(huge)))
+            print("[FAIL-hugeint] {0}: oracle columns {1} are HUGEINT; "
+                  "cast them to BIGINT".format(name, huge))
             continue
         if sorted(s_cols) != sorted(d_cols):
             failures.append((name, "columns {0} vs {1}".format(s_cols, d_cols)))
