@@ -254,7 +254,6 @@ def q_suite_verdicts(spark, sf_dir):
                              id_col="doc_id"),
         ],
         partition_cols=("source",),
-        stats_columns=["doc_id", "lang"],
     )
     res = suite.run(d, run_id="driver")
     return res.verdicts.select(

@@ -14,7 +14,9 @@ Each check is a named object with a stable ``check_id`` and one form:
     set) write their own plan.
 ``stats_violations(spark, stats_rows)``
     Partition-level checks (``uses_stats``): violation row dicts derived
-    from the collected wide-agg stats.
+    from the collected wide-agg stats. Each declares the stats it reads
+    (``stat_names()``); the suite's wide pass computes ``n_rows`` plus
+    exactly the declared stats, so a stats row holds nothing else.
 
 ``df`` carries the ``partition_key`` column the suite attached. All plans
 stay JVM-side; the only pandas UDFs are the documented slow paths.
@@ -66,6 +68,10 @@ class BaseCheck(object):
         if conds is None:
             return None
         return fuse_row_conditions(df, [(self.check_id, conds)])
+
+    def stat_names(self) -> list:
+        """The ``<column>__<stat>`` names ``stats_violations`` reads."""
+        return []
 
     def stats_violations(self, spark, stats_rows) -> list:
         """Return violation row dicts derived from collected stats."""
@@ -215,14 +221,6 @@ class SchemaConformanceCheck(BaseCheck):
         return out
 
 
-def _stat(row, name, check_id):
-    """``row[name]``; a stat the pass never computed raises ValueError."""
-    if name not in row:
-        raise ValueError("%s: stat %r was not computed; available stats: %s" % (
-            check_id, name, ", ".join(sorted(set(row) - {"partition_key"}))))
-    return row[name]
-
-
 class NullRateCheck(BaseCheck):
     """Per-partition null-rate thresholds, derived from the wide agg (A10)."""
 
@@ -233,6 +231,9 @@ class NullRateCheck(BaseCheck):
         # {column: max allowed null fraction}
         self.max_null_rate = dict(max_null_rate)
 
+    def stat_names(self):
+        return [col + "__nulls" for col in self.max_null_rate]
+
     def stats_violations(self, spark, stats_rows):
         out = []
         for row in stats_rows:
@@ -240,7 +241,7 @@ class NullRateCheck(BaseCheck):
             if not n:
                 continue
             for col, limit in self.max_null_rate.items():
-                nulls = _stat(row, col + "__nulls", self.check_id)
+                nulls = row[col + "__nulls"]
                 if nulls is None:
                     continue
                 rate = nulls / n
@@ -261,8 +262,9 @@ class NullRateCheck(BaseCheck):
 
 
 class StatIntervalCheck(BaseCheck):
-    """Partition-level bounds on any stat the wide agg produced,
-    e.g. n_tok__min >= 1, n_tok__max <= 4096 (A10 consumers)."""
+    """Partition-level bounds on stats of the ``operators.stats``
+    vocabulary, e.g. n_tok__min >= 1, n_tok__max <= 4096 (A10
+    consumers); the bound keys are the stats the wide pass computes."""
 
     check_id = "stat_interval"
     uses_stats = True
@@ -271,11 +273,14 @@ class StatIntervalCheck(BaseCheck):
         # {stat_name: (lower|None, upper|None)}
         self.bounds = dict(bounds)
 
+    def stat_names(self):
+        return list(self.bounds)
+
     def stats_violations(self, spark, stats_rows):
         out = []
         for row in stats_rows:
             for stat, (lo, hi) in self.bounds.items():
-                v = _stat(row, stat, self.check_id)
+                v = row[stat]
                 if v is None:
                     continue
                 bad_lo = lo is not None and v < lo
@@ -297,51 +302,20 @@ class StatIntervalCheck(BaseCheck):
 
 
 class UniquenessCheck(BaseCheck):
-    """doc_id uniqueness (A8/O3) with the C1 HLL screen.
-
-    ``screen_partitions(stats_rows)`` flags partitions whose
-    ``count - approx_distinct`` exceeds the HLL error margin; the exact
-    groupBy runs only over those partitions (SURVEY §7.3.3). At 10^12 rows
-    this turns a full 10^12-key shuffle into a shuffle over offending
-    partitions only; with Iceberg bucket(doc_id) layout the exact pass is
-    shuffle-free in prod.
-
-    Sensitivity caveat (which is why ``exact=True`` is the default): the
-    HLL estimate carries ~rsd relative error, so a duplicate rate below
-    the margin (e.g. 0.1% dups vs 5% rsd) is invisible to the screen.
-    Use ``exact="auto"`` only where the duplicate rates worth catching
-    exceed the margin, or where the bucketed layout makes the exact pass
-    cheap enough to trigger liberally.
+    """Exact per-partition uniqueness of ``column`` (A8/O3): one
+    ``groupBy(partition_key, column)``; a value seen k times yields k-1
+    ``extra`` rows. Nulls are not values.
     """
 
     check_id = "uniqueness"
-    uses_stats = True
 
-    def __init__(self, column="doc_id", hll_rsd_margin=0.05, exact=True):
+    def __init__(self, column="doc_id"):
         self.column = column
-        self.margin = hll_rsd_margin
-        self.exact = exact  # True | False | "auto"
 
-    def screen_partitions(self, stats_rows):
-        suspects = []
-        for row in stats_rows:
-            n = (row["n_rows"] or 0) - (row.get(self.column + "__nulls") or 0)
-            approx = row.get(self.column + "__approx_distinct")
-            if approx is None or n == 0:
-                continue
-            if n - approx > self.margin * n or (n - approx > 0 and n < 10_000):
-                suspects.append(row["partition_key"])
-        return suspects
-
-    def violations(self, df, only_partitions=None):
-        scoped = df
-        if only_partitions is not None:
-            if not only_partitions:
-                return None
-            scoped = df.filter(F.col("partition_key").isin(list(only_partitions)))
+    def violations(self, df):
         c = self.column
         counts = (
-            scoped.filter(F.col(c).isNotNull())
+            df.filter(F.col(c).isNotNull())
             .groupBy("partition_key", c)
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") > 1)
@@ -706,9 +680,8 @@ class FreshnessCheck(BaseCheck):
     per partition, max(ts) must be no older than ``max_age`` relative to
     ``as_of``, and optionally min(ts) no earlier than ``min_ts``.
 
-    Consumes the wide-agg stats when the timestamp column was included
-    (epoch-millis min/max land there via numeric casting); otherwise runs
-    its own tiny agg through ``violations()``.
+    Runs its own small per-partition min/max agg through
+    ``violations()``; it reads no wide-agg stats.
     """
 
     check_id = "freshness"

@@ -1,10 +1,13 @@
 """Single wide aggregation pass — per-partition column statistics (SURVEY C1).
 
-The whole stats family (count, null-rate, distinct-via-HLL, min/max,
-quantiles — BASELINE.json north_star) is computed in ONE
-``groupBy(partition_key).agg(...)`` so the suite costs ~one shuffle at
-10^12 rows. Catalyst performs map-side partial aggregation for every
-expression here, so the 100x ``web`` skew is combined before the shuffle.
+The stats family (count, null-rate, distinct-via-HLL, min/max/avg,
+quantiles — BASELINE.json north_star) has one vocabulary,
+``_stat_vocab``. ``column_stats`` computes all of it for the requested
+columns; the suite's wide pass computes ``n_rows`` plus only the stats
+its checks declare (``declared_stat_exprs``). Either way it is ONE
+``groupBy(partition_key).agg(...)``, ~one shuffle at 10^12 rows.
+Catalyst performs map-side partial aggregation for every expression
+here, so the 100x ``web`` skew is combined before the shuffle.
 """
 
 from __future__ import annotations
@@ -38,43 +41,53 @@ def partition_key_col(partition_cols):
     return out
 
 
-def _stat_exprs(df: DataFrame, columns, quantiles):
-    """Stat expressions per column, typed:
+def _stat_vocab(dtype):
+    """The stats one column of ``dtype`` supports, as {stat: function
+    from the column name to its aggregate Column}, in output order. A
+    stat's name in a stats row is ``<column>__<stat>``.
 
       * every column: null count;
       * scalar columns: HLL distinct (approx_count_distinct);
-      * numeric columns: min/max/avg + approx quantiles.
+      * numeric columns: min/max/avg;
+      * array columns: avg length.
 
     Array/map/struct columns deliberately get NO HLL: hashing a ~300-int
     token array per row for a distinct estimate is the single most
     expensive expression in the pass and its value is marginal (distinct
     *arrays* ~ distinct doc_ids); measured on 4M rows it flipped the agg
-    from CPU-bound to GC-bound and inverted thread scaling. Arrays get a
-    cheap avg-length stat instead.
+    from CPU-bound to GC-bound and inverted thread scaling.
     """
-    exprs = [F.count(F.lit(1)).alias("n_rows")]
+    vocab = {"nulls": lambda c: F.sum(F.col(c).isNull().cast("long"))}
+    if isinstance(dtype, T.ArrayType):
+        vocab["avg_size"] = lambda c: F.avg(F.size(F.col(c)))
+    elif not isinstance(dtype, (T.MapType, T.StructType)):
+        vocab["approx_distinct"] = lambda c: F.approx_count_distinct(c)
+        if isinstance(dtype, _NUMERIC):
+            vocab["min"] = lambda c: F.min(c).cast("double")
+            vocab["max"] = lambda c: F.max(c).cast("double")
+            vocab["avg"] = lambda c: F.avg(F.col(c).cast("double"))
+    return vocab
+
+
+def declared_stat_exprs(df: DataFrame, names):
+    """``n_rows`` plus one aggregate per stat name ``<column>__<stat>``
+    of ``names``, for the suite's wide pass. A name whose column is not
+    in ``df`` or whose stat that column does not support raises
+    ValueError (plan time, before any job). The quantiles array is not
+    declarable: a stats check bounds scalars."""
     types = dict((f.name, f.dataType) for f in df.schema.fields)
-    for c in columns:
-        exprs.append(
-            F.sum(F.col(c).isNull().cast("long")).alias(c + "__nulls")
-        )
-        dt = types[c]
-        if isinstance(dt, (T.ArrayType,)):
-            exprs.append(F.avg(F.size(F.col(c))).alias(c + "__avg_size"))
-            continue
-        if isinstance(dt, (T.MapType, T.StructType)):
-            continue
-        exprs.append(F.approx_count_distinct(c).alias(c + "__approx_distinct"))
-        if isinstance(dt, _NUMERIC):
-            exprs.append(F.min(c).cast("double").alias(c + "__min"))
-            exprs.append(F.max(c).cast("double").alias(c + "__max"))
-            exprs.append(F.avg(F.col(c).cast("double")).alias(c + "__avg"))
-            if quantiles:
-                exprs.append(
-                    F.percentile_approx(F.col(c).cast("double"), quantiles).alias(
-                        c + "__quantiles"
-                    )
-                )
+    exprs = [F.count(F.lit(1)).alias("n_rows")]
+    for name in names:
+        col, _sep, stat = name.rpartition("__")
+        if col not in types:
+            raise ValueError("stat %r: no column %r (columns: %s)" % (
+                name, col, ", ".join(df.columns)))
+        vocab = _stat_vocab(types[col])
+        if stat not in vocab:
+            raise ValueError("stat %r is not a stat of column %r; its "
+                             "stats are: %s" % (name, col, ", ".join(
+                                 col + "__" + s for s in vocab)))
+        exprs.append(vocab[stat](col).alias(name))
     return exprs
 
 
@@ -84,10 +97,25 @@ def column_stats(
     columns=None,
     quantiles=DEFAULT_QUANTILES,
 ) -> DataFrame:
-    """One wide agg: per-partition stats for every requested column (C1)."""
+    """One wide agg (C1): per partition, ``n_rows`` plus every stat of
+    each requested column, and for numeric columns the approx
+    ``quantiles`` array (``<column>__quantiles``)."""
     columns = list(columns) if columns is not None else list(df.columns)
+    types = dict((f.name, f.dataType) for f in df.schema.fields)
+    exprs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in columns:
+        exprs.extend(
+            build(c).alias(c + "__" + stat)
+            for stat, build in _stat_vocab(types[c]).items()
+        )
+        if quantiles and isinstance(types[c], _NUMERIC):
+            exprs.append(
+                F.percentile_approx(F.col(c).cast("double"), quantiles).alias(
+                    c + "__quantiles"
+                )
+            )
     keyed = df.withColumn("partition_key", partition_key_col(partition_cols))
-    return keyed.groupBy("partition_key").agg(*_stat_exprs(df, columns, quantiles))
+    return keyed.groupBy("partition_key").agg(*exprs)
 
 
 def group_shares(

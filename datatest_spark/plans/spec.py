@@ -8,7 +8,6 @@ suite can be versioned as data and built identically on any driver::
 
     spec = {
         "partition_cols": ["source"],
-        "stats_columns": ["doc_id", "tokens", "n_tok", "source"],
         "checks": [
             {"type": "schema_conformance",
              "fields": [{"name": "doc_id", "type": "string"},
@@ -349,9 +348,6 @@ def _build_acceptance(spec, dataframes):
 
 # -- entry points ----------------------------------------------------------
 
-_SUITE_KEYS = ("partition_cols", "stats_columns", "quantiles")
-
-
 def suite_from_spec(spec, dataframes=None):
     """Build a :class:`ValidationSuite` from a JSON-able spec dict.
 
@@ -364,7 +360,7 @@ def suite_from_spec(spec, dataframes=None):
 
     if not isinstance(spec, dict):
         raise SpecError("suite spec must be a dict, got %r" % type(spec))
-    unknown = set(spec) - set(_SUITE_KEYS) - {"checks", "acceptances"}
+    unknown = set(spec) - {"partition_cols", "checks", "acceptances"}
     if unknown:
         raise SpecError("unknown suite keys %s (typo'd config must not be "
                         "ignored)" % sorted(unknown))
@@ -382,11 +378,9 @@ def suite_from_spec(spec, dataframes=None):
         checks.append(_build_check(c, dataframes))
     acceptances = [_build_acceptance(a, dataframes)
                    for a in spec.get("acceptances", [])]
-    kwargs = {k: spec[k] for k in _SUITE_KEYS if k in spec}
-    if "partition_cols" in kwargs:
-        kwargs["partition_cols"] = list(kwargs["partition_cols"])
-    if "quantiles" in kwargs:
-        kwargs["quantiles"] = list(kwargs["quantiles"])
+    kwargs = {}
+    if "partition_cols" in spec:
+        kwargs["partition_cols"] = list(spec["partition_cols"])
     return ValidationSuite(checks, acceptances=acceptances, **kwargs)
 
 

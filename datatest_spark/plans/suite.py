@@ -1,11 +1,12 @@
 """Validation suite runner (SURVEY §3.1 engine pipeline, §7.0 runner.py).
 
 Plans one job per *shuffle family* (SURVEY §3.1): (a) the single wide
-stats aggregation (C1) feeding all partition-level checks, (b) the
-anti-join family, (c) per-row predicate scans — then unions the violation
-plans, applies distributed acceptances, computes per-partition verdicts
-(C4) and writes the checkpoint manifest (C3) so interrupted runs resume by
-anti-joining the partition list against completed manifest entries.
+stats aggregation (C1) — ``n_rows`` plus the stats the partition-level
+checks declare, (b) the anti-join family, (c) per-row predicate scans —
+then unions the violation plans, applies distributed acceptances,
+computes per-partition verdicts (C4) and writes the checkpoint manifest
+(C3) so interrupted runs resume by anti-joining the partition list
+against completed manifest entries.
 """
 
 from __future__ import annotations
@@ -21,13 +22,9 @@ from ..differences import ValidationError
 from ..schema import MANIFEST_SCHEMA, VERDICT_SCHEMA, VIOLATION_SCHEMA
 from ..session import local_frame
 from ..validation import _rows_to_differences
-from ..operators.checks import (
-    SchemaConformanceCheck,
-    UniquenessCheck,
-    fuse_row_conditions,
-)
+from ..operators.checks import SchemaConformanceCheck, fuse_row_conditions
 from ..operators.drift import DriftCheck
-from ..operators.stats import _stat_exprs, partition_key_col, DEFAULT_QUANTILES
+from ..operators.stats import declared_stat_exprs, partition_key_col
 
 
 class SuiteResult(object):
@@ -36,7 +33,9 @@ class SuiteResult(object):
         self.run_id = run_id
         self.violations = violations      # DataFrame (post-acceptance)
         self.verdicts = verdicts          # DataFrame
-        self.stats_rows = stats_rows      # list[dict] collected wide-agg stats
+        # list[dict], one per partition: partition_key, n_rows and the
+        # stats the checks declare (BaseCheck.stat_names), nothing else
+        self.stats_rows = stats_rows
         self.wall_ms = wall_ms
         self.n_rows_total = n_rows_total
         # {phase: wall seconds}, in run order (see ValidationSuite.run)
@@ -71,15 +70,14 @@ class ValidationSuite(object):
 
     ``checks`` are operators/checks.py objects; ``acceptances`` are
     acceptance objects applied distributed (SURVEY §3.2) before verdicts.
+    The wide stats pass computes ``n_rows`` plus the stats the checks
+    declare, so it reads only the columns those stats name.
     """
 
-    def __init__(self, checks, partition_cols=("source",), acceptances=None,
-                 stats_columns=None, quantiles=DEFAULT_QUANTILES):
+    def __init__(self, checks, partition_cols=("source",), acceptances=None):
         self.checks = list(checks)
         self.partition_cols = list(partition_cols)
         self.acceptances = list(acceptances or [])
-        self.stats_columns = stats_columns
-        self.quantiles = quantiles
 
     # -- manifest / resume (C3) -------------------------------------------
     @staticmethod
@@ -232,6 +230,10 @@ class ValidationSuite(object):
         keyed = df.withColumn(
             "partition_key", partition_key_col(self.partition_cols)
         )
+        # built before any job: a stat no column supports raises here
+        stat_exprs = declared_stat_exprs(df, dict.fromkeys(
+            n for c in self.checks if c.uses_stats for n in c.stat_names()
+        ))
 
         input_files_hash = None
         try:
@@ -306,14 +308,9 @@ class ValidationSuite(object):
         # (a) the single wide aggregation pass (C1): Spark's map-side
         # partial aggregation combines every metric before the one
         # shuffle, which absorbs a hot partition key
-        stats_cols = self.stats_columns or [
-            c for c in df.columns if c != "partition_key"
-        ]
         stats_rows = [
             r.asDict()
-            for r in keyed.groupBy("partition_key")
-            .agg(*_stat_exprs(df, stats_cols, self.quantiles))
-            .collect()
+            for r in keyed.groupBy("partition_key").agg(*stat_exprs).collect()
         ]
         _mark("stats_pass")
         # resumed partitions count toward the total: a monitor comparing
@@ -336,16 +333,6 @@ class ValidationSuite(object):
                     driver_rows.append(d)
             elif isinstance(check, DriftCheck):
                 driver_rows.extend(check.drift_violations(keyed))
-            elif isinstance(check, UniquenessCheck):
-                if check.exact == "auto":
-                    suspects = check.screen_partitions(stats_rows)
-                    plan = check.violations(keyed, only_partitions=suspects)
-                elif check.exact:
-                    plan = check.violations(keyed)
-                else:
-                    plan = None
-                if plan is not None:
-                    plans.append(plan)
             elif check.uses_stats:
                 driver_rows.extend(check.stats_violations(spark, stats_rows))
             else:
@@ -585,9 +572,9 @@ def north_star_suite(
     extra_checks=None,
 ):
     """The full constraint suite of the north star (BASELINE.json:6):
-    schema conformance, per-column stats thresholds, uniqueness (HLL
-    screen + exact), referential membership, n_tok consistency, token
-    range, optional drift and token-equality-vs-reference.
+    schema conformance, per-column stats thresholds, exact uniqueness,
+    referential membership, n_tok consistency, token range, optional
+    drift and token-equality-vs-reference.
     ``extra_checks`` appends caller-supplied check objects (e.g. a
     row-level ``LengthBoundCheck``) without changing the default
     verdict surface."""
@@ -603,18 +590,6 @@ def north_star_suite(
     )
     from ..schema import INPUT_SCHEMA
 
-    # DECODE-ONCE DISCIPLINE: the fat array column (`tokens`, ~95% of
-    # the table's bytes) is deliberately absent from the stats pass.
-    # Array decode saturates a single box's memory bandwidth at ~2
-    # threads (phase-profiled: stats_pass 46s at local[2] vs 40s at
-    # local[8] when tokens rode along — 0.29 thread-scaling efficiency
-    # — vs 0.89 for the violations scan), and the stats pass only ever
-    # used it for a null count. Detection coverage is unchanged and
-    # strictly more addressable: a null-tokens row with n_tok set is an
-    # `invalid` ROW from ConsistencyCheck (names the doc_id), and a
-    # null-tokens row with n_tok null is caught by n_tok's null-rate.
-    # `tokens` is decoded exactly once, in the row-check scan that
-    # genuinely needs its values (token range + consistency).
     checks = [
         SchemaConformanceCheck(INPUT_SCHEMA),
         NullRateCheck({c: max_null_rate for c in ("doc_id", "n_tok", "source")}),
@@ -637,5 +612,4 @@ def north_star_suite(
         checks,
         partition_cols=("source",),
         acceptances=acceptances,
-        stats_columns=["doc_id", "n_tok", "source"],
     )

@@ -146,13 +146,6 @@ def read_csv(spark: SparkSession, path: str, schema=None, **opts) -> DataFrame:
     return reader.options(**opts).csv(path)
 
 
-def read_json(spark: SparkSession, path: str, schema=None, **opts) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.options(**opts).json(path)
-
-
 def read_orc(spark: SparkSession, path: str, **opts) -> DataFrame:
     """ORC source — native Spark reader, same pushdown/pruning behavior
     as parquet (PushedFilters reach the ORC scan). Options route through

@@ -294,7 +294,6 @@ class TestPrepareCorpusJob:
 
 SPEC_BASE = {
     "partition_cols": ["source"],
-    "stats_columns": ["doc_id", "tokens", "n_tok", "source"],
     "checks": [
         {"type": "uniqueness", "column": "doc_id"},
         {"type": "referential", "column": "source",

@@ -22,9 +22,6 @@ N = 2000
 # the north-star suite, as data (mirrors north_star_suite's defaults)
 NORTH_SPEC = {
     "partition_cols": ["source"],
-    # decode-once discipline: the fat array column stays out of the
-    # stats pass (north_star_suite's default; see its docstring)
-    "stats_columns": ["doc_id", "n_tok", "source"],
     "checks": [
         {"type": "schema_conformance", "fields": [
             {"name": "doc_id", "type": "string"},
@@ -141,6 +138,20 @@ class TestSpecErrors:
         with pytest.raises(SpecError, match="unknown suite keys"):
             suite_from_spec({"checks": [{"type": "uniqueness"}],
                              "partiton_cols": ["source"]})
+
+    def test_quantiles_key_is_loud(self):
+        # the stats pass computes what the checks declare; a spec cannot
+        # ask it for more
+        with pytest.raises(SpecError, match="unknown suite keys"):
+            suite_from_spec({"checks": [{"type": "uniqueness"}],
+                             "quantiles": [0.5]})
+
+    def test_uniqueness_has_no_exact_option(self):
+        # uniqueness is always exact; "exact": false once built a check
+        # whose every partition read "pass"
+        with pytest.raises(SpecError, match="exact"):
+            suite_from_spec({"checks": [
+                {"type": "uniqueness", "exact": False}]})
 
     def test_empty_checks(self):
         with pytest.raises(SpecError, match="non-empty 'checks'"):

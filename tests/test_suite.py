@@ -561,12 +561,23 @@ class TestStatsCheckKeys:
         with pytest.raises(ValueError, match="n_tok__mx.*n_tok__max"):
             suite.run(seqs, run_id="stat_typo")
 
-    def test_null_rate_outside_stats_columns_raises(self, spark, seqs):
-        # north_star_suite keeps `tokens` out of the stats pass
-        suite = north_star_suite(ALLOWED_SOURCES, extra_checks=[
-            NullRateCheck({"tokens": 0.5})])
-        with pytest.raises(ValueError, match="tokens__nulls"):
-            suite.run(seqs, run_id="null_rate_unstatted")
+    def test_null_rate_computes_its_declared_column(self, spark, seqs):
+        # `tokens` is in no north-star stat; declaring it computes it
+        res = north_star_suite(ALLOWED_SOURCES, extra_checks=[
+            NullRateCheck({"tokens": 0.0})]).run(seqs, run_id="null_tokens")
+        res.unpersist()
+        want = {}
+        for r in seqs.select("source", "tokens").collect():
+            pk = "source=" + (r["source"] if r["source"] is not None
+                              else "__null__")
+            want[pk] = want.get(pk, 0) + (r["tokens"] is None)
+        assert {r["partition_key"]: r["tokens__nulls"]
+                for r in res.stats_rows} == want
+        got = {r["partition_key"]: r["status"]
+               for r in res.verdicts.collect()
+               if r["check_id"] == "null_rate"}
+        assert got == {pk: "fail" if n else "pass" for pk, n in want.items()}
+        assert "fail" in got.values() and "pass" in got.values()
 
     def test_all_null_partition_is_skipped(self, spark):
         from datatest_spark.operators.checks import StatIntervalCheck
@@ -579,13 +590,85 @@ class TestStatsCheckKeys:
         suite = ValidationSuite(
             [StatIntervalCheck({"n_tok__max": (None, 0)})],
             partition_cols=("source",),
-            stats_columns=["n_tok"],
         )
         res = suite.run(df, run_id="stat_all_null")
         rows = [(r["partition_key"], r["value"])
                 for r in res.violations.collect()]
         assert len(rows) == 1 and "web" in rows[0][0], rows
         assert rows[0][1] == "20.0"
+
+
+class TestDeclaredStats:
+    """The suite's wide pass computes ``n_rows`` plus exactly the stats
+    its checks declare, and rejects an undeclarable stat at plan time."""
+
+    def test_north_star_stats_pass(self, spark, seqs, tmp_path,
+                                   monkeypatch):
+        path = str(tmp_path / "t")
+        seqs.write.parquet(path)
+        table = spark.read.parquet(path)
+        frame_cls = type(table)
+        plans = []
+        collect = frame_cls.collect
+
+        def recording_collect(self):
+            rows = collect(self)
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return rows
+
+        monkeypatch.setattr(frame_cls, "collect", recording_collect)
+        res = north_star_suite(ALLOWED_SOURCES).run(table, run_id="stat_plan")
+        monkeypatch.undo()
+        res.unpersist()
+        assert res.stats_rows
+        for row in res.stats_rows:
+            assert set(row) == {
+                "partition_key", "n_rows", "doc_id__nulls", "n_tok__nulls",
+                "source__nulls", "n_tok__min", "n_tok__max",
+            }
+        (plan,) = [p for p in plans if "n_rows" in p]
+        assert "isFinalPlan=true" in plan, plan
+        assert "HashAggregate" in plan and "ObjectHashAggregate" not in plan
+        reads = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+        assert reads, plan
+        assert all("tokens" not in r and "n_tok" in r for r in reads), reads
+
+    def test_hll_distinct_is_declarable(self, spark, seqs):
+        from datatest_spark.operators.checks import StatIntervalCheck
+
+        res = ValidationSuite([StatIntervalCheck({
+            "doc_id__approx_distinct": (None, None)})]).run(
+                seqs, run_id="stat_hll")
+        res.unpersist()
+        exact = {
+            r["pk"]: r["n"] for r in seqs.groupBy(
+                F.concat(F.lit("source="),
+                         F.coalesce("source", F.lit("__null__"))).alias("pk")
+            ).agg(F.countDistinct("doc_id").alias("n")).collect()
+        }
+        assert sorted(r["partition_key"] for r in res.stats_rows) == sorted(
+            exact)
+        for r in res.stats_rows:
+            assert set(r) == {"partition_key", "n_rows",
+                              "doc_id__approx_distinct"}
+            assert r["doc_id__approx_distinct"] == pytest.approx(
+                exact[r["partition_key"]], rel=0.1)
+
+    @pytest.mark.parametrize("bad", [
+        "n_tok__mx", "n_tok__quantiles", "nope__nulls", "tokens__min",
+    ])
+    def test_undeclarable_stat_raises_before_any_job(self, spark, seqs, bad):
+        from datatest_spark.operators.checks import StatIntervalCheck
+
+        suite = ValidationSuite([StatIntervalCheck({bad: (None, 0)})])
+        sc = spark.sparkContext
+        sc.setJobGroup("bad-stat-probe", "plan an undeclarable stat")
+        try:
+            with pytest.raises(ValueError, match=re.escape(bad)):
+                suite.run(seqs, run_id="bad_stat")
+        finally:
+            sc.setJobGroup("bad-stat-probe-done", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("bad-stat-probe")) == []
 
 
 class TestFreshness:
@@ -674,7 +757,6 @@ class TestGlobalViolationVerdicts:
         suite = ValidationSuite(
             [SchemaConformanceCheck(INPUT_SCHEMA)],
             partition_cols=("source",),
-            stats_columns=["doc_id"],
         )
         res = suite.run(bad, run_id="schema-fail")
         assert res.failed
@@ -759,7 +841,6 @@ class TestLengthBoundCheck:
         suite = ValidationSuite(
             [LengthBoundCheck(min_len=1, max_len=4096)],
             partition_cols=("source",),
-            stats_columns=["n_tok"],
         )
         res = suite.run(self._df(spark), run_id="lb1")
         rows = {r["doc_id"]: r for r in res.violations.collect()}
@@ -861,7 +942,6 @@ class TestTokenBoundaryCheck:
         suite = ValidationSuite(
             [TokenBoundaryCheck(bos_id=1, eos_id=2)],
             partition_cols=("source",),
-            stats_columns=[],
         )
         res = suite.run(self._df(spark), run_id="tb1")
         rows = {r["doc_id"]: r for r in res.violations.collect()}
@@ -936,7 +1016,6 @@ class TestFunctionalDependencyCheck:
         suite = ValidationSuite(
             [FunctionalDependencyCheck("dom", "lang")],
             partition_cols=("source",),
-            stats_columns=["doc_id"],
         )
         res = suite.run(self._df(spark), run_id="fd1")
         rows = res.violations.collect()
@@ -964,7 +1043,6 @@ class TestFunctionalDependencyCheck:
             [FunctionalDependencyCheck("dom", "lang",
                                        max_violation_rate=0.5)],
             partition_cols=("source",),
-            stats_columns=["doc_id"],
         )
         res = suite.run(self._df(spark), run_id="fd2")
         # 1 violating row out of 3 for key 'a' = 0.33 <= 0.5 -> clean
@@ -996,7 +1074,6 @@ class TestBenfordCheck:
         suite = ValidationSuite(
             [BenfordCheck("v")],
             partition_cols=("source",),
-            stats_columns=["v"],
         )
         res = suite.run(df, run_id="bf1")
         rows = {r["partition_key"]: r for r in res.violations.collect()}
@@ -1020,7 +1097,6 @@ class TestBenfordCheck:
         suite = ValidationSuite(
             [BenfordCheck("v", min_rows=100)],
             partition_cols=("source",),
-            stats_columns=["v"],
         )
         res = suite.run(df, run_id="bf2")
         assert res.violations.count() == 0 and not res.failed

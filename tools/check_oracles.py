@@ -15,7 +15,7 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # override with CHECK_SF_DIR to spot-check parity at other scales
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
