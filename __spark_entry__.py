@@ -8,8 +8,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 Every query is an operator of the engine (SURVEY.md §2 / the
 training-data pipeline ops); Spark-side column aliases match the oracle
 SQL exactly. Queries without an oracle entry are genuinely
-approximate/non-SQL ops (LSH candidates, IVF ANN, SimHash) and get the
-rows-only check.
+approximate/non-SQL ops (SimHash, DEFLATE) and get the rows-only
+check.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datatest_spark.operators import dedup, similarity, text
+from datatest_spark.operators import dedup, text
 
 
 def _t(spark, sf_dir, name):
@@ -379,17 +379,6 @@ def q_quantile_shift(spark, sf_dir):
     )
 
 
-def q_ann_recall(spark, sf_dir):
-    """Recall@3 of the md5-centroid IVF index vs exact brute force
-    (similarity.ann_recall_audit) — both search passes and the recall
-    join reproduced end-to-end by the DuckDB oracle."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return similarity.ann_recall_audit(
-        e, q, k=3, n_centroids=8, nprobe=4, centroid_hash="md5"
-    )
-
-
 def q_percentile_rank(spark, sf_dir):
     """Within-source percentile rank of n_chars
     (stats.percentile_rank_normalize, exact CUME_DIST form — the
@@ -436,67 +425,12 @@ def q_chain_collapse(spark, sf_dir):
     return dedup.chain_collapse_audit(d, k=5, threshold=0.5, df_cap=1000)
 
 
-def q_hubness(spark, sf_dir):
-    """k-NN in-degree profile (similarity.hubness_audit): hub/antihub
-    skew of the embedding space, the silent failure mode of semantic
-    dedup and ANN at high dimension; every corpus point gets a row,
-    in_degree 0 = antihub."""
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.hubness_audit(e, k=10)
-
-
-def q_dup_embedding_check(spark, sf_dir):
-    """Cross-modal invariant (similarity.dup_embedding_consistency):
-    normalization-identical documents must embed near-identically —
-    cosine(member, surviving representative) per dup group, fixed-point
-    mean. Group key mirrors normalized_dup_groups (normalize + first
-    80 chars)."""
-    d = _t(spark, sf_dir, "documents")
-    e = _t(spark, sf_dir, "embeddings")
-    key = F.substring(text.normalize_text(), 1, 80)
-    return similarity.dup_embedding_consistency(d, e, text_col=key)
-
-
-def q_embedding_covariance(spark, sf_dir):
-    """Upper-triangle covariance/correlation matrix of the embedding
-    space (similarity.embedding_covariance): the shape-of-the-cloud
-    lens — a collapsing off-diagonal means the encoder is folding the
-    space, which kills ANN recall before any centroid moves.
-    Fixed-point bigint moments -> bit-exact SQL oracle; ONE map-only
-    scan reduced to a single row."""
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_covariance(e)
-
-
 def q_prefix_jaccard_pairs(spark, sf_dir):
     """Lossless prefix-filtered exact Jaccard join: the oracle is the
     plain capped exact join at the same (k, threshold, df_cap) — the
     losslessness claim IS the oracle contract."""
     d = _t(spark, sf_dir, "documents")
     return dedup.prefix_jaccard_pairs(d, k=5, threshold=0.6, df_cap=1000)
-
-
-def q_embedding_norms(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    v = similarity.as_double(F.col("embedding"))
-    return e.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(similarity.l2_norm(v)), 3).alias("avg_norm"),
-    )
-
-
-def q_cosine_threshold_pairs(spark, sf_dir):
-    # exact=True: this entry is the oracle-checked exactness baseline; the
-    # library default is the LSH-prefiltered scale path (parity-tested in
-    # tests/test_pipeline.py at near-dup thresholds).
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.threshold_pairs(e, threshold=0.35, max_ids=200, exact=True)
-
-
-def q_cosine_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk(e, q, k=3)
 
 
 def q_drift_psi(spark, sf_dir):
@@ -615,22 +549,6 @@ def q_rollup_revenue(spark, sf_dir):
     )
 
 
-def q_embedding_dedup_survivors(spark, sf_dir):
-    """Embedding-cosine near-dup dedup end-to-end: cosine>=0.35 pairs ->
-    connected components -> keep the min-id representative per cluster.
-    (0.35 on the random-embedding fixture stands in for the ~0.9 of a
-    real near-dup corpus; the exact pair form keeps the oracle exact.)"""
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    pairs = similarity.threshold_pairs(e, threshold=0.35, exact=True).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-    )
-    clusters = dedup.dedup_clusters(pairs)
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias("vec_id")
-    )
-    return e.join(drop, "vec_id", "left_anti").select("vec_id", "label")
-
-
 def q_exact_quantiles(spark, sf_dir):
     """Exact continuous quantiles per group (A10 stats-family, exact
     variant of the approx_percentile sketch used in the wide pass)."""
@@ -674,26 +592,6 @@ def q_simhash_md5_signatures(spark, sf_dir):
     )
     return d.select(
         "doc_id", dedup.simhash60_md5(F.col("text"), 3).alias("simhash60")
-    )
-
-
-def q_ivf_ann_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(e, q, k=3, n_centroids=8, nprobe=4)
-
-
-def q_ivf_md5_topk(spark, sf_dir):
-    """IVF top-k with the md5-based centroid pick — same bucketed probe
-    algorithm as ivf_ann_topk, but every stage (stratified centroid
-    choice, nearest-centroid assignment, probe selection, in-bucket
-    top-k) is reproduced step-for-step by the DuckDB oracle, so the IVF
-    pipeline is value-checked end-to-end (the production variant stays
-    on xxhash64 and is rows-only + recall-tested)."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(
-        e, q, k=3, n_centroids=8, nprobe=4, centroid_hash="md5"
     )
 
 
@@ -1467,22 +1365,6 @@ def q_quality_gate(spark, sf_dir):
     )
 
 
-def q_kmeans_clusters(spark, sf_dir):
-    """Lloyd k-means semantic clustering
-    (operators/similarity.kmeans_assign): k=8, two assign->update
-    rounds from the md5-stratified init. Centroid updates sum
-    FIXED-POINT per-dim values (floor(x*2^20) as bigint) so the means
-    are associative integer sums — parallelism-invariant and
-    reproduced exactly by the chained-CTE DuckDB oracle; assignment is
-    the map-only literal-centroid-array argmin (zero Exchange)."""
-    from datatest_spark.operators.similarity import kmeans_assign
-
-    e = _t(spark, sf_dir, "embeddings")
-    # dim is a schema fact of the embeddings table: passing it skips
-    # the majority-length inference pass
-    return kmeans_assign(e, k=8, iters=2, hash_fn="md5", dim=64)
-
-
 def q_token_contamination(spark, sf_dir):
     """Decontamination over TOKEN-ID arrays
     (operators/decontam.token_contamination) — the GPT-3 overlap rule
@@ -1505,35 +1387,6 @@ def q_token_contamination(spark, sf_dir):
     return decontam.token_contamination(
         corpus, bench, k=4, min_hits=1, hashed=False
     )
-
-
-def q_embedding_drift(spark, sf_dir):
-    """Embedding-space drift per label
-    (operators/similarity.embedding_group_drift): each label's mean
-    embedding vs the corpus mean (L2 displacement + cosine). Fixed-
-    point per-dim sums make both means exact integers-over-n — one
-    map-side-combinable exchange of |labels| rows, then driver-side
-    IEEE arithmetic in dimension order that DuckDB reproduces with
-    SUM(term ORDER BY j)."""
-    from datatest_spark.operators.similarity import embedding_group_drift
-
-    e = _t(spark, sf_dir, "embeddings")
-    return embedding_group_drift(e, group_col="label", dim=64)
-
-
-def q_centroid_matrix(spark, sf_dir):
-    """Pairwise label-centroid distance matrix
-    (operators/similarity.centroid_distance_matrix): L2 + cosine
-    between every pair of label means — the semantic twin of
-    q:source_cross_entropy's LM matrix and the release-over-release
-    diffable map of which sources are interchangeable. Same fixed-point
-    per-dim sums as q:embedding_drift (one |labels|-row exchange);
-    pair arithmetic on the driver in dimension order, reproduced by
-    DuckDB with SUM(term ORDER BY j)."""
-    from datatest_spark.operators.similarity import centroid_distance_matrix
-
-    e = _t(spark, sf_dir, "embeddings")
-    return centroid_distance_matrix(e, group_col="label", dim=64)
 
 
 def q_duplicate_spans(spark, sf_dir):
@@ -2346,79 +2199,6 @@ def q_doc_chunks(spark, sf_dir):
     return chunk_documents(d, size=120, stride=80, min_len=20)
 
 
-def q_quantize_embeddings(spark, sf_dir):
-    """Symmetric int8 embedding quantization
-    (operators/similarity.quantize_embeddings) — the storage half of an
-    IVF-SQ ANN index (4x smaller corpus). q = floor(x*127/max|x| + .5):
-    every step is plain IEEE double arithmetic, so DuckDB reproduces
-    the integers bit-exactly; the scale is emitted fixed-point
-    (floor(scale * 2^40)) so the whole output row is integer-typed.
-    MAP-ONLY, zero Exchange (plan-pinned)."""
-    from datatest_spark.operators.similarity import quantize_embeddings
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = quantize_embeddings(e)
-    return q.select(
-        "vec_id",
-        F.floor(F.col("scale") * F.lit(float(1 << 40)))
-        .cast("bigint")
-        .alias("scale_fp"),
-        "qvec",
-    )
-
-
-def q_semantic_dup_pairs(spark, sf_dir):
-    """SemDeDup candidate pairs (operators/similarity.semantic_dup_pairs,
-    Abbas et al. 2023): k-means partition (k=8, iters=2, md5 init — the
-    SQL-reproducible variant), exact cosine WITHIN clusters only,
-    tau=0.35 (the synthetic embeddings are near-orthogonal random
-    vectors; production near-dup thresholds are ~0.95). The oracle
-    chains the kmeans fixed-point CTE with a cluster-scoped pair
-    join."""
-    from datatest_spark.operators.similarity import semantic_dup_pairs
-
-    e = _t(spark, sf_dir, "embeddings")
-    return semantic_dup_pairs(
-        e, tau=0.35, k=8, iters=2, hash_fn="md5", dim=64
-    )
-
-
-def q_semantic_dedup_survivors(spark, sf_dir):
-    """SemDeDup survivors (operators/similarity.semantic_dedup):
-    connected components over the cluster-scoped pair graph, minimum
-    vec_id kept per component, everything else anti-joined away. The
-    oracle appends a recursive-CTE closure to the kmeans+pairs chain
-    (same pattern as embedding_dedup_survivors, whose pair graph is
-    global)."""
-    from datatest_spark.operators.similarity import semantic_dedup
-
-    e = _t(spark, sf_dir, "embeddings")
-    s = semantic_dedup(e, tau=0.35, k=8, iters=2, hash_fn="md5", dim=64)
-    return s.select("vec_id", "label")
-
-
-def q_semantic_contamination(spark, sf_dir):
-    """Embedding-space eval-set decontamination
-    (operators/similarity.semantic_contamination): the eval side is the
-    ~1/8 of embeddings whose md5(vec_id) starts with '0'/'1' (a
-    deterministic held-out split), the corpus is the rest; every corpus
-    vector whose best eval cosine reaches tau=0.3 is flagged with its
-    argmax eval item (ties toward the smaller eval_id). Map-only over
-    the corpus: ONE broadcast carrier row of (eval_id, vector) structs,
-    in-row argmax fold — zero corpus-side Exchange (plan-pinned). The
-    oracle replays the identical left-fold cosine arithmetic via a
-    cross join + ROW_NUMBER argmax."""
-    from datatest_spark.operators.similarity import semantic_contamination
-
-    e = _t(spark, sf_dir, "embeddings")
-    is_eval = F.substring(
-        F.md5(F.col("vec_id").cast("string")), 1, 1
-    ).isin("0", "1")
-    return semantic_contamination(
-        e.where(~is_eval), e.where(is_eval), tau=0.3
-    )
-
-
 def q_normalized_dup_groups(spark, sf_dir):
     """Normalization-tolerant exact dedup (text.normalize_text +
     dedup.exact_duplicates): case/punctuation/whitespace variants hash
@@ -2771,10 +2551,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #                          paragraph_dups / paragraph_dup_profile
 #   quality_bands_approx — approx<->exact agreement pinned vs in-window
 #                          quality_bands
-#   ivf_md5_topk / simhash_md5_signatures — already driver-green in r04
-#                          (rotated out in round 5 to admit
-#                          accepted_keys/args per the r04 verdict's
-#                          explicit done-criterion)
+#   simhash_md5_signatures — already driver-green in r04 (rotated
+#                          out in round 5 to admit accepted_keys/args
+#                          per the r04 verdict's explicit done-criterion)
 #   source_signatures    — newest; fixed-point scoring shares the
 #                          unigram-LM discipline
 #   scrub_token_spans    — cut stage over in-window duplicate_spans'
@@ -2783,8 +2562,8 @@ def entry(spark: SparkSession) -> DataFrame:
 #   lang_mix             — per-paragraph composition of the in-window
 #                          langid heuristic (oracle GENERATED from the
 #                          same STOPWORDS table)
-#   emd_drift / corr_length_words / readability / fertility /
-#   shard_manifest / vocab_overlap / retention_cohorts /
+#   corr_length_words / readability / fertility / shard_manifest /
+#   vocab_overlap / retention_cohorts /
 #   fd_violations / benford_digits / null_pattern /
 #   pmi_collocations / heavy_hitters / bootstrap_ci / association /
 #   position_entropy / oov_profile / mwu_drift /
@@ -2800,19 +2579,18 @@ def entry(spark: SparkSession) -> DataFrame:
 #                          in test_plans.py::TestSession10Plans)
 _DRIVER_WINDOW = (
     "token_run_quality", "vocab_topk", "ks_drift", "chi2_drift",
-    "token_entropy", "source_shares", "pii_scan", "pii_scrub",
-    "c4_line_filter", "mojibake_scan", "unigram_logloss",
-    "quality_gate_survivors", "kmeans_clusters", "token_contamination",
-    "embedding_drift", "duplicate_spans", "order_violations",
-    "accepted_count_budget", "bigram_logloss", "context_length_profile",
-    "mixture_plan", "self_repetition_spans", "length_bound_violations",
-    "token_boundary_violations", "hash_split", "containment_pairs",
-    "accepted_percent", "quality_bands", "accepted_tolerance",
-    "mad_outliers", "zipf_fit", "cross_source_duplication",
-    "pack_whole_docs", "paragraph_dups", "paragraph_dup_profile",
-    "dsir_weights", "snapshot_delta", "temperature_mixture",
-    "doc_chunks", "quantize_embeddings", "semantic_dup_pairs",
-    "semantic_dedup_survivors", "normalized_dup_groups",
+    "js_drift", "spearman_drift", "emd_drift", "psi_equidepth",
+    "robust_location", "token_entropy", "source_shares", "pii_scan",
+    "pii_scrub", "c4_line_filter", "mojibake_scan", "unigram_logloss",
+    "quality_gate_survivors", "token_contamination", "duplicate_spans",
+    "order_violations", "accepted_count_budget", "bigram_logloss",
+    "context_length_profile", "mixture_plan", "self_repetition_spans",
+    "length_bound_violations", "token_boundary_violations", "hash_split",
+    "containment_pairs", "accepted_percent", "quality_bands",
+    "accepted_tolerance", "mad_outliers", "zipf_fit",
+    "cross_source_duplication", "pack_whole_docs", "paragraph_dups",
+    "paragraph_dup_profile", "dsir_weights", "snapshot_delta",
+    "temperature_mixture", "doc_chunks", "normalized_dup_groups",
     "prefix_jaccard_pairs", "bloom_decontam", "weighted_sample",
     "epoch_shuffle", "length_buckets", "accepted_keys",
     "accepted_args",
@@ -2845,10 +2623,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mojibake_scan": q_mojibake_scan,
         "unigram_logloss": q_unigram_logloss,
         "quality_gate_survivors": q_quality_gate,
-        "kmeans_clusters": q_kmeans_clusters,
         "token_contamination": q_token_contamination,
-        "embedding_drift": q_embedding_drift,
-        "centroid_matrix": q_centroid_matrix,
         "duplicate_spans": q_duplicate_spans,
         "order_violations": q_order_violations,
         "accepted_count_budget": q_accepted_count_budget,
@@ -2879,17 +2654,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snapshot_delta": q_snapshot_delta,
         "temperature_mixture": q_temperature_mixture,
         "doc_chunks": q_doc_chunks,
-        "quantize_embeddings": q_quantize_embeddings,
-        "semantic_dup_pairs": q_semantic_dup_pairs,
-        "semantic_dedup_survivors": q_semantic_dedup_survivors,
         "normalized_dup_groups": q_normalized_dup_groups,
         "split_leakage": q_split_leakage,
         "prefix_boilerplate": q_prefix_boilerplate,
         "source_cross_entropy": q_source_cross_entropy,
         "dedup_impact": q_dedup_impact,
         # --- group 3: round-5 session-2 operators (first driver shot) ---
-        # (suite_verdicts / lsh_candidate_pairs / dedup_cluster_labels /
-        # embedding_dedup_survivors rotated past the 50-query window:
+        # (suite_verdicts / lsh_candidate_pairs / dedup_cluster_labels
+        # rotated past the 50-query window:
         # each is a 4x-driver-green veteran, still swept by
         # tools/check_oracles.py every session)
         "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
@@ -2904,7 +2676,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "heaps_fit": q_heaps_fit,
         "fuzzy_dup_pairs": q_fuzzy_dup_pairs,
         "quantile_shift": q_quantile_shift,
-        "ann_recall": q_ann_recall,
         "percentile_rank": q_percentile_rank,
         "freq_spectrum": q_freq_spectrum,
         # --- group 3c: round-5 session-7 operators (same overflow
@@ -2912,20 +2683,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # test_pipeline.py::TestSession7Ops) ---
         "jaccard_sweep": q_jaccard_sweep,
         "chain_collapse": q_chain_collapse,
-        "hubness": q_hubness,
-        "dup_embedding_check": q_dup_embedding_check,
         # --- group 3d: round-5 session-8 operators (same overflow
         # contract: mirror-sweep value oracle + pytest pins in
         # test_pipeline.py::TestSession8Ops) ---
-        "embedding_covariance": q_embedding_covariance,
         "series_autocorr": q_series_autocorr,
         "schema_drift": q_schema_drift,
         "band_migration": q_band_migration,
         "compression_profile": q_compression_profile,
         # --- group 3e: round-5 session-9 operators (same overflow
         # contract: mirror-sweep value oracle + pytest pins in
-        # test_pipeline.py::TestSemanticContamination) ---
-        "semantic_contamination": q_semantic_contamination,
+        # test_pipeline.py::TestTrigramBackoff) ---
         "trigram_logloss": q_trigram_logloss,
         "surprisal_profile": q_surprisal_profile,
         "surprisal_spans": q_surprisal_spans,
@@ -2935,15 +2702,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "suite_verdicts": q_suite_verdicts,
         "lsh_candidate_pairs": q_lsh_candidate_pairs,
         "dedup_cluster_labels": q_dedup_cluster_labels,
-        "embedding_dedup_survivors": q_embedding_dedup_survivors,
-        "ivf_md5_topk": q_ivf_md5_topk,
         "simhash_md5_signatures": q_simhash_md5_signatures,
         # --- group 4: long-green veterans past the 50-query window ---
-        # (wide_stats/tpch_q1/uniqueness/jaccard/cosine_topk rotated here
+        # (wide_stats/tpch_q1/uniqueness/jaccard rotated here
         #  in round 5 to make window room for the new round-5 operators;
         #  each had >= 2 driver-green rounds, pinned by
         #  tests/test_artifact.py)
-        "cosine_topk": q_cosine_topk,
         "wide_stats_documents": q_wide_stats_documents,
         "tpch_q1_pricing": q_tpch_q1_pricing,
         "uniqueness_surplus": q_uniqueness_surplus,
@@ -2963,7 +2727,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_mix": q_lang_mix,
         "exact_dup_groups": q_exact_dup_groups,
         "minhash_signatures": q_minhash_signatures,
-        "cosine_threshold_pairs": q_cosine_threshold_pairs,
         "repetition_profile": q_repetition_profile,
         "exact_quantiles": q_exact_quantiles,
         "interval_deviations": q_interval_deviations,
@@ -2986,7 +2749,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "langid_confusion": q_langid_confusion,
         "fingerprints": q_fingerprints,
         "winnow_fingerprints": q_winnow_fingerprints,
-        "embedding_norms": q_embedding_norms,
         "sessionization": q_sessionization,
         "retention_cohorts": q_retention_cohorts,
         "fd_violations": q_fd_violations,
@@ -3007,7 +2769,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pivot_order_status": q_pivot_order_status,
         "rollup_revenue": q_rollup_revenue,
         "simhash_pairs": q_simhash_pairs,
-        "ivf_ann_topk": q_ivf_ann_topk,
         "token_burstiness": q_token_burstiness,
         "lexical_types": q_lexical_types,
         "split_balance": q_split_balance,
@@ -3040,85 +2801,6 @@ S AS (
     FROM W, UNNEST(range(1, GREATEST(len(w) - 3, 2))) AS t(i)
 )
 """
-
-_KMEANS_CTE = """V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64
-                  AND len(list_filter(embedding, x -> x IS NULL)) = 0
-            ),
-            -- md5-stratified init, same recipe as ivf_md5_topk
-            ST AS (
-                SELECT vec_id, v,
-                       (16 * (strpos('0123456789abcdef',
-                                     substr(md5(CAST(vec_id AS VARCHAR)), 31, 1)) - 1)
-                          + strpos('0123456789abcdef',
-                                   substr(md5(CAST(vec_id AS VARCHAR)), 32, 1)) - 1
-                       ) % 8 AS centroid_id,
-                       md5(CAST(vec_id AS VARCHAR) || '#7') AS salt
-                FROM V
-            ),
-            C0 AS (
-                SELECT centroid_id, cv FROM (
-                    SELECT centroid_id, v AS cv,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY centroid_id ORDER BY salt, vec_id
-                           ) AS r
-                    FROM ST
-                ) WHERE r = 1
-            ),
-            A1 AS (
-                SELECT vec_id, v, centroid_id FROM (
-                    SELECT s.vec_id, s.v, c.centroid_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY s.vec_id
-                               ORDER BY list_sum(list_transform(
-                                   range(1, len(s.v) + 1),
-                                   j -> (s.v[j] - c.cv[j])
-                                      * (s.v[j] - c.cv[j]))) ASC,
-                                   c.centroid_id ASC
-                           ) AS r
-                    FROM V s CROSS JOIN C0 c
-                ) WHERE r = 1
-            ),
-            -- fixed-point per-dim sums: associative integers, so no
-            -- ORDER BY is needed to match Spark's map-side combine
-            U1 AS (
-                SELECT a.centroid_id, t.j,
-                       CAST(SUM(CAST(FLOOR(a.v[t.j] * 1048576.0) AS BIGINT))
-                            AS BIGINT) AS sm,
-                       COUNT(*) AS n
-                FROM A1 a, UNNEST(range(1, len(a.v) + 1)) AS t(j)
-                GROUP BY 1, 2
-            ),
-            C1 AS (
-                SELECT c0.centroid_id, COALESCE(u.cv, c0.cv) AS cv
-                FROM C0 c0 LEFT JOIN (
-                    SELECT centroid_id,
-                           list((CAST(sm AS DOUBLE) / n) / 1048576.0
-                                ORDER BY j) AS cv
-                    FROM U1 GROUP BY centroid_id
-                ) u USING (centroid_id)
-            ),
-            A2 AS (
-                SELECT vec_id, centroid_id, d FROM (
-                    SELECT s.vec_id, c.centroid_id,
-                           list_sum(list_transform(
-                               range(1, len(s.v) + 1),
-                               j -> (s.v[j] - c.cv[j])
-                                  * (s.v[j] - c.cv[j]))) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY s.vec_id
-                               ORDER BY list_sum(list_transform(
-                                   range(1, len(s.v) + 1),
-                                   j -> (s.v[j] - c.cv[j])
-                                      * (s.v[j] - c.cv[j]))) ASC,
-                                   c.centroid_id ASC
-                           ) AS r
-                    FROM V s CROSS JOIN C1 c
-                ) WHERE r = 1
-            )"""
-
 
 _LANGID_SQL = """
 H AS (
@@ -3721,100 +3403,6 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(gq[i] - bq[i], 4) AS shift
             FROM GQ CROSS JOIN B CROSS JOIN Q
         """,
-        "ann_recall": """
-            WITH V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            ),
-            EXCT AS (
-                SELECT query_id, neighbor_id FROM (
-                    SELECT query_id, neighbor_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC
-                           ) AS rank
-                    FROM (
-                        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                               list_dot_product(q.v, n.v)
-                               / (SQRT(list_sum(list_transform(q.v, x -> x * x)))
-                                * SQRT(list_sum(list_transform(n.v, x -> x * x)))) AS cos_raw
-                        FROM V q JOIN V n ON q.vec_id <> n.vec_id
-                        WHERE q.vec_id < 10
-                    )
-                ) WHERE rank <= 3
-            ),
-            ST AS (
-                SELECT vec_id, v,
-                       (16 * (strpos('0123456789abcdef',
-                                     substr(md5(CAST(vec_id AS VARCHAR)), 31, 1)) - 1)
-                          + strpos('0123456789abcdef',
-                                   substr(md5(CAST(vec_id AS VARCHAR)), 32, 1)) - 1
-                       ) % 8 AS centroid_id,
-                       md5(CAST(vec_id AS VARCHAR) || '#7') AS salt
-                FROM V
-            ),
-            CENT AS (
-                SELECT centroid_id, cv FROM (
-                    SELECT centroid_id, v AS cv,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY centroid_id ORDER BY salt, vec_id
-                           ) AS r
-                    FROM ST
-                ) WHERE r = 1
-            ),
-            ASSIGN AS (
-                SELECT id, v, centroid_id FROM (
-                    SELECT s.vec_id AS id, s.v, c.centroid_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY s.vec_id
-                               ORDER BY list_dot_product(s.v, c.cv)
-                                        / (SQRT(list_sum(list_transform(s.v, x -> x * x)))
-                                         * SQRT(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                                        c.centroid_id
-                           ) AS r
-                    FROM ST s CROSS JOIN CENT c
-                ) WHERE r = 1
-            ),
-            PROBES AS (
-                SELECT query_id, qv, centroid_id FROM (
-                    SELECT q.vec_id AS query_id, q.v AS qv, c.centroid_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY list_dot_product(q.v, c.cv)
-                                        / (SQRT(list_sum(list_transform(q.v, x -> x * x)))
-                                         * SQRT(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                                        c.centroid_id
-                           ) AS r
-                    FROM V q CROSS JOIN CENT c WHERE q.vec_id < 10
-                ) WHERE r <= 4
-            ),
-            APPROX AS (
-                SELECT query_id, neighbor_id FROM (
-                    SELECT query_id, neighbor_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC
-                           ) AS rank
-                    FROM (
-                        SELECT p.query_id, a.id AS neighbor_id,
-                               list_dot_product(p.qv, a.v)
-                               / (SQRT(list_sum(list_transform(p.qv, x -> x * x)))
-                                * SQRT(list_sum(list_transform(a.v, x -> x * x)))) AS cos_raw
-                        FROM PROBES p JOIN ASSIGN a USING (centroid_id)
-                        WHERE p.query_id <> a.id
-                    )
-                ) WHERE rank <= 3
-            )
-            SELECT e.query_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_true,
-                   CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-                   ROUND(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                                  THEN 1 ELSE 0 END) * 1.0
-                         / COUNT(*), 4) AS recall
-            FROM EXCT e LEFT JOIN APPROX a
-              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        """,
         "percentile_rank": """
             SELECT doc_id, source, n_chars,
                    ROUND(CUME_DIST() OVER (
@@ -3939,78 +3527,6 @@ def oracle_sql() -> dict[str, str]:
                        AS transitivity
             FROM CL
         """.format(cte=_SHINGLE_CTE),
-        "dup_embedding_check": """
-            WITH N AS (
-                SELECT doc_id,
-                       trim(regexp_replace(
-                           regexp_replace(
-                               lower(text),
-                               '[^\\p{L}\\p{N} \\t\\n\\r\\f]', '', 'g'),
-                           '[ \\t\\n\\r\\f]+', ' ', 'g')) AS norm0
-                FROM documents
-            ),
-            P AS (SELECT doc_id, substr(norm0, 1, 80) AS norm FROM N),
-            M AS (
-                SELECT md5(p.norm) AS gh, p.doc_id AS m_id,
-                       CAST(e.embedding AS DOUBLE[]) AS v
-                FROM P p JOIN embeddings e ON e.vec_id = p.doc_id
-            ),
-            G AS (
-                SELECT gh, MIN(m_id) AS rep_id, COUNT(*) AS n_members
-                FROM M GROUP BY 1 HAVING COUNT(*) >= 2
-            ),
-            SCORED AS (
-                SELECT g.rep_id, g.n_members,
-                       list_dot_product(m.v, r.v)
-                       / (SQRT(list_sum(list_transform(m.v, x -> x * x)))
-                        * SQRT(list_sum(list_transform(r.v, x -> x * x))))
-                           AS c
-                FROM G g
-                JOIN M r ON r.gh = g.gh AND r.m_id = g.rep_id
-                JOIN M m ON m.gh = g.gh AND m.m_id <> g.rep_id
-            )
-            SELECT rep_id, CAST(n_members AS BIGINT) AS n_members,
-                   ROUND(SUM(CAST(FLOOR(c * 1000000.0) AS BIGINT)) * 1.0
-                         / (1000000.0 * (n_members - 1)), 4) AS mean_cos,
-                   ROUND(MIN(c), 4) AS min_cos
-            FROM SCORED GROUP BY rep_id, n_members
-        """,
-        "hubness": """
-            WITH V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-            ),
-            SCORED AS (
-                SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                       list_dot_product(q.v, n.v)
-                       / (SQRT(list_sum(list_transform(q.v, x -> x * x)))
-                        * SQRT(list_sum(list_transform(n.v, x -> x * x))))
-                           AS cos_raw
-                FROM V q JOIN V n ON q.vec_id <> n.vec_id
-            ),
-            TK AS (
-                SELECT query_id, neighbor_id FROM (
-                    SELECT query_id, neighbor_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC
-                           ) AS r
-                    FROM SCORED
-                ) WHERE r <= 10
-            ),
-            DEG AS (
-                SELECT neighbor_id AS vec_id, COUNT(*) AS d
-                FROM TK GROUP BY 1
-            ),
-            NQ AS (SELECT COUNT(DISTINCT query_id) AS nq FROM TK)
-            SELECT e.vec_id,
-                   CAST(COALESCE(deg.d, 0) AS BIGINT) AS in_degree,
-                   ROUND(COALESCE(deg.d, 0) * 1.0
-                         / GREATEST(nq - 1, 1), 4) AS in_share
-            FROM embeddings e
-            LEFT JOIN DEG deg ON deg.vec_id = e.vec_id
-            CROSS JOIN NQ
-        """,
         "band_migration": """
             WITH OLDS AS (
                 SELECT doc_id, source, n_chars AS score FROM documents
@@ -4164,60 +3680,6 @@ def oracle_sql() -> dict[str, str]:
                               THEN num / SQRT(dx * dy) END, 6) AS autocorr
             FROM M
         """,
-        "embedding_covariance": """
-            WITH V AS (
-                SELECT CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-                WHERE embedding IS NOT NULL
-                  AND len(list_filter(embedding, x -> x IS NULL)) = 0
-            ),
-            D AS (
-                SELECT len(v) AS d FROM V
-                GROUP BY 1 ORDER BY COUNT(*) DESC, d ASC LIMIT 1
-            ),
-            VD AS (SELECT v FROM V, D WHERE len(v) = D.d),
-            N AS (SELECT COUNT(*) AS n FROM VD),
-            S AS (
-                SELECT ii.i FROM generate_series(1, 4096) AS ii(i)
-                WHERE ii.i <= (SELECT d FROM D)
-            ),
-            E AS (
-                SELECT s.i AS i,
-                       SUM(CAST(FLOOR(v[s.i] * 1048576.0) AS BIGINT))
-                           AS se
-                FROM VD, S s
-                GROUP BY 1
-            ),
-            P AS (
-                SELECT s1.i AS i, s2.i AS j,
-                       SUM(CAST(FLOOR(v[s1.i] * v[s2.i] * 1048576.0)
-                           AS BIGINT)) AS sp
-                FROM VD, S s1, S s2
-                WHERE s2.i >= s1.i
-                GROUP BY 1, 2
-            ),
-            C AS (
-                SELECT p.i, p.j, n.n,
-                       p.sp / (1048576.0 * n.n)
-                       - (ei.se / (1048576.0 * n.n))
-                         * (ej.se / (1048576.0 * n.n)) AS c
-                FROM P p
-                JOIN E ei ON ei.i = p.i
-                JOIN E ej ON ej.i = p.j
-                CROSS JOIN N n
-            ),
-            VAR AS (SELECT i, c AS vr FROM C WHERE i = j)
-            SELECT CAST(c.i - 1 AS INT) AS i,
-                   CAST(c.j - 1 AS INT) AS j,
-                   CAST(c.n AS BIGINT) AS n_vecs,
-                   ROUND(c.c, 6) AS cov,
-                   CASE WHEN vi.vr > 0 AND vj.vr > 0
-                        THEN ROUND(c.c / SQRT(vi.vr * vj.vr), 6)
-                   END AS corr
-            FROM C c
-            JOIN VAR vi ON vi.i = c.i
-            JOIN VAR vj ON vj.i = c.j
-        """,
         "prefix_jaccard_pairs": """
             WITH {cte},
             -- prefix filtering is LOSSLESS: the oracle is the plain
@@ -4270,27 +3732,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT id AS doc_id, MIN(r) AS cluster_id FROM REACH GROUP BY id
         """.format(cte=_SHINGLE_CTE),
-        "embedding_dedup_survivors": """
-            WITH RECURSIVE V AS (
-                SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings WHERE vec_id < 200
-            ),
-            P AS (
-                SELECT a.id AS src, b.id AS dst FROM V a JOIN V b ON a.id < b.id
-                WHERE list_dot_product(a.v, b.v)
-                      / (SQRT(list_sum(list_transform(a.v, x -> x * x)))
-                       * SQRT(list_sum(list_transform(b.v, x -> x * x)))) >= 0.35
-            ),
-            E AS (SELECT src, dst FROM P UNION SELECT dst, src FROM P),
-            REACH(id, r) AS (
-                SELECT src, src FROM E
-                UNION
-                SELECT e.src, REACH.r FROM E e JOIN REACH ON e.dst = REACH.id
-            ),
-            LBL AS (SELECT id, MIN(r) AS cluster_id FROM REACH GROUP BY id)
-            SELECT v.id AS vec_id, v.label FROM V v
-            WHERE v.id NOT IN (SELECT id FROM LBL WHERE id <> cluster_id)
-        """,
         "exact_quantiles": """
             SELECT l_returnflag,
                    ROUND(quantile_cont(l_quantity, 0.25), 4) AS q25,
@@ -4347,113 +3788,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT c.doc_a, c.doc_b, j.jaccard
             FROM CAND c JOIN J j USING (doc_a, doc_b)
         """.format(cte=_SHINGLE_CTE),
-        "embedding_norms": """
-            SELECT label, COUNT(*) AS n,
-                   ROUND(AVG(SQRT(list_sum(list_transform(
-                       CAST(embedding AS DOUBLE[]), x -> x * x)))), 3) AS avg_norm
-            FROM embeddings GROUP BY label
-        """,
-        "cosine_threshold_pairs": """
-            WITH V AS (
-                SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings WHERE vec_id < 200
-            )
-            SELECT a.id AS id_a, b.id AS id_b,
-                   ROUND(list_dot_product(a.v, b.v)
-                       / (SQRT(list_sum(list_transform(a.v, x -> x * x)))
-                        * SQRT(list_sum(list_transform(b.v, x -> x * x)))), 4) AS cosine
-            FROM V a JOIN V b ON a.id < b.id
-            WHERE list_dot_product(a.v, b.v)
-                  / (SQRT(list_sum(list_transform(a.v, x -> x * x)))
-                   * SQRT(list_sum(list_transform(b.v, x -> x * x)))) >= 0.35
-        """,
-        "cosine_topk": """
-            WITH V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            ),
-            SCORED AS (
-                SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                       list_dot_product(q.v, n.v)
-                       / (SQRT(list_sum(list_transform(q.v, x -> x * x)))
-                        * SQRT(list_sum(list_transform(n.v, x -> x * x)))) AS cos_raw
-                FROM V q JOIN V n ON q.vec_id <> n.vec_id
-                WHERE q.vec_id < 10
-            )
-            SELECT query_id, neighbor_id, ROUND(cos_raw, 4) AS cosine, rank FROM (
-                SELECT query_id, neighbor_id, cos_raw,
-                       CAST(ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY cos_raw DESC, neighbor_id ASC
-                       ) AS INT) AS rank
-                FROM SCORED
-            ) WHERE rank <= 3
-        """,
-        "ivf_md5_topk": """
-            WITH V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            ),
-            ST AS (
-                SELECT vec_id, v,
-                       (16 * (strpos('0123456789abcdef',
-                                     substr(md5(CAST(vec_id AS VARCHAR)), 31, 1)) - 1)
-                          + strpos('0123456789abcdef',
-                                   substr(md5(CAST(vec_id AS VARCHAR)), 32, 1)) - 1
-                       ) % 8 AS centroid_id,
-                       md5(CAST(vec_id AS VARCHAR) || '#7') AS salt
-                FROM V
-            ),
-            CENT AS (
-                SELECT centroid_id, cv FROM (
-                    SELECT centroid_id, v AS cv,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY centroid_id ORDER BY salt, vec_id
-                           ) AS r
-                    FROM ST
-                ) WHERE r = 1
-            ),
-            ASSIGN AS (
-                SELECT id, v, centroid_id FROM (
-                    SELECT s.vec_id AS id, s.v, c.centroid_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY s.vec_id
-                               ORDER BY list_dot_product(s.v, c.cv)
-                                        / (SQRT(list_sum(list_transform(s.v, x -> x * x)))
-                                         * SQRT(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                                        c.centroid_id
-                           ) AS r
-                    FROM ST s CROSS JOIN CENT c
-                ) WHERE r = 1
-            ),
-            PROBES AS (
-                SELECT query_id, qv, centroid_id FROM (
-                    SELECT q.vec_id AS query_id, q.v AS qv, c.centroid_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY list_dot_product(q.v, c.cv)
-                                        / (SQRT(list_sum(list_transform(q.v, x -> x * x)))
-                                         * SQRT(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                                        c.centroid_id
-                           ) AS r
-                    FROM V q CROSS JOIN CENT c WHERE q.vec_id < 10
-                ) WHERE r <= 4
-            ),
-            SCORED AS (
-                SELECT p.query_id, a.id AS neighbor_id,
-                       list_dot_product(p.qv, a.v)
-                       / (SQRT(list_sum(list_transform(p.qv, x -> x * x)))
-                        * SQRT(list_sum(list_transform(a.v, x -> x * x)))) AS cos_raw
-                FROM PROBES p JOIN ASSIGN a USING (centroid_id)
-                WHERE p.query_id <> a.id
-            )
-            SELECT query_id, neighbor_id, ROUND(cos_raw, 4) AS cosine, rank FROM (
-                SELECT query_id, neighbor_id, cos_raw,
-                       CAST(ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY cos_raw DESC, neighbor_id ASC
-                       ) AS INT) AS rank
-                FROM SCORED
-            ) WHERE rank <= 3
-        """,
         "drift_psi": """
             WITH B AS (
                 SELECT source,
@@ -6069,89 +5403,6 @@ def oracle_sql() -> dict[str, str]:
             FROM NT n LEFT JOIN KEPT k ON n.doc_id = k.doc_id
             GROUP BY n.doc_id, n.n_tokens
         """,
-        "embedding_drift": """
-            WITH V AS (
-                SELECT COALESCE(CAST(label AS VARCHAR), '__null__') AS g,
-                       CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64
-                  AND len(list_filter(embedding, x -> x IS NULL)) = 0
-            ),
-            S AS (
-                SELECT g, t.j,
-                       CAST(SUM(CAST(FLOOR(v[t.j] * 1048576.0)
-                                     AS BIGINT)) AS BIGINT) AS sm,
-                       COUNT(*) AS n
-                FROM V, UNNEST(range(1, 65)) AS t(j)
-                GROUP BY 1, 2
-            ),
-            GM AS (
-                SELECT g, j, (CAST(sm AS DOUBLE) / n) / 1048576.0 AS gm,
-                       n
-                FROM S
-            ),
-            NT AS (SELECT CAST(COUNT(*) AS BIGINT) AS tn FROM V),
-            CM AS (
-                SELECT j,
-                       (CAST(CAST(SUM(sm) AS BIGINT) AS DOUBLE) / tn)
-                           / 1048576.0 AS cm
-                FROM S CROSS JOIN NT GROUP BY j, tn
-            ),
-            D AS (
-                SELECT gm.g,
-                       MAX(gm.n) AS n,
-                       SUM((gm.gm - cm.cm) * (gm.gm - cm.cm)
-                           ORDER BY gm.j) AS d2,
-                       SUM(gm.gm * cm.cm ORDER BY gm.j) AS dt,
-                       SUM(gm.gm * gm.gm ORDER BY gm.j) AS gn,
-                       SUM(cm.cm * cm.cm ORDER BY gm.j) AS cn
-                FROM GM gm JOIN CM cm USING (j)
-                GROUP BY gm.g
-            )
-            SELECT g AS "group", CAST(n AS BIGINT) AS n_vecs,
-                   ROUND(SQRT(d2), 4) AS l2_dist,
-                   CASE WHEN SQRT(gn) * SQRT(cn) > 0 THEN
-                       ROUND(dt / (SQRT(gn) * SQRT(cn)), 4)
-                   END AS cos_sim
-            FROM D
-        """,
-        "centroid_matrix": """
-            WITH V AS (
-                SELECT COALESCE(CAST(label AS VARCHAR), '__null__') AS g,
-                       CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64
-                  AND len(list_filter(embedding, x -> x IS NULL)) = 0
-            ),
-            S AS (
-                SELECT g, t.j,
-                       CAST(SUM(CAST(FLOOR(v[t.j] * 1048576.0)
-                                     AS BIGINT)) AS BIGINT) AS sm,
-                       COUNT(*) AS n
-                FROM V, UNNEST(range(1, 65)) AS t(j)
-                GROUP BY 1, 2
-            ),
-            GM AS (
-                SELECT g, j, (CAST(sm AS DOUBLE) / n) / 1048576.0 AS gm
-                FROM S
-            ),
-            D AS (
-                SELECT a.g AS g_a, b.g AS g_b,
-                       SUM((a.gm - b.gm) * (a.gm - b.gm)
-                           ORDER BY a.j) AS d2,
-                       SUM(a.gm * b.gm ORDER BY a.j) AS dt,
-                       SUM(a.gm * a.gm ORDER BY a.j) AS na,
-                       SUM(b.gm * b.gm ORDER BY a.j) AS nb
-                FROM GM a JOIN GM b USING (j)
-                GROUP BY a.g, b.g
-            )
-            SELECT g_a, g_b,
-                   ROUND(SQRT(d2), 4) AS l2_dist,
-                   CASE WHEN SQRT(na) * SQRT(nb) > 0 THEN
-                       ROUND(dt / (SQRT(na) * SQRT(nb)), 4)
-                   END AS cos_sim
-            FROM D
-        """,
         "token_contamination": """
             WITH W AS (
                 SELECT doc_id,
@@ -6180,12 +5431,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY c.doc_id
             HAVING COUNT(DISTINCT c.sh) >= 1
         """,
-        "kmeans_clusters": """
-            WITH {cte}
-            SELECT vec_id, CAST(centroid_id AS INT) AS cluster,
-                   ROUND(d, 4) AS sq_dist
-            FROM A2
-        """.format(cte=_KMEANS_CTE),
         "quality_gate_survivors": """
             WITH W AS (
                 SELECT doc_id, text,
@@ -7078,72 +6323,6 @@ def oracle_sql() -> dict[str, str]:
             )
             WHERE length(substr(text, CAST(s AS INT) + 1, 120)) >= 20
         """,
-        "quantize_embeddings": """
-            WITH V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings
-                WHERE embedding IS NOT NULL
-                  AND len(list_filter(embedding, x -> x IS NULL)) = 0
-            ),
-            M AS (
-                SELECT vec_id, v,
-                       list_max(list_transform(v, x -> abs(x))) AS m
-                FROM V
-            )
-            SELECT vec_id,
-                   CAST(FLOOR((m / 127.0) * 1099511627776.0) AS BIGINT)
-                       AS scale_fp,
-                   list_transform(v, x -> CAST(
-                       CASE WHEN m > 0
-                            THEN FLOOR(x * 127.0 / m + 0.5)
-                            ELSE 0 END AS INT)) AS qvec
-            FROM M
-        """,
-        "semantic_dup_pairs": """
-            WITH {cte},
-            PAIR AS (
-                SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       a.centroid_id AS cluster,
-                       list_dot_product(va.v, vb.v)
-                       / (SQRT(list_sum(list_transform(va.v, x -> x * x)))
-                        * SQRT(list_sum(list_transform(vb.v, x -> x * x))))
-                           AS cr
-                FROM A2 a
-                JOIN A2 b ON a.centroid_id = b.centroid_id
-                         AND a.vec_id < b.vec_id
-                JOIN V va ON va.vec_id = a.vec_id
-                JOIN V vb ON vb.vec_id = b.vec_id
-            )
-            SELECT id_a, id_b, CAST(cluster AS INT) AS cluster,
-                   ROUND(cr, 4) AS cos_sim
-            FROM PAIR WHERE cr >= 0.35
-        """.format(cte=_KMEANS_CTE),
-        "semantic_dedup_survivors": """
-            WITH RECURSIVE {cte},
-            PAIR AS (
-                SELECT a.vec_id AS src, b.vec_id AS dst
-                FROM A2 a
-                JOIN A2 b ON a.centroid_id = b.centroid_id
-                         AND a.vec_id < b.vec_id
-                JOIN V va ON va.vec_id = a.vec_id
-                JOIN V vb ON vb.vec_id = b.vec_id
-                WHERE list_dot_product(va.v, vb.v)
-                      / (SQRT(list_sum(list_transform(va.v, x -> x * x)))
-                       * SQRT(list_sum(list_transform(vb.v, x -> x * x))))
-                      >= 0.35
-            ),
-            E AS (SELECT src, dst FROM PAIR
-                  UNION SELECT dst, src FROM PAIR),
-            REACH(id, r) AS (
-                SELECT src, src FROM E
-                UNION
-                SELECT e.src, REACH.r FROM E e JOIN REACH ON e.dst = REACH.id
-            ),
-            LBL AS (SELECT id, MIN(r) AS cluster_id FROM REACH GROUP BY id)
-            SELECT emb.vec_id, emb.label FROM embeddings emb
-            WHERE emb.vec_id NOT IN
-                  (SELECT id FROM LBL WHERE id <> cluster_id)
-        """.format(cte=_KMEANS_CTE),
         "normalized_dup_groups": """
             WITH N AS (
                 SELECT doc_id,
@@ -7357,37 +6536,6 @@ def oracle_sql() -> dict[str, str]:
                                    / s.k, 4)
                    END AS bits_per_trigram
             FROM documents d LEFT JOIN S s USING (doc_id)
-        """,
-        "semantic_contamination": """
-            WITH V AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                       substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-                           IN ('0', '1') AS is_eval
-                FROM embeddings
-                WHERE embedding IS NOT NULL
-                  AND len(list_filter(embedding, x -> x IS NULL)) = 0
-                  AND len(list_filter(embedding, x -> isnan(x))) = 0
-                  AND len(list_filter(embedding, x -> x <> 0)) > 0
-            ),
-            E AS (SELECT vec_id AS eval_id, v FROM V WHERE is_eval),
-            C AS (SELECT vec_id, v FROM V WHERE NOT is_eval),
-            S AS (
-                SELECT c.vec_id, e.eval_id,
-                       list_dot_product(c.v, e.v)
-                       / (SQRT(list_sum(list_transform(c.v, x -> x * x)))
-                        * SQRT(list_sum(list_transform(e.v, x -> x * x))))
-                           AS cr
-                FROM C CROSS JOIN E
-            ),
-            B AS (
-                SELECT vec_id, eval_id, cr,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY vec_id ORDER BY cr DESC, eval_id ASC
-                       ) AS r
-                FROM S
-            )
-            SELECT vec_id, eval_id, ROUND(cr, 4) AS cos_sim
-            FROM B WHERE r = 1 AND cr >= 0.3
         """,
         "split_leakage": """
             WITH N AS (
@@ -8097,6 +7245,6 @@ def oracle_sql() -> dict[str, str]:
             FROM W LEFT JOIN K ON W.word = K.word
             GROUP BY 1
         """,
-        # simhash_pairs / ivf_ann_topk: xxhash64- or
-        # numpy-derived (not expressible in DuckDB) — rows-only checks.
+        # simhash_pairs: xxhash64-derived (not expressible in DuckDB)
+        # — rows-only check.
     }

@@ -5,7 +5,7 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
 Workload = representative operators from __spark_entry__ (wide stats,
-TPC-H Q1 shape, join+agg, window top-k, shingle-join dedup, ANN top-k)
+TPC-H Q1 shape, join+agg, window top-k, shingle-join dedup, LSH dedup)
 plus the flagship: the full north-star constraint suite over a
 deterministic synthetic tokenized-sequence table (suite wall time and
 validated-sequences/sec are both reported). The two-parallelism scaling
@@ -136,7 +136,6 @@ def main():
         "topk_per_group",
         "uniqueness_surplus",
         "jaccard_pairs",
-        "cosine_topk",
         "lsh_candidate_pairs",
     ]
 

@@ -5,7 +5,6 @@ from . import (
     drift,
     packing,
     rowpred,
-    similarity,
     stats,
     text,
 )
@@ -17,7 +16,6 @@ __all__ = [
     "drift",
     "packing",
     "rowpred",
-    "similarity",
     "stats",
     "text",
 ]

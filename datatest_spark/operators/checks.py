@@ -12,7 +12,7 @@ Each check is a named object with a stable ``check_id`` and one form:
     Join/aggregation checks (uniqueness, freshness, functional
     dependency, Benford, token equality, a DataFrame-valued referential
     set) write their own plan.
-``stats_violations(spark, stats_rows)``
+``stats_violations(stats_rows)``
     Partition-level checks (``uses_stats``): violation row dicts derived
     from the collected wide-agg stats. Each declares the stats it reads
     (``stat_names()``); the suite's wide pass computes ``n_rows`` plus
@@ -73,7 +73,7 @@ class BaseCheck(object):
         """The ``<column>__<stat>`` names ``stats_violations`` reads."""
         return []
 
-    def stats_violations(self, spark, stats_rows) -> list:
+    def stats_violations(self, stats_rows) -> list:
         """Return violation row dicts derived from collected stats."""
         return []
 
@@ -234,7 +234,7 @@ class NullRateCheck(BaseCheck):
     def stat_names(self):
         return [col + "__nulls" for col in self.max_null_rate]
 
-    def stats_violations(self, spark, stats_rows):
+    def stats_violations(self, stats_rows):
         out = []
         for row in stats_rows:
             n = row["n_rows"] or 0
@@ -276,7 +276,7 @@ class StatIntervalCheck(BaseCheck):
     def stat_names(self):
         return list(self.bounds)
 
-    def stats_violations(self, spark, stats_rows):
+    def stats_violations(self, stats_rows):
         out = []
         for row in stats_rows:
             for stat, (lo, hi) in self.bounds.items():
@@ -624,12 +624,10 @@ class TokenEqualityCheck(BaseCheck):
 
     check_id = "token_equality"
 
-    def __init__(self, reference_df, id_col="doc_id", tokens_col="tokens",
-                 use_udf=False):
+    def __init__(self, reference_df, id_col="doc_id", tokens_col="tokens"):
         self.reference = reference_df
         self.id_col = id_col
         self.tokens_col = tokens_col
-        self.use_udf = use_udf
 
     def violations(self, df):
         from .rowpred import token_equality_violations
@@ -638,7 +636,7 @@ class TokenEqualityCheck(BaseCheck):
         data = df.select("partition_key", self.id_col, self.tokens_col)
         core = token_equality_violations(
             data.drop("partition_key"), self.reference,
-            id_col=self.id_col, tokens_col=self.tokens_col, use_udf=self.use_udf,
+            id_col=self.id_col, tokens_col=self.tokens_col,
         )
         pk_map = data.select(
             F.col(self.id_col).cast("string").alias("doc_id"),

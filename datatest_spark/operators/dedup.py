@@ -1,5 +1,5 @@
-"""Deduplication operators (exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup) for training-data pipelines.
+"""Deduplication operators (exact, n-gram Jaccard, MinHash+LSH, SimHash)
+for training-data pipelines.
 
 Scale design:
   * exact dedup           — hash groupBy (one shuffle, map-side combined);
@@ -11,8 +11,7 @@ Scale design:
                             doc (one pass), banding buckets candidates so
                             the verify join touches candidate pairs only;
   * SimHash               — 64-bit hyperplane sketch via xxhash64 bit
-                            arithmetic, hamming-distance candidates;
-  * embedding cosine      — see operators/similarity.py.
+                            arithmetic, hamming-distance candidates.
 
 MinHash hashes use md5 hex (lexicographic min), which is deterministic
 and available in both Spark and DuckDB — so the oracle can reproduce the
@@ -539,25 +538,15 @@ def simhash_pairs(
 
 
 def dedup_clusters(pairs: DataFrame, max_iters: int = 20,
-                   checkpoint_every: int = 5,
-                   pointer_jump: bool = False) -> DataFrame:
+                   checkpoint_every: int = 5) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, cluster_id).
 
     Iterative min-label propagation on the undirected pair graph (the
     standard large-scale approach when true graph libraries aren't on the
     classpath): each node adopts the smallest id reachable in one hop;
     iterate to fixpoint. Near-dup clusters are tiny and shallow in
-    practice, so convergence is a handful of joins.
-
-    ``pointer_jump=True`` adds one label-of-label contraction per
-    iteration (each node re-reads the label OF its current label — the
-    classic pointer-jumping/path-halving step), so reach roughly doubles
-    per iteration and a diameter-D component converges in O(log D)
-    rounds instead of D. Worth its extra per-iteration join only for
-    long-chain graphs — a ``max_iters``-exhausted RuntimeWarning from
-    the default path is the signal to enable it. The fixpoint is
-    identical either way (labels only ever decrease toward the
-    component minimum).
+    practice, so convergence is a handful of joins. A component whose
+    diameter exceeds ``max_iters`` ends with a RuntimeWarning.
 
     Iteration hygiene for scale:
       * exactly ONE action per iteration — the convergence test is folded
@@ -608,22 +597,6 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20,
                 ).alias("_new"),
                 F.col("cluster_id").alias("_prev"),
             )
-            if pointer_jump:
-                # path halving: every label value is itself a node id
-                # present in the frame, so one label-of-label hop roughly
-                # doubles how far each node sees per iteration
-                lk = one_hop.select(
-                    F.col("doc_id").alias("_k"), F.col("_new").alias("_v")
-                )
-                one_hop = one_hop.join(
-                    lk, one_hop["_new"] == lk["_k"], "left"
-                ).select(
-                    "doc_id",
-                    F.least(
-                        F.col("_new"), F.coalesce(F.col("_v"), F.col("_new"))
-                    ).alias("_new"),
-                    "_prev",
-                )
             updated = one_hop.select(
                 "doc_id",
                 F.col("_new").alias("cluster_id"),

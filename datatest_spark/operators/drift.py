@@ -200,9 +200,6 @@ class DriftCheck(BaseCheck):
             set(base) - set(cur),
         )
 
-    def stats_violations(self, spark, stats_rows):
-        return []
-
     def drift_violations(self, df) -> list:
         metrics, extra_groups, missing_groups = self.compute(df)
         out = []

@@ -374,10 +374,9 @@ def pack_sequences(
     keys remain globally unambiguous. The unsharded form is what the
     cross-engine oracle checks (plain SQL window, identical in DuckDB).
 
-    Rows whose ``length_col`` is NULL or negative are DROPPED up front
-    (the same drop-invalid-rows contract as ``kmeans_assign``): a null
-    length would hand the row a pack_id with null seq_len while the
-    window cumsum skips it, and a negative length would corrupt the
+    Rows whose ``length_col`` is NULL or negative are DROPPED up front:
+    a null length would hand the row a pack_id with null seq_len while
+    the window cumsum skips it, and a negative length would corrupt the
     running offset of every later document in its stream. Zero-length
     rows are kept — they occupy a position at the current offset and
     consume no capacity.

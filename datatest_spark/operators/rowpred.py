@@ -7,9 +7,8 @@ this is the sanctioned slow path: a **vectorized pandas UDF** (Arrow
 batches, never row-at-a-time Python — BASELINE.json:15).
 
 Token-array equality (J5/U3) is the per-row invariant vs the reference
-copy: the default is a pure JVM expression (``size`` + ``zip_with`` +
-``forall``); a pandas/Arrow UDF variant exists as the parity oracle and for
-benchmark comparison (SURVEY.md §2.9 U3).
+copy: a pure JVM plan that joins per-row ``xxhash64`` digests and compares
+the arrays themselves (``<=>``) only on the rare candidate rows.
 """
 
 from __future__ import annotations
@@ -137,62 +136,25 @@ def callable_violations(df, col, predicate, id_col=None, group_col=None):
     )
 
 
-def arrays_equal_native(a, b):
-    """JVM-side token-array equality: null-safe, length- and element-wise.
-
-    ``zip_with(a, b, <=>)`` + ``forall``: no UDF and no Python worker,
-    but both are higher-order functions (``CodegenFallback``), so the
-    operator that holds this predicate runs outside whole-stage codegen
-    and evaluates the lambdas per element, interpreted (SURVEY.md J5).
-    """
-    if isinstance(a, str):
-        a = F.col(a)
-    if isinstance(b, str):
-        b = F.col(b)
-    elementwise = F.forall(
-        F.zip_with(a, b, lambda x, y: x.eqNullSafe(y)), lambda ok: ok
-    )
-    return (
-        (a.isNull() & b.isNull())
-        | (a.isNotNull() & b.isNotNull() & (F.size(a) == F.size(b)) & elementwise)
-    )
-
-
-@F.pandas_udf(T.BooleanType())
-def arrays_equal_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched parity oracle for arrays_equal_native (U3)."""
-    out = []
-    for x, y in zip(a, b):
-        if x is None and y is None:
-            out.append(True)
-        elif x is None or y is None:
-            out.append(False)
-        else:
-            lx, ly = list(x), list(y)
-            out.append(len(lx) == len(ly) and lx == ly)
-    return pd.Series(out, dtype="bool")
-
-
 def token_equality_violations(
     data: DataFrame,
     reference: DataFrame,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
-    use_udf: bool = False,
-    compare: str = "hash",
 ) -> DataFrame:
     """Per-row token-array equality vs the reference copy (J5/U3).
 
-    ``compare="hash"`` (default, the scale path): each side reduces its
-    array to ``(id, xxhash64(tokens), size)`` before the join, so the
-    shuffle moves 16 bytes per row instead of the full token arrays
-    (measured 158s -> seconds on a 4M x ~290-token join at local[32]);
-    hash-unequal rows are definite mismatches, and only those rare rows
-    re-join their arrays for the first-diff-position detail. A 64-bit
-    collision (probability ~2^-64 per row) could mask a corruption; the
-    ``compare="full"`` form ships whole arrays through the join and is
-    exact — it is the oracle in tests, and the recommended layout at
-    10^12 is bucket-by-doc_id so even "full" avoids the shuffle.
+    Each side reduces its array to ``(id, xxhash64(tokens), size)`` before
+    the join, so the shuffle moves 16 bytes per row instead of the full
+    token arrays (measured 158s -> seconds on a 4M x ~290-token join at
+    local[32]). Only the rare candidate rows re-join their arrays, where
+    the null-safe ``<=>`` on the two arrays decides and the violation
+    gets its first-diff-position detail. A candidate is a row whose
+    hash, size or nullness differs, or whose array holds a null element
+    (or a -1, which the probe cannot tell from a null): ``xxhash64``
+    skips null elements, so ``[1, null, 3]`` and ``[1, 3, null]`` hash
+    alike. A 64-bit collision (probability ~2^-64 per row) could mask a
+    corruption.
 
     Rows present in the reference but absent from the data are Missing;
     mismatched arrays are Invalid with a compact detail. Column pruning:
@@ -201,42 +163,34 @@ def token_equality_violations(
     d = data.select(F.col(id_col).alias("_id"), F.col(tokens_col).alias("_a"))
     r = reference.select(F.col(id_col).alias("_id"), F.col(tokens_col).alias("_b"))
 
-    if compare == "hash" and not use_udf:
-        dh = d.select(
+    def digest(side, arr, tag):
+        a = F.col(arr)
+        # array_contains(a, -1) is NULL when a holds a null element (and
+        # no -1): one codegen loop, no lambda
+        return side.select(
             "_id",
-            F.xxhash64(F.col("_a")).alias("_ha"),
-            F.size(F.col("_a")).alias("_sa"),
-            F.col("_a").isNull().alias("_na"),
+            F.xxhash64(a).alias("_h" + tag),
+            F.size(a).alias("_s" + tag),
+            a.isNull().alias("_n" + tag),
+            (~F.array_contains(a, -1).eqNullSafe(False)).alias("_q" + tag),
         )
-        rh = r.select(
-            "_id",
-            F.xxhash64(F.col("_b")).alias("_hb"),
-            F.size(F.col("_b")).alias("_sb"),
-            F.col("_b").isNull().alias("_nb"),
+
+    candidates = (
+        digest(d, "_a", "a").join(digest(r, "_b", "b"), "_id", "inner")
+        .filter(
+            (F.col("_ha") != F.col("_hb"))
+            | (F.col("_sa") != F.col("_sb"))
+            | (F.col("_na") != F.col("_nb"))
+            | F.col("_qa")
+            | F.col("_qb")
         )
-        bad_ids = (
-            dh.join(rh, "_id", "inner")
-            .filter(
-                (F.col("_ha") != F.col("_hb"))
-                | (F.col("_sa") != F.col("_sb"))
-                | (F.col("_na") != F.col("_nb"))
-            )
-            .select("_id")
-        )
-        # rare mismatches: fetch both arrays for the detailed violation row
-        joined = (
-            d.join(bad_ids, "_id", "left_semi")
-            .join(r.join(bad_ids, "_id", "left_semi"), "_id", "inner")
-        )
-        mismatch = joined
-    else:
-        joined = d.join(r, "_id", "inner")
-        eq = (
-            arrays_equal_pandas(F.col("_a"), F.col("_b"))
-            if use_udf
-            else arrays_equal_native(F.col("_a"), F.col("_b"))
-        )
-        mismatch = joined.filter(~eq)
+        .select("_id")
+    )
+    mismatch = (
+        d.join(candidates, "_id", "left_semi")
+        .join(r.join(candidates, "_id", "left_semi"), "_id", "inner")
+        .filter(~F.col("_a").eqNullSafe(F.col("_b")))
+    )
     invalid = mismatch.select(
         F.lit("invalid").alias("kind"),
         F.lit(None).cast("string").alias("group_key"),

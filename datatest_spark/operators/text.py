@@ -281,8 +281,7 @@ def token_run_stats(
 
 
 # above this size, a literal map in the plan would build millions of
-# expression nodes; the model rides a one-row broadcast instead (same
-# carrier trick as similarity.IVF_LITERAL_MAX_ELEMS)
+# expression nodes; the model rides a one-row broadcast instead
 LM_LITERAL_MAX_ENTRIES = 10_000
 
 # dense-integer vocabularies (BPE ids 0..~50k/~250k) ride a positional

@@ -334,7 +334,7 @@ class ValidationSuite(object):
             elif isinstance(check, DriftCheck):
                 driver_rows.extend(check.drift_violations(keyed))
             elif check.uses_stats:
-                driver_rows.extend(check.stats_violations(spark, stats_rows))
+                driver_rows.extend(check.stats_violations(stats_rows))
             else:
                 conds = check.row_conditions(keyed)
                 if conds is not None:

@@ -13,10 +13,9 @@ def spark():
         shuffle_partitions=8,
         extra_conf={
             "spark.sql.autoBroadcastJoinThreshold": str(8 * 1024 * 1024),
-            # with the session default (16g) G1 grows the heap to ~14 GB
-            # in the semantic-dedup tests, and on a 15 GB host the kernel
-            # kills the JVM and every later test fails; 4g is too small
-            # for those tests (Java heap space)
+            # with the session default (16g) G1 can grow the heap to
+            # ~14 GB, and on a 15 GB host the kernel kills the JVM and
+            # every later test fails
             "spark.driver.memory": "8g",
         },
     )

@@ -114,7 +114,7 @@ def test_driver_window_holds_every_value_oracled_query_once():
     # same core or a dedicated pytest pin — see the _DRIVER_WINDOW
     # comment in __spark_entry__.py)
     rows_only = {
-        "simhash_pairs", "ivf_ann_topk",
+        "simhash_pairs",
         # DEFLATE has no SQL oracle — documented Arrow-kernel entry,
         # pinned by tests/test_pipeline.py::TestCompressionRatio
         "compression_profile",
@@ -129,7 +129,7 @@ def test_driver_window_holds_every_value_oracled_query_once():
         # (test_pipeline.py / test_plans.py); the 50-slot window was
         # already full of never-driver-checked round-5 ops when these
         # landed
-        "emd_drift", "corr_length_words", "readability", "fertility",
+        "corr_length_words", "readability", "fertility",
         "shard_manifest", "vocab_overlap", "retention_cohorts",
         "fd_violations", "benford_digits", "null_pattern",
         "pmi_collocations", "heavy_hitters", "bootstrap_ci",
@@ -139,27 +139,25 @@ def test_driver_window_holds_every_value_oracled_query_once():
         # session-5 operators: same contract (value-oracled in the
         # mirror sweep + dedicated pytest pins in test_pipeline.py and
         # plan pins in test_plans.py::TestSession5Plans)
-        "js_drift", "spearman_drift", "source_concentration",
+        "source_concentration",
         "split_leakage", "prefix_boilerplate", "source_cross_entropy",
-        "centroid_matrix", "dedup_impact", "inspection_sample",
-        "cusum_volume", "psi_equidepth", "robust_location",
+        "dedup_impact", "inspection_sample",
+        "cusum_volume",
         # session-6 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession6Ops)
         "minhash_error_audit", "dup_ngram_fraction", "heaps_fit",
-        "fuzzy_dup_pairs", "quantile_shift", "ann_recall",
+        "fuzzy_dup_pairs", "quantile_shift",
         "percentile_rank", "freq_spectrum",
         # session-7 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession7Ops)
-        "jaccard_sweep", "chain_collapse", "hubness",
-        "dup_embedding_check",
+        "jaccard_sweep", "chain_collapse",
         # session-8 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession8Ops)
-        "embedding_covariance", "series_autocorr", "schema_drift",
+        "series_autocorr", "schema_drift",
         "band_migration",
         # session-9 operators: same contract (mirror-sweep value oracle
-        # + pytest pins in test_pipeline.py::TestSemanticContamination /
-        # TestTrigramBackoff)
-        "semantic_contamination", "trigram_logloss", "surprisal_profile",
+        # + pytest pins in test_pipeline.py::TestTrigramBackoff)
+        "trigram_logloss", "surprisal_profile",
         "surprisal_spans",
         # session-10 operators: same contract (mirror-sweep value oracle
         # + pytest pins in test_pipeline.py::TestSession10Ops/B)

@@ -1,10 +1,9 @@
-"""Round-5 operators: context-window chunking, int8 embedding
-quantization, and SemDeDup (cluster-scoped semantic dedup).
+"""Round-5 operators: context-window chunking and text normalization.
 
 Covers the plan pins the operator docstrings promise (chunking and
-quantization are MAP-ONLY: zero Exchange) plus the value semantics the
-DuckDB oracles can't see alone (roundtrip error bounds, within-cluster
-pair completeness, representative-keeping)."""
+normalization are MAP-ONLY: zero Exchange) plus the value semantics the
+DuckDB oracles can't see alone (chunk reconstruction, null and short
+content)."""
 
 import contextlib
 import io
@@ -13,7 +12,7 @@ import re
 import pytest
 from pyspark.sql import Row, functions as F
 
-from datatest_spark.operators import packing, similarity
+from datatest_spark.operators import packing
 
 
 def _plan(df):
@@ -30,11 +29,6 @@ def _exchanges(plan_text):
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(sf_dir + "/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def embs(spark, sf_dir):
-    return spark.read.parquet(sf_dir + "/embeddings.parquet")
 
 
 class TestChunkDocuments:
@@ -111,129 +105,6 @@ class TestChunkDocuments:
     def test_plan_is_map_only(self, docs):
         p = _plan(packing.chunk_documents(docs, size=120, stride=80))
         assert _exchanges(p) == 0
-
-
-class TestQuantizeEmbeddings:
-    def test_roundtrip_error_bounded(self, embs):
-        q = similarity.quantize_embeddings(embs)
-        joined = q.join(embs, "vec_id").select(
-            F.arrays_zip(
-                F.transform(
-                    "qvec", lambda x: x.cast("double") * F.col("scale")
-                ),
-                F.col("embedding").cast("array<double>"),
-            ).alias("z"),
-            "scale",
-        )
-        # |dequant - x| <= scale/2 by the half-up rounding rule
-        bad = joined.where(
-            F.exists(
-                "z",
-                lambda s: F.abs(s["0"] - s["1"]) > F.col("scale") / 2 + 1e-12,
-            )
-        ).count()
-        assert bad == 0
-
-    def test_qmax_bound_and_no_row_loss(self, embs):
-        q = similarity.quantize_embeddings(embs, bits=8)
-        over = q.where(
-            F.exists("qvec", lambda x: F.abs(x) > 127)
-        ).count()
-        assert over == 0
-        assert q.count() == embs.where(F.col("embedding").isNotNull()).count()
-
-    def test_zero_vector_and_null_elements(self, spark):
-        df = spark.createDataFrame(
-            [
-                Row(vec_id=1, embedding=[0.0, 0.0]),
-                Row(vec_id=2, embedding=[1.0, None]),
-                Row(vec_id=3, embedding=None),
-            ]
-        )
-        rows = similarity.quantize_embeddings(df).collect()
-        assert [r["vec_id"] for r in rows] == [1]
-        assert rows[0]["qvec"] == [0, 0] and rows[0]["scale"] == 0.0
-
-    def test_bits_validation(self, embs):
-        for bad in (1, 33):
-            with pytest.raises(ValueError):
-                similarity.quantize_embeddings(embs, bits=bad)
-
-    def test_plan_is_map_only(self, embs):
-        p = _plan(similarity.quantize_embeddings(embs))
-        assert _exchanges(p) == 0
-
-
-class TestSemanticDedup:
-    @pytest.fixture(scope="class")
-    def pairs(self, embs):
-        return similarity.semantic_dup_pairs(
-            embs, tau=0.35, k=8, iters=2, hash_fn="md5", dim=64
-        ).cache()
-
-    def test_pairs_are_ordered_and_above_tau(self, pairs):
-        rows = pairs.collect()
-        assert rows, "fixture should produce at least one candidate pair"
-        assert all(r["id_a"] < r["id_b"] for r in rows)
-        assert all(r["cos_sim"] >= 0.35 - 1e-9 for r in rows)
-
-    def test_within_cluster_completeness(self, embs, pairs):
-        # every qualifying same-cluster pair is present: rebuild the
-        # cluster-scoped exact pairs independently and compare sets
-        assign = similarity.kmeans_assign(
-            embs, k=8, iters=2, hash_fn="md5", dim=64
-        )
-        v = embs.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ).where(
-            F.col("v").isNotNull() & ~F.exists("v", lambda x: x.isNull())
-        )
-        a = assign.select("vec_id", "cluster").join(v, "vec_id")
-        l = a.select(
-            F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "cluster"
-        )
-        r = a.select(
-            F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "cluster"
-        )
-        expected = {
-            (x["id_a"], x["id_b"])
-            for x in l.join(r, "cluster")
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(similarity.cosine(F.col("va"), F.col("vb")) >= 0.35)
-            .collect()
-        }
-        got = {(x["id_a"], x["id_b"]) for x in pairs.collect()}
-        assert got == expected
-
-    def test_survivors_drop_only_non_representatives(self, embs, pairs):
-        surv = similarity.semantic_dedup(
-            embs, tau=0.35, k=8, iters=2, hash_fn="md5", dim=64
-        )
-        surv_ids = {r["vec_id"] for r in surv.select("vec_id").collect()}
-        all_ids = {r["vec_id"] for r in embs.select("vec_id").collect()}
-        # union-find over the pair graph: min id per component survives
-        parent = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for row in pairs.collect():
-            ra, rb = find(row["id_a"]), find(row["id_b"])
-            if ra != rb:
-                lo, hi = min(ra, rb), max(ra, rb)
-                parent[hi] = lo
-        members = {}
-        for row in pairs.collect():
-            for x in (row["id_a"], row["id_b"]):
-                members.setdefault(find(x), set()).add(x)
-        expected_dropped = set()
-        for root, mem in members.items():
-            expected_dropped |= mem - {min(mem)}
-        assert all_ids - surv_ids == expected_dropped
-
 
 
 class TestNormalizeText:

@@ -1,22 +1,15 @@
 """Training-data pipeline operators: text analysis, dedup family,
-similarity search (task brief: first-class alongside SURVEY §2)."""
+decontamination, packing/mixture, drift and corpus audits (SURVEY §2)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from datatest_spark.operators import dedup, similarity, text
+from datatest_spark.operators import dedup, text
 
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df.persist().count()
-    return df
-
-
-@pytest.fixture(scope="module")
-def embs(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     df.persist().count()
     return df
 
@@ -223,173 +216,6 @@ class TestDedup:
         for r in both:
             by_text.setdefault(r["h"], set()).add(r["s"])
         assert all(len(v) == 1 for v in by_text.values())
-
-
-class TestSimilarity:
-    def test_brute_force_topk_shape(self, embs):
-        q = embs.filter("vec_id < 5")
-        res = similarity.brute_force_topk(embs, q, k=3)
-        rows = res.collect()
-        assert len(rows) == 15
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        for qid, nbrs in by_q.items():
-            ranks = sorted(n["rank"] for n in nbrs)
-            assert ranks == [1, 2, 3]
-            sims = [n["cosine"] for n in sorted(nbrs, key=lambda n: n["rank"])]
-            assert sims == sorted(sims, reverse=True)
-
-    def test_self_similarity_is_top(self, embs):
-        # a clone of vector 0 under a new id must rank 1 for query 0
-        clone = embs.filter("vec_id = 0").withColumn("vec_id", F.lit(999999).cast("long"))
-        corpus = embs.unionByName(clone)
-        res = similarity.brute_force_topk(corpus, embs.filter("vec_id = 0"), k=1).collect()
-        assert res[0]["neighbor_id"] == 999999
-        assert res[0]["cosine"] == 1.0
-
-    def test_ivf_recall_against_brute_force(self, embs):
-        q = embs.filter("vec_id < 10")
-        exact = similarity.brute_force_topk(embs, q, k=5).collect()
-        approx = similarity.ivf_topk(embs, q, k=5, n_centroids=8, nprobe=4).collect()
-        exact_sets = {}
-        for r in exact:
-            exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        approx_sets = {}
-        for r in approx:
-            approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        recalls = [
-            len(exact_sets[qid] & approx_sets.get(qid, set())) / 5
-            for qid in exact_sets
-        ]
-        assert sum(recalls) / len(recalls) >= 0.5  # nprobe=4/8 buckets
-
-    def test_ivf_md5_variant_same_shape(self, embs):
-        # the oracle-able centroid pick must run the same pipeline:
-        # dense ranks 1..k per query, cosine within [-1, 1]
-        q = embs.filter("vec_id < 5")
-        rows = similarity.ivf_topk(
-            embs, q, k=3, n_centroids=8, nprobe=4, centroid_hash="md5"
-        ).collect()
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r["rank"])
-            assert -1.0001 <= r["cosine"] <= 1.0001
-        assert set(by_q) == {0, 1, 2, 3, 4}
-        assert all(sorted(v) == [1, 2, 3] for v in by_q.values())
-
-    def test_lsh_buckets_deterministic(self, embs):
-        a = similarity.lsh_buckets(embs).collect()
-        b = similarity.lsh_buckets(embs).collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-        assert all(len(r["bucket"]) == 8 for r in a)
-
-    def test_threshold_pairs_lsh_matches_exact_on_near_dups(self, embs):
-        # clones under new ids (same direction => same LSH bands, cosine 1)
-        clones = embs.filter("vec_id < 20").select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.transform("embedding", lambda x: x * 2).alias("embedding"),
-        )
-        corpus = embs.select("vec_id", "embedding").unionByName(clones)
-        exact = {
-            (r["id_a"], r["id_b"])
-            for r in similarity.threshold_pairs(
-                corpus, threshold=0.95, exact=True
-            ).collect()
-        }
-        lsh = {
-            (r["id_a"], r["id_b"])
-            for r in similarity.threshold_pairs(corpus, threshold=0.95).collect()
-        }
-        assert len(exact) >= 20
-        assert lsh == exact  # banded prefilter is recall-complete here
-
-    def test_threshold_pairs_default_plan_has_no_cross_join(self, embs):
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            similarity.threshold_pairs(embs, threshold=0.9).explain(mode="extended")
-        explained = buf.getvalue()
-        assert "CartesianProduct" not in explained
-        assert "BroadcastNestedLoopJoin" not in explained
-        assert "Join" in explained  # candidates come from a real equi-join
-
-    def test_lsh_banding_scales_with_threshold(self, embs):
-        # ADVICE r2: the band count must track the caller's threshold so
-        # low-threshold calls don't silently run at ~0.97 recall
-        import warnings as _w
-
-        low = similarity._auto_bands(0.35, 2, 0.999)
-        high = similarity._auto_bands(0.9, 2, 0.999)
-        assert low > high  # lower threshold -> more bands
-        assert similarity.lsh_recall(0.35, low, 2) >= 0.999
-        assert similarity.lsh_recall(0.9, high, 2) >= 0.999
-        # explicit under-provisioned bands warn with the achieved bound
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            similarity.threshold_pairs(
-                embs, threshold=0.35, bands=2, rows_per_band=2
-            )
-            assert any("recall" in str(c.message) for c in caught)
-        # auto-derived bands stay quiet (about recall — unrelated
-        # pyspark/pandas deprecation warnings must not flake this)
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            similarity.threshold_pairs(embs, threshold=0.35)
-            assert not any("recall" in str(c.message) for c in caught)
-
-    def test_ivf_stratified_centroids_cover_clusters(self, spark):
-        # adversarial fixture: ids are insertion-ordered, the first C ids
-        # all live in cluster A — first-C-by-id init would put every
-        # centroid in one region; the stratified pick must not.
-        import numpy as np
-
-        rng = np.random.default_rng(7)
-        rows = []
-        for i in range(100):
-            rows.append((i, (np.array([10.0] + [0.0] * 7) + rng.normal(0, 0.5, 8)).tolist()))
-        for i in range(100, 200):
-            rows.append((i, (np.array([0.0] * 7 + [10.0]) + rng.normal(0, 0.5, 8)).tolist()))
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        cents = similarity._centroids_from_sample(df, "embedding", 8, "vec_id")
-        assigned = similarity.ivf_assign(df, cents)
-        sizes = [r["n"] for r in assigned.groupBy("centroid_id")
-                 .agg(F.count(F.lit(1)).alias("n")).collect()]
-        assert max(sizes) < 0.8 * 200  # no single-region collapse
-        # recall on queries from the SECOND cluster (the one first-C-by-id
-        # init would have no centroid near)
-        q = df.filter("vec_id >= 190")
-        exact = similarity.brute_force_topk(df, q, k=5).collect()
-        approx = similarity.ivf_topk(df, q, k=5, n_centroids=8, nprobe=4).collect()
-        ex, ap = {}, {}
-        for r in exact:
-            ex.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        for r in approx:
-            ap.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        recalls = [len(ex[k] & ap.get(k, set())) / 5 for k in ex]
-        assert sum(recalls) / len(recalls) >= 0.8
-
-    def test_ivf_assign_tolerates_null_centroid_elements(self, spark):
-        """A centroid vector containing a null element (or a fully-null
-        vector) must score a null sim and lose the argmax — the old
-        crossJoin+window form did exactly that; the literal-array form
-        must not crash float(None) at plan-build time."""
-        df = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
-            "vec_id long, embedding array<double>",
-        )
-        cents = spark.createDataFrame(
-            [(0, [1.0, None]), (1, None), (2, [0.0, 1.0])],
-            "centroid_id int, cv array<double>",
-        )
-        got = {
-            r["id"]: r["centroid_id"]
-            for r in similarity.ivf_assign(df, cents).collect()
-        }
-        # both rows must land on the only fully-valid centroid
-        assert got == {1: 2, 2: 2}
 
 
 class TestPackingMixture:
@@ -602,23 +428,14 @@ class TestDedupConvergenceSignal:
             labels = dedup.dedup_clusters(pairs)
             assert {r["cluster_id"] for r in labels.collect()} == {1}
 
-    def test_pointer_jump_converges_long_chain(self, spark):
+    def test_long_chain_warns_past_max_iters(self, spark):
         # a 60-node chain has diameter 59: one-hop propagation can't
-        # finish in 10 iterations, path-halving must (O(log D) rounds)
-        import warnings
-
+        # finish in 10 iterations, and must say so
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(1, 60)], "doc_a long, doc_b long"
         )
         with pytest.warns(RuntimeWarning, match="did not converge"):
             dedup.dedup_clusters(chain, max_iters=10)
-        with warnings.catch_warnings():
-            warnings.simplefilter("error", RuntimeWarning)
-            labels = dedup.dedup_clusters(chain, max_iters=10,
-                                          pointer_jump=True)
-            rows = labels.collect()
-        assert {r["cluster_id"] for r in rows} == {1}
-        assert len(rows) == 60
 
 
 class TestDecontamination:
@@ -1108,173 +925,6 @@ class TestTokenEntropy:
         assert "Exchange" not in plan
 
 
-class TestKmeans:
-    def _vecs(self, spark):
-        import random
-
-        rng = random.Random(5)
-        rows = []
-        # two well-separated blobs in 4d
-        for i in range(40):
-            base = 0.0 if i % 2 == 0 else 10.0
-            rows.append(
-                (i, [base + rng.uniform(-0.5, 0.5) for _ in range(4)])
-            )
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    def test_separated_blobs_recovered(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        out = kmeans_assign(self._vecs(spark), k=2, iters=4).collect()
-        by_parity = {0: set(), 1: set()}
-        for r in out:
-            by_parity[r["vec_id"] % 2].add(r["cluster"])
-        # each blob maps to exactly one cluster, and not the same one
-        assert len(by_parity[0]) == 1 and len(by_parity[1]) == 1
-        assert by_parity[0] != by_parity[1]
-
-    def test_parallelism_invariant(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        df = self._vecs(spark)
-        a = sorted(map(tuple, kmeans_assign(df, k=3, iters=3).collect()))
-        b = sorted(
-            map(tuple, kmeans_assign(df.repartition(7), k=3, iters=3)
-                .collect())
-        )
-        assert a == b
-
-    def test_drops_bad_vectors(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, None), (4, [1.0])],
-            "vec_id long, embedding array<double>",
-        )
-        out = kmeans_assign(df, k=2, iters=2).collect()
-        assert sorted(r["vec_id"] for r in out) == [1, 2]
-
-    def test_null_element_vectors_dropped(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0]), (2, [10.0, 10.0]), (3, [10.0, None])],
-            "vec_id long, embedding array<double>",
-        )
-        out = kmeans_assign(df, k=2, iters=2).collect()
-        assert sorted(r["vec_id"] for r in out) == [1, 2]
-
-    def test_majority_dim_wins_any_order(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        rows = [(i, [float(i), 0.0, 0.0, 0.0]) for i in range(12)]
-        rows.append((99, [5.0, 5.0]))  # corrupt 2-dim minority
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-        for frame in (df, df.repartition(5), df.orderBy(F.desc("vec_id"))):
-            ids = sorted(
-                r["vec_id"]
-                for r in kmeans_assign(frame, k=2, iters=2).collect()
-            )
-            assert ids == list(range(12))
-
-    def test_iters_zero_rejected(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        df = spark.createDataFrame(
-            [(1, [0.0])], "vec_id long, embedding array<double>"
-        )
-        with pytest.raises(ValueError, match="iters"):
-            kmeans_assign(df, k=1, iters=0)
-
-    def test_no_clusterable_vectors_empty_output(self, spark):
-        from datatest_spark.operators.similarity import kmeans_assign
-
-        df = spark.createDataFrame(
-            [(1, None), (2, [1.0, None])],
-            "vec_id long, embedding array<double>",
-        )
-        out = kmeans_assign(df, k=2, iters=2)
-        assert out.count() == 0
-        assert out.columns == ["vec_id", "cluster", "sq_dist"]
-
-    def test_assignment_plan_map_only(self, spark):
-        from datatest_spark.operators.similarity import _euclid_assign
-
-        df = spark.range(10).select(
-            F.col("id"),
-            F.array(F.lit(0.1), F.lit(0.2)).alias("v"),
-        )
-        plan = (
-            _euclid_assign(df, {0: [0.0, 0.0], 1: [1.0, 1.0]})
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in plan
-
-
-class TestEmbeddingGroupDrift:
-    def test_displaced_group_detected(self, spark):
-        from datatest_spark.operators.similarity import (
-            embedding_group_drift,
-        )
-
-        rows = [(i, "a", [0.0, 0.0]) for i in range(10)]
-        rows += [(100 + i, "b", [10.0, 10.0]) for i in range(10)]
-        rows += [(200, "b", None), (201, "a", [1.0, None])]
-        df = spark.createDataFrame(
-            rows, "vec_id long, label string, embedding array<double>"
-        )
-        got = {
-            r["group"]: r
-            for r in embedding_group_drift(df, group_col="label").collect()
-        }
-        # corpus mean = (5,5); both groups displaced by sqrt(50)
-        assert got["a"]["n_vecs"] == 10 and got["b"]["n_vecs"] == 10
-        assert abs(got["a"]["l2_dist"] - 50 ** 0.5) < 1e-3
-        assert abs(got["b"]["l2_dist"] - 50 ** 0.5) < 1e-3
-        # a's mean is the origin: cosine undefined -> null
-        assert got["a"]["cos_sim"] is None
-        assert abs(got["b"]["cos_sim"] - 1.0) < 1e-9
-
-    def test_parallelism_invariant(self, spark):
-        from datatest_spark.operators.similarity import (
-            embedding_group_drift,
-        )
-
-        import random
-
-        rng = random.Random(3)
-        rows = [
-            (i, "s%d" % (i % 3),
-             [rng.uniform(-1, 1) for _ in range(4)])
-            for i in range(60)
-        ]
-        df = spark.createDataFrame(
-            rows, "vec_id long, label string, embedding array<double>"
-        )
-        a = sorted(map(tuple, embedding_group_drift(df, group_col="label")
-                       .collect()))
-        b = sorted(map(tuple,
-                       embedding_group_drift(df.repartition(7),
-                                             group_col="label").collect()))
-        assert a == b
-
-    def test_empty_input(self, spark):
-        from datatest_spark.operators.similarity import (
-            embedding_group_drift,
-        )
-
-        df = spark.createDataFrame(
-            [], "vec_id long, label string, embedding array<double>"
-        )
-        out = embedding_group_drift(df, group_col="label")
-        assert out.count() == 0
-        assert out.columns == ["group", "n_vecs", "l2_dist", "cos_sim"]
-
-
 class TestUnigramLogloss:
     def _df(self, spark):
         return spark.createDataFrame(
@@ -1473,62 +1123,6 @@ class TestGroupShares:
         df = spark.createDataFrame([("b",), ("a",)], "s string")
         rows = group_shares(df, "s").collect()
         assert [r["group"] for r in rows] == ["a", "b"]
-
-
-class TestCentroidDistanceMatrix:
-    def test_diagonal_symmetry_and_hand_case(self, spark):
-        import math
-
-        from datatest_spark.operators.similarity import (
-            centroid_distance_matrix,
-        )
-
-        rows = [
-            ("a", [1.0, 0.0]), ("a", [1.0, 0.0]),
-            ("b", [0.0, 2.0]),
-            ("c", [3.0, 4.0]),
-        ]
-        df = spark.createDataFrame(rows, "label string, embedding array<double>")
-        got = {
-            (r["g_a"], r["g_b"]): r
-            for r in centroid_distance_matrix(
-                df, group_col="label", dim=2
-            ).collect()
-        }
-        assert len(got) == 9
-        for g in ("a", "b", "c"):
-            assert got[(g, g)]["l2_dist"] == 0.0
-            assert got[(g, g)]["cos_sim"] == 1.0
-        # symmetry
-        assert got[("a", "b")]["l2_dist"] == got[("b", "a")]["l2_dist"]
-        # hand values: mean(a)=(1,0), mean(b)=(0,2): l2=sqrt(5), cos=0
-        assert got[("a", "b")]["l2_dist"] == round(math.sqrt(5.0), 4)
-        assert got[("a", "b")]["cos_sim"] == 0.0
-        # mean(c)=(3,4): cos(a,c)=3/5
-        assert got[("a", "c")]["cos_sim"] == 0.6
-
-    def test_empty_and_zero_vector(self, spark):
-        from datatest_spark.operators.similarity import (
-            centroid_distance_matrix,
-        )
-
-        empty = spark.createDataFrame(
-            [], "label string, embedding array<double>"
-        )
-        assert centroid_distance_matrix(empty, group_col="label").collect() == []
-        # a zero-mean group: cosine undefined -> null, never a blow-up
-        df = spark.createDataFrame(
-            [("z", [0.0, 0.0]), ("a", [1.0, 1.0])],
-            "label string, embedding array<double>",
-        )
-        got = {
-            (r["g_a"], r["g_b"]): r
-            for r in centroid_distance_matrix(
-                df, group_col="label", dim=2
-            ).collect()
-        }
-        assert got[("z", "a")]["cos_sim"] is None
-        assert got[("z", "z")]["cos_sim"] is None
 
 
 class TestSourceCrossEntropy:
@@ -2068,33 +1662,6 @@ class TestReviewFixesR3:
                                    "doc_id long, text string")
         rows = t.repetition_signals(df, n=2).collect()
         assert [r["doc_id"] for r in rows] == [2]
-
-    def test_auto_bands_full_recall_clamps(self):
-        from datatest_spark.operators.similarity import _auto_bands
-
-        assert _auto_bands(0.8, 2, 1.0) == 64  # no math-domain crash
-
-    def test_ivf_assign_broadcast_path_matches_literal(self, spark, monkeypatch):
-        import datatest_spark.operators.similarity as sim
-
-        vecs = spark.createDataFrame(
-            [(i, [float(i % 4), float((i * 7) % 5), 1.0]) for i in range(40)],
-            "vec_id long, embedding array<float>",
-        )
-        cents = sim._centroids_from_sample(
-            vecs.select(F.col("vec_id").alias("id"),
-                        sim.as_double(F.col("embedding")).alias("v")),
-            "v", 4, "id",
-        )
-        lit_path = sim.ivf_assign(vecs, cents).collect()
-        monkeypatch.setattr(sim, "IVF_LITERAL_MAX_ELEMS", 0)
-        bc_path = sim.ivf_assign(vecs, cents).collect()
-        key = lambda rows: sorted((r["id"], r["centroid_id"]) for r in rows)
-        assert key(lit_path) == key(bc_path)
-        # broadcast path stays shuffle-free on the vector side
-        plan = (sim.ivf_assign(vecs, cents)._jdf.queryExecution()
-                .executedPlan().toString())
-        assert "Exchange hashpartitioning" not in plan
 
 
 class TestVocabAndKs:
@@ -5028,45 +4595,6 @@ class TestFuzzyDupPairs:
         assert "CartesianProduct" not in plan
 
 
-class TestAnnRecallAudit:
-    def test_full_probe_recall_is_one(self, embs):
-        q = embs.filter(F.col("vec_id") < 10)
-        rows = similarity.ann_recall_audit(
-            embs, q, k=3, n_centroids=8, nprobe=8, centroid_hash="md5"
-        ).collect()
-        assert len(rows) == 10
-        # probing every cell makes IVF search exhaustive == brute force
-        assert all(r["recall"] == 1.0 for r in rows)
-        assert all(r["n_hits"] == r["n_true"] == 3 for r in rows)
-
-    def test_pruned_probe_bounds(self, embs):
-        q = embs.filter(F.col("vec_id") < 10)
-        rows = similarity.ann_recall_audit(
-            embs, q, k=3, n_centroids=8, nprobe=2, centroid_hash="md5"
-        ).collect()
-        assert len(rows) == 10
-        for r in rows:
-            assert 0 <= r["n_hits"] <= r["n_true"] <= 3
-            assert r["recall"] == round(r["n_hits"] / r["n_true"], 4)
-
-    def test_agrees_with_direct_set_intersection(self, embs):
-        q = embs.filter(F.col("vec_id") < 5)
-        kw = dict(k=3, n_centroids=8, nprobe=4, centroid_hash="md5")
-        exact = similarity.brute_force_topk(embs, q, k=3).collect()
-        approx = similarity.ivf_topk(embs, q, **kw).collect()
-        es, asets = {}, {}
-        for r in exact:
-            es.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        for r in approx:
-            asets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        got = {
-            r["query_id"]: r["n_hits"]
-            for r in similarity.ann_recall_audit(embs, q, **kw).collect()
-        }
-        for qid, true_set in es.items():
-            assert got[qid] == len(true_set & asets.get(qid, set()))
-
-
 class TestQuantileShift:
     def test_hand_fixture_shifts(self, spark):
         rows = [("base", float(v)) for v in range(1, 101)]
@@ -5253,7 +4781,7 @@ class TestFreqSpectrum:
 
 class TestSession7Ops:
     """Pins for the session-7 overflow-window operators
-    (jaccard_sweep, chain_collapse, hubness): each is value-oracled in
+    (jaccard_sweep, chain_collapse): each is value-oracled in
     the tools/check_oracles.py mirror sweep; these pins lock the
     semantics on hand-built fixtures."""
 
@@ -5357,222 +4885,6 @@ class TestSession7Ops:
         r = dedup.chain_collapse_audit(df, k=1, threshold=0.5).collect()[0]
         assert (r["n_edges"], r["n_wedges"], r["n_closed"]) == (1, 0, 0)
         assert r["transitivity"] is None
-
-    # --- hubness_audit ---
-
-    def test_hubness_hand_hub_and_antihub(self, spark):
-        import math
-
-        a = math.radians(10.0)
-        df = spark.createDataFrame(
-            [
-                (0, [1.0, 0.0]),
-                (1, [math.cos(a), math.sin(a)]),
-                (2, [math.cos(a), -math.sin(a)]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        rows = {
-            r["vec_id"]: (r["in_degree"], r["in_share"])
-            for r in similarity.hubness_audit(df, k=1).collect()
-        }
-        # v1 and v2 both sit 10 deg from v0 but 20 deg from each other,
-        # so v0 is both their top-1; v0's own top-1 tie (identical
-        # cosine) breaks to the smaller id, v1. v2 is the antihub.
-        assert rows[0] == (2, 1.0)
-        assert rows[1] == (1, 0.5)
-        assert rows[2] == (0, 0.0)
-
-    def test_hubness_degree_mass_and_coverage(self, embs):
-        rows = similarity.hubness_audit(embs, k=3).collect()
-        n = embs.count()
-        assert len(rows) == n  # every corpus point, antihubs included
-        # each of the n query lists hands out exactly k in-degrees
-        assert sum(r["in_degree"] for r in rows) == n * 3
-
-    def test_hubness_precomputed_topk_scopes_queries(self, embs):
-        queries = embs.filter(F.col("vec_id") < 10)
-        topk = similarity.brute_force_topk(embs, queries, k=3)
-        rows = similarity.hubness_audit(embs, topk=topk).collect()
-        assert len(rows) == embs.count()
-        assert sum(r["in_degree"] for r in rows) == 10 * 3
-        # denominator is Q-1 = 9 (distinct query lists), not corpus N
-        for r in rows:
-            assert r["in_share"] == round(r["in_degree"] / 9.0, 4)
-
-
-class TestSession7Batch2:
-    """Pins for dup_embedding_consistency (q:dup_embedding_check in the
-    mirror sweep)."""
-
-    def _dup_frames(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "same text"), (2, "same text"), (3, "same text"),
-                (4, "other copy"), (5, "other copy"),
-                (6, "unique content"),
-                (10, "partially embedded"), (11, "partially embedded"),
-                (12, "partially embedded"),
-            ],
-            "doc_id long, text string",
-        )
-        embs = spark.createDataFrame(
-            [
-                (1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0]),
-                (4, [1.0, 1.0]), (5, [1.0, 1.0]),
-                (6, [0.5, 0.5]),
-                # doc 10 has NO embedding: rep falls to 11
-                (11, [1.0, 0.0]), (12, [1.0, 0.0]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        return docs, embs
-
-    def test_dup_consistency_hand_groups(self, spark):
-        docs, embs = self._dup_frames(spark)
-        rows = {
-            r["rep_id"]: (r["n_members"], r["mean_cos"], r["min_cos"])
-            for r in similarity.dup_embedding_consistency(
-                docs, embs
-            ).collect()
-        }
-        # group {1,2,3}: cos(2,1)=1, cos(3,1)=0 -> mean 0.5, min 0.0
-        assert rows[1] == (3, 0.5, 0.0)
-        # group {4,5}: identical embeddings -> mean = min = 1.0
-        assert rows[4] == (2, 1.0, 1.0)
-        # unique doc 6: no group; docs {10,11,12}: rep is 11 (the
-        # smallest EMBEDDED member), one other member at cos 1.0
-        assert rows[11] == (2, 1.0, 1.0)
-        assert set(rows) == {1, 4, 11}
-
-    def test_dup_consistency_single_embedded_member_dropped(self, spark):
-        docs = spark.createDataFrame(
-            [(7, "pair text"), (8, "pair text")],
-            "doc_id long, text string",
-        )
-        embs = spark.createDataFrame(
-            [(7, [1.0, 0.0])], "vec_id long, embedding array<double>"
-        )
-        # only one member carries an embedding: nothing to compare
-        assert similarity.dup_embedding_consistency(docs, embs).count() == 0
-
-    def test_dup_consistency_column_text_key(self, spark):
-        from datatest_spark.operators import text as t
-
-        docs = spark.createDataFrame(
-            [(1, "Hello,   World!"), (2, "hello world")],
-            "doc_id long, text string",
-        )
-        embs = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [1.0, 0.0])],
-            "vec_id long, embedding array<double>",
-        )
-        # byte-different, normalization-identical: only the Column key
-        # sees the group
-        assert similarity.dup_embedding_consistency(docs, embs).count() == 0
-        got = similarity.dup_embedding_consistency(
-            docs, embs, text_col=t.normalize_text()
-        ).collect()
-        assert [(r["rep_id"], r["n_members"]) for r in got] == [(1, 2)]
-
-
-class TestSession8Ops:
-    """Pins for the session-8 overflow-window operators
-    (embedding_covariance + covariance_spectrum): the covariance query
-    is value-oracled in the tools/check_oracles.py mirror sweep; these
-    pins lock the moment math and the spectral collapse alarm on
-    hand-built fixtures."""
-
-    def test_covariance_matches_numpy_population(self, spark):
-        import numpy as np
-
-        rng = [
-            [0.5, -0.25, 0.125], [1.0, 0.5, -0.5], [-0.75, 0.25, 1.0],
-            [0.0, -1.0, 0.5], [0.25, 0.75, -0.125],
-        ]
-        df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(rng)],
-            "vec_id long, embedding array<double>",
-        )
-        got = {
-            (r["i"], r["j"]): (r["n_vecs"], r["cov"], r["corr"])
-            for r in similarity.embedding_covariance(df).collect()
-        }
-        want = np.cov(np.array(rng).T, ddof=0)
-        assert len(got) == 6
-        for (i, j), (n, cov, corr) in got.items():
-            assert n == 5
-            # fixed-point floor at 2^-20 keeps moments within ~1e-5
-            assert abs(cov - want[i, j]) < 1e-4, (i, j)
-            denom = (want[i, i] * want[j, j]) ** 0.5
-            assert abs(corr - want[i, j] / denom) < 1e-3, (i, j)
-        # diagonal correlation is exactly 1 after rounding
-        for i in range(3):
-            assert got[(i, i)][2] == 1.0
-
-    def test_covariance_drops_bad_vectors_and_infers_dim(self, spark):
-        df = spark.createDataFrame(
-            [
-                (1, [1.0, 2.0]), (2, [3.0, 4.0]), (3, [5.0, 6.0]),
-                (4, None), (5, [1.0, None]), (6, [1.0, 2.0, 3.0]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        rows = similarity.embedding_covariance(df).collect()
-        assert all(r["n_vecs"] == 3 for r in rows)  # modal dim=2, 3 clean
-        assert {(r["i"], r["j"]) for r in rows} == {(0, 0), (0, 1), (1, 1)}
-
-    def test_covariance_zero_variance_corr_null(self, spark):
-        df = spark.createDataFrame(
-            [(1, [1.0, 2.0]), (2, [1.0, 3.0])],
-            "vec_id long, embedding array<double>",
-        )
-        got = {
-            (r["i"], r["j"]): r["corr"]
-            for r in similarity.embedding_covariance(df).collect()
-        }
-        assert got[(0, 0)] is None      # var(dim0) == 0
-        assert got[(0, 1)] is None
-        assert got[(1, 1)] == 1.0
-
-    def test_covariance_guards(self, spark):
-        df = spark.createDataFrame(
-            [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
-        )
-        with pytest.raises(ValueError, match="max_dim"):
-            similarity.embedding_covariance(df, dim=2048)
-        with pytest.raises(ValueError, match="dim"):
-            similarity.embedding_covariance(df, dim=0)
-        empty = spark.createDataFrame(
-            [], "vec_id long, embedding array<double>"
-        )
-        assert similarity.embedding_covariance(empty).count() == 0
-
-    def test_spectrum_rank1_collapse_vs_spread(self, spark):
-        # rank-1 cloud: every vector is a multiple of u -> effective
-        # rank ~= 1, top direction carries ~all variance
-        u = [0.6, -0.8, 0.0, 0.2]
-        rank1 = spark.createDataFrame(
-            [(i, [c * x for x in u]) for i, c in enumerate(
-                [-2.0, -1.0, 0.0, 1.0, 2.0, 3.0])],
-            "vec_id long, embedding array<double>",
-        )
-        rows = similarity.covariance_spectrum(rank1).collect()
-        assert rows[0]["rank"] == 1
-        assert rows[0]["var_explained"] > 0.999
-        assert rows[0]["effective_rank"] < 1.01
-        # axis-aligned isotropic cloud: effective rank near d
-        iso = spark.createDataFrame(
-            [
-                (1, [1.0, 0.0, 0.0]), (2, [-1.0, 0.0, 0.0]),
-                (3, [0.0, 1.0, 0.0]), (4, [0.0, -1.0, 0.0]),
-                (5, [0.0, 0.0, 1.0]), (6, [0.0, 0.0, -1.0]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        iso_rows = similarity.covariance_spectrum(iso).collect()
-        assert iso_rows[0]["effective_rank"] > 2.99
-        assert abs(iso_rows[-1]["cum_var"] - 1.0) < 1e-6
 
 
 class TestSeriesAutocorr:
@@ -5839,151 +5151,6 @@ class TestCompressionRatio:
         assert got["s"]["pooled_ratio"] == round(z_s / raw_s, 6)
         assert got["s"]["bits_per_byte"] == round(z_s * 8.0 / raw_s, 4)
         assert got["__null__"]["n_docs"] == 1
-
-
-class TestSemanticContamination:
-    """Pins for the session-9 embedding-space decontamination operator
-    (similarity.semantic_contamination / decontaminate_semantic): the
-    registered query is value-oracled in the tools/check_oracles.py
-    mirror sweep; these pins lock the argmax semantics, the tie order,
-    the threshold boundary, and the null/empty degradations on
-    hand-built fixtures."""
-
-    def _frames(self, spark):
-        # corpus doc 1 is nearly parallel to eval 10, doc 2 orthogonal
-        # to everything, doc 3 anti-parallel (cos -1 never reaches tau)
-        corpus = spark.createDataFrame(
-            [
-                (1, [1.0, 0.0, 0.0]),
-                (2, [0.0, 0.0, 1.0]),
-                (3, [-1.0, 0.0, 0.0]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        evals = spark.createDataFrame(
-            [
-                (10, [0.9, 0.1, 0.0]),
-                (11, [0.0, 1.0, 0.0]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        return corpus, evals
-
-    def test_argmax_and_threshold(self, spark):
-        corpus, evals = self._frames(spark)
-        got = {
-            r["vec_id"]: (r["eval_id"], r["cos_sim"])
-            for r in similarity.semantic_contamination(
-                corpus, evals, tau=0.5
-            ).collect()
-        }
-        # only doc 1 clears tau=0.5; its argmax is eval 10
-        assert set(got) == {1}
-        eid, cs = got[1]
-        assert eid == 10
-        assert cs == round(0.9 / (0.81 + 0.01) ** 0.5, 4)
-
-    def test_threshold_is_inclusive_on_unrounded_value(self, spark):
-        # cos(corpus, eval) == 1.0 exactly (identical direction)
-        corpus = spark.createDataFrame(
-            [(1, [2.0, 0.0])], "vec_id long, embedding array<double>"
-        )
-        evals = spark.createDataFrame(
-            [(9, [4.0, 0.0])], "vec_id long, embedding array<double>"
-        )
-        rows = similarity.semantic_contamination(
-            corpus, evals, tau=1.0
-        ).collect()
-        assert [(r["vec_id"], r["eval_id"], r["cos_sim"]) for r in rows] == [
-            (1, 9, 1.0)
-        ]
-
-    def test_tie_breaks_toward_smaller_eval_id(self, spark):
-        corpus = spark.createDataFrame(
-            [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
-        )
-        # two eval items at the SAME cosine (both parallel to corpus);
-        # registration order reversed so order-of-evaluation cannot win
-        evals = spark.createDataFrame(
-            [(20, [3.0, 0.0]), (7, [5.0, 0.0])],
-            "vec_id long, embedding array<double>",
-        )
-        rows = similarity.semantic_contamination(
-            corpus, evals, tau=0.9
-        ).collect()
-        assert [(r["vec_id"], r["eval_id"]) for r in rows] == [(1, 7)]
-
-    def test_null_vectors_excluded_both_sides(self, spark):
-        corpus = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, None), (3, [1.0, None])],
-            "vec_id long, embedding array<double>",
-        )
-        evals = spark.createDataFrame(
-            [(10, [1.0, 0.0]), (11, None), (12, [None, 1.0])],
-            "vec_id long, embedding array<double>",
-        )
-        rows = similarity.semantic_contamination(
-            corpus, evals, tau=0.0
-        ).collect()
-        # null corpus rows never emitted; null eval rows never matched
-        assert [(r["vec_id"], r["eval_id"]) for r in rows] == [(1, 10)]
-
-    def test_empty_eval_yields_empty_not_error(self, spark):
-        corpus, evals = self._frames(spark)
-        empty = evals.where("vec_id < 0")
-        assert (
-            similarity.semantic_contamination(corpus, empty, tau=0.0).count()
-            == 0
-        )
-
-    def test_survivors_complement(self, spark):
-        corpus, evals = self._frames(spark)
-        hits = {
-            r["vec_id"]
-            for r in similarity.semantic_contamination(
-                corpus, evals, tau=0.5
-            ).collect()
-        }
-        survivors = {
-            r["vec_id"]
-            for r in similarity.decontaminate_semantic(
-                corpus, evals, tau=0.5
-            ).collect()
-        }
-        assert hits == {1}
-        assert survivors == {2, 3}
-        assert hits | survivors == {1, 2, 3}
-
-    def test_zero_and_nan_vectors_excluded_both_sides(self, spark):
-        # all-zero vectors have NaN cosine, and NaN ELEMENTS propagate
-        # NaN cosines; Spark orders NaN above every real, so either
-        # would "win" the argmax at any tau without the guard
-        nan = float("nan")
-        corpus = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [nan, 1.0])],
-            "vec_id long, embedding array<double>",
-        )
-        evals = spark.createDataFrame(
-            [(10, [0.0, 0.0]), (11, [1.0, 0.0]), (12, [1.0, nan])],
-            "vec_id long, embedding array<double>",
-        )
-        rows = similarity.semantic_contamination(
-            corpus, evals, tau=0.5
-        ).collect()
-        assert [(r["vec_id"], r["eval_id"]) for r in rows] == [(1, 11)]
-
-    def test_custom_columns_and_id_types(self, spark):
-        corpus = spark.createDataFrame(
-            [("a", [1.0, 0.0])], "doc string, emb array<double>"
-        )
-        evals = spark.createDataFrame(
-            [("e1", [1.0, 0.0])], "eid string, vec array<double>"
-        )
-        rows = similarity.semantic_contamination(
-            corpus, evals, tau=0.9, id_col="doc", vec_col="emb",
-            eval_id_col="eid", eval_vec_col="vec",
-        ).collect()
-        assert [(r["doc"], r["eval_id"]) for r in rows] == [("a", "e1")]
 
 
 class TestTrigramBackoff:

@@ -110,26 +110,6 @@ class TestBroadcasts:
         # the matched set collapses map-side before the broadcast
         assert "HashAggregate" in p
 
-    def test_cosine_topk_broadcasts_query_side(self, spark, sf_dir):
-        from datatest_spark.operators.similarity import brute_force_topk
-
-        e = spark.read.parquet(sf_dir + "/embeddings.parquet")
-        p = _plan(brute_force_topk(e, e.filter("vec_id < 3"), k=2))
-        assert "Broadcast" in p  # query batch is the broadcast side
-
-    def test_ivf_assign_is_map_only(self, spark, sf_dir):
-        # nearest-centroid assignment must be a pure map over the scan:
-        # no crossJoin row blowup, no hash exchange on the id space —
-        # the argmax runs as one aggregate() over a literal centroid
-        # array (VERDICT r2 #2: the old window form shuffled 10^12 keys)
-        from datatest_spark.operators import similarity
-
-        e = spark.read.parquet(sf_dir + "/embeddings.parquet")
-        cents = similarity._centroids_from_sample(e, "embedding", 8, "vec_id")
-        p = _plan(similarity.ivf_assign(e, cents))
-        assert _exchanges(p) == 0
-        assert "Window" not in p and "Join" not in p
-
 
 class TestPackingPlans:
     def test_mixture_sample_is_map_only(self, docs):
@@ -702,75 +682,6 @@ class TestSession7Plans:
         from datatest_spark.operators import dedup as d
 
         plan = _plan(d.chain_collapse_audit(docs, threshold=0.5))
-        assert "CartesianProduct" not in plan, plan
-
-    def test_hubness_indegree_is_one_agg_plus_broadcast(self, spark, sf_dir):
-        """Counting in-degrees from a precomputed k-NN graph costs one
-        aggregation + one join back to the corpus ids + a broadcast
-        one-row query count — the corpus-sized side never shuffles
-        through a sort-merge join."""
-        from datatest_spark.operators import similarity as s
-
-        embs = spark.read.parquet(sf_dir + "/embeddings.parquet")
-        topk = s.brute_force_topk(embs, embs.filter(F.col("vec_id") < 10), k=3)
-        plan = _plan(s.hubness_audit(embs, topk=topk))
-        assert "CartesianProduct" not in plan, plan
-        # the 1-row count frame must come in broadcast, not shuffled
-        assert "BroadcastNestedLoopJoin" in plan, plan
-
-    def test_dup_consistency_no_cartesian_single_rep_fanout(
-        self, spark, sf_dir
-    ):
-        """Members meet ONLY their representative through an equi-join
-        on the content hash — never pairwise; no cartesian product."""
-        from datatest_spark.operators import similarity as s
-
-        docs = spark.read.parquet(sf_dir + "/documents.parquet")
-        embs = spark.read.parquet(sf_dir + "/embeddings.parquet")
-        plan = _plan(s.dup_embedding_consistency(docs, embs))
-        assert "CartesianProduct" not in plan, plan
-
-
-class TestSession8Plans:
-    def test_covariance_moments_one_exchange_no_join(self, spark, sf_dir):
-        """The covariance sufficient statistics are ONE explode of the
-        per-row pair array into ONE map-side-combinable groupBy(i, j):
-        a single Exchange of <= d(d+3)/2 partially-aggregated keys per
-        task, no join, nothing proportional to corpus size shuffled."""
-        from datatest_spark.operators import similarity as s
-
-        embs = spark.read.parquet(sf_dir + "/embeddings.parquet")
-        v = embs.select(
-            s.as_double(F.col("embedding")).alias("v")
-        ).where(F.col("v").isNotNull())
-        plan = _plan(s._pair_moment_stats(v, 8, 20))
-        assert _exchanges(plan) == 1, plan
-        assert "Join" not in plan, plan
-        assert "partial_sum" in plan or "HashAggregate" in plan, plan
-
-
-class TestSemanticContaminationPlan:
-    def test_corpus_side_is_map_only(self, spark, sf_dir):
-        """The corpus never shuffles: the ONLY Exchange in the plan is
-        the tiny eval-side collect_list carrier agg (plus its broadcast);
-        the corpus path is scan -> BroadcastNestedLoopJoin -> filter/
-        project with the argmax folded in-row — no groupBy(doc), no
-        sort-merge join, no per-doc window."""
-        from datatest_spark.operators import similarity
-
-        emb = spark.read.parquet(sf_dir + "/embeddings.parquet")
-        is_eval = F.substring(
-            F.md5(F.col("vec_id").cast("string")), 1, 1
-        ).isin("0", "1")
-        out = similarity.semantic_contamination(
-            emb.where(~is_eval), emb.where(is_eval), tau=0.3
-        )
-        plan = _plan(out)
-        # one Exchange: the single-row eval carrier agg
-        assert _exchanges(plan) <= 1, plan
-        assert "BroadcastNestedLoopJoin" in plan, plan
-        assert "SortMergeJoin" not in plan, plan
-        assert "Window" not in plan, plan
         assert "CartesianProduct" not in plan, plan
 
 

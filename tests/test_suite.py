@@ -339,21 +339,69 @@ class TestSuiteEndToEnd:
         n_corrupt = v.filter("kind = 'invalid'").count()
         assert n_corrupt > 0
 
-    def test_token_equality_native_vs_udf_parity(self, spark):
+    @staticmethod
+    def _token_equality_oracle(data, ref):
+        """Plain-Python answer from the collected frames: a reference id
+        absent from the data is missing; a present one whose token list
+        differs (None-safe, order- and length-sensitive) is invalid."""
+        got = {r["doc_id"]: r["tokens"] for r in data.collect()}
+        want = {r["doc_id"]: r["tokens"] for r in ref.collect()}
+        return {
+            str(i): ("missing" if i not in got else "invalid")
+            for i, toks in want.items()
+            if i not in got or got[i] != toks
+        }
+
+    @staticmethod
+    def _token_equality_kinds(data, ref):
+        from datatest_spark.operators.rowpred import token_equality_violations
+
+        rows = token_equality_violations(data, ref).collect()
+        out = {r["doc_id"]: r["kind"] for r in rows}
+        assert len(out) == len(rows)  # one violation per id
+        return out
+
+    def test_token_equality_matches_python_oracle(self, spark):
         data = tokenized_sequences(spark, 400, seed=31, dup_rate=0,
                                    len_mismatch_rate=0, bad_source_rate=0, null_rate=0)
         ref = ref_tokens(spark, 400, seed=31, corrupt_rate=0.05, missing_rate=0.0)
-        from datatest_spark.operators.rowpred import token_equality_violations
+        expected = self._token_equality_oracle(data, ref)
+        assert len(expected) > 0
+        assert self._token_equality_kinds(data, ref) == expected
 
-        native = sorted(
-            r["doc_id"]
-            for r in token_equality_violations(data, ref, use_udf=False).collect()
+    def test_token_equality_edge_cases(self, spark):
+        schema = "doc_id long, tokens array<int>"
+        pairs = {
+            1: ([1, 2, 3], [1, 2, 3]),
+            2: (None, [1]),             # null array, data side
+            3: ([1], None),             # null array, reference side
+            4: (None, None),
+            5: ([1, None, 3], [1, None, 3]),
+            6: ([1, None, 3], [1, 3, None]),  # null element moved
+            7: ([None, 5], [5, None]),
+            8: ([None], []),
+            9: ([], []),
+            10: ([], None),
+            11: ([1, 2], [1, 2, 3]),    # unequal lengths
+            12: ([1, 2, 3], [3, 2, 1]),  # reordered elements
+            13: ([1, -1, 2], [1, -1, 2]),
+            14: ([1, -1, 2], [1, 2, -1]),
+        }
+        data = spark.createDataFrame(
+            [(i, a) for i, (a, _) in pairs.items()] + [(50, [7])], schema
         )
-        via_udf = sorted(
-            r["doc_id"]
-            for r in token_equality_violations(data, ref, use_udf=True).collect()
+        # 99 is absent from the data (missing); 50 is absent from the
+        # reference (not a violation)
+        ref = spark.createDataFrame(
+            [(i, b) for i, (_, b) in pairs.items()] + [(99, [7])], schema
         )
-        assert native == via_udf and len(native) > 0
+        expected = self._token_equality_oracle(data, ref)
+        assert expected == {
+            "2": "invalid", "3": "invalid", "6": "invalid", "7": "invalid",
+            "8": "invalid", "10": "invalid", "11": "invalid",
+            "12": "invalid", "14": "invalid", "99": "missing",
+        }
+        assert self._token_equality_kinds(data, ref) == expected
 
 
 class TestRowCheckFusion:
