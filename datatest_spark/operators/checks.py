@@ -4,7 +4,7 @@ Each check is a named object with a stable ``check_id`` and one form:
 
 ``row_conditions(df)``
     Row checks: per-row violation conditions as Column dicts. The suite
-    fuses every row check into one input scan (``fuse_row_conditions``).
+    fuses every row check into one input scan (``fused_scan``).
     Their ``violations(df)`` is derived, not written: the fused plan of
     that check's conditions alone, so a direct call and the suite share
     one implementation.
@@ -64,10 +64,7 @@ class BaseCheck(object):
     def violations(self, df: DataFrame) -> DataFrame | None:
         """A row check's own plan: the fused plan of its conditions
         alone. None for a check without ``row_conditions``."""
-        conds = self.row_conditions(df)
-        if conds is None:
-            return None
-        return fuse_row_conditions(df, [(self.check_id, conds)])
+        return fuse_row_checks(df, [self])
 
     def stat_names(self) -> list:
         """The ``<column>__<stat>`` names ``stats_violations`` reads."""
@@ -87,6 +84,9 @@ class BaseCheck(object):
         scan by the suite runner (SURVEY §3.1 shuffle family (c)) — one
         pass emits every row-level violation via when()/explode instead
         of one scan per check. Return None to keep a dedicated plan.
+        The suite builds them once per input schema and applies them to
+        later frames of that schema, so name columns with ``F.col``, not
+        ``df[...]``, and read only ``df``'s schema.
 
         No higher-order function (``forall``/``exists``/``filter``/
         ``transform``/``aggregate`` with a lambda) in a ``cond``: those
@@ -101,19 +101,23 @@ class BaseCheck(object):
 
 def fuse_row_checks(df: DataFrame, checks) -> DataFrame | None:
     """One scan for all fusable row-level ``checks`` (None when any of
-    them has no ``row_conditions``); see ``fuse_row_conditions``."""
+    them has no ``row_conditions``); see ``fused_scan``."""
     built = []
     for check in checks:
         conds = check.row_conditions(df)
         if conds is None:
             return None
         built.append((check.check_id, conds))
-    return fuse_row_conditions(df, built)
+    scan = fused_scan(built)
+    return scan(df) if scan is not None else None
 
 
-def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
-    """One scan for already-built row conditions: ``built`` is a list of
-    ``(check_id, row_conditions(df))`` pairs.
+def fused_scan(built):
+    """The fused scan of ``built`` (``(check_id, row_conditions(df))``
+    pairs) as a function from a frame to its violation plan, or None
+    when there are no conditions. Every Column is built here, once, so
+    a caller holding the function applies it to any frame with the
+    columns the conditions name without rebuilding them.
 
     Builds, per check condition, a nullable violation struct that
     carries its own check's ``doc_id``, so checks with different id
@@ -133,10 +137,19 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
         return col.cast("string") if col is not None else F.lit(None).cast("string")
 
     structs = []
+    any_cond = None
     for check_id, c in specs:
+        cc = F.coalesce(c["cond"], F.lit(False))
+        # Filter FIRST on the disjunction of all conditions — a pure
+        # codegen predicate that prunes the ~99.9% clean rows before any
+        # struct/array allocation. Without this the explode allocates
+        # per input row and GC saturates at high thread counts
+        # (measured: 12.6s@8thr vs 15.2s@32thr on 4M rows; with the
+        # pre-filter the scan scales).
+        any_cond = cc if any_cond is None else (any_cond | cc)
         structs.append(
             F.when(
-                F.coalesce(c["cond"], F.lit(False)),
+                cc,
                 F.struct(
                     F.lit(check_id).alias("check_id"),
                     F.lit(c["kind"]).alias("kind"),
@@ -158,25 +171,11 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
                 ),
             ).alias("_v{0}".format(len(structs)))
         )
-
-    # Filter FIRST on the disjunction of all conditions — a pure codegen
-    # predicate that prunes the ~99.9% clean rows before any struct/array
-    # allocation. Without this the explode allocates per input row and
-    # GC saturates at high thread counts (measured: 12.6s@8thr vs
-    # 15.2s@32thr on 4M rows; with the pre-filter the scan scales).
-    any_cond = None
-    for _, c in specs:
-        cc = F.coalesce(c["cond"], F.lit(False))
-        any_cond = cc if any_cond is None else (any_cond | cc)
-    exploded = (
-        df.filter(any_cond)
-        .select(
-            F.col("partition_key"),
-            F.explode(F.array(*structs)).alias("_v"),
-        )
-        .filter(F.col("_v").isNotNull())
-    )
-    return exploded.select(
+    exploded = [
+        F.col("partition_key"), F.explode(F.array(*structs)).alias("_v"),
+    ]
+    emitted = F.col("_v").isNotNull()
+    out = [
         F.col("_v.check_id").alias("check_id"),
         F.col("_v.kind").alias("kind"),
         F.col("partition_key").cast("string").alias("partition_key"),
@@ -186,7 +185,12 @@ def fuse_row_conditions(df: DataFrame, built) -> DataFrame | None:
         F.col("_v.expected").alias("expected"),
         F.col("_v.deviation").alias("deviation"),
         F.col("_v.detail").alias("detail"),
-    )
+    ]
+
+    def scan(df):
+        return df.filter(any_cond).select(*exploded).filter(emitted).select(*out)
+
+    return scan
 
 
 class SchemaConformanceCheck(BaseCheck):
@@ -521,14 +525,13 @@ class TokenRangeCheck(BaseCheck):
 
     def _bad(self, ac):
         # array_min/array_max skip nulls, so a null element is probed
-        # apart: arrays_overlap(ac, [-1]) is NULL exactly when the
-        # arrays share no element, both are non-empty and ac holds a
-        # null (a shared -1 is caught by array_min anyway). Empty and
+        # apart: array_contains(ac, -1) is NULL exactly when ac holds a
+        # null and no -1 (a -1 is caught by array_min anyway). Empty and
         # null arrays never violate.
         return ac.isNotNull() & (
             (F.array_min(ac) < 0)
             | (F.array_max(ac) >= self.vocab)
-            | F.arrays_overlap(ac, F.array(F.lit(-1))).isNull()
+            | F.array_contains(ac, -1).isNull()
         )
 
     def _first_bad(self, ac):

@@ -22,7 +22,7 @@ from ..differences import ValidationError
 from ..schema import MANIFEST_SCHEMA, VERDICT_SCHEMA, VIOLATION_SCHEMA
 from ..session import local_frame
 from ..validation import _rows_to_differences
-from ..operators.checks import SchemaConformanceCheck, fuse_row_conditions
+from ..operators.checks import SchemaConformanceCheck, fused_scan
 from ..operators.drift import DriftCheck
 from ..operators.stats import declared_stat_exprs, partition_key_col
 
@@ -65,6 +65,39 @@ class SuiteResult(object):
             )
 
 
+class _Columns(object):
+    """The Columns a suite run builds on the driver for one input
+    schema: the partition key, the stats pass's aggregates and the fused
+    row-check scan. They name columns, not a frame, so every run over
+    the same schema shares them: each ``F.*`` call costs several py4j
+    round trips. DataFrame-valued plans (uniqueness, joins) are not
+    held here; each run builds those over its own frame."""
+
+    def __init__(self, suite, df):
+        self.partition_key = partition_key_col(suite.partition_cols)
+        # built before any job: a stat no column supports raises here
+        self.stat_exprs = declared_stat_exprs(df, dict.fromkeys(
+            n for c in suite.checks if c.uses_stats for n in c.stat_names()
+        ))
+        keyed = df.withColumn("partition_key", self.partition_key)
+        # row checks that expose row_conditions() are FUSED into one
+        # input scan (shuffle family (c) = exactly one job); join/agg
+        # checks keep dedicated plans, built per run
+        self.plan_checks = []
+        fusable = []
+        for check in suite.checks:
+            if isinstance(check, (SchemaConformanceCheck, DriftCheck)) or (
+                check.uses_stats
+            ):
+                continue
+            conds = check.row_conditions(keyed)
+            if conds is not None:
+                fusable.append((check.check_id, conds))
+            else:
+                self.plan_checks.append(check)
+        self.scan = fused_scan(fusable)
+
+
 class ValidationSuite(object):
     """Composable check suite over a partitioned table.
 
@@ -78,6 +111,19 @@ class ValidationSuite(object):
         self.checks = list(checks)
         self.partition_cols = list(partition_cols)
         self.acceptances = list(acceptances or [])
+        # {(input schema, checks, partition_cols): _Columns}
+        self._columns = {}
+
+    def _columns_for(self, df):
+        """The run's driver-built Columns for ``df``'s schema, built on
+        the first run over that schema and reused after. The key holds
+        the check objects themselves, so a run after ``checks`` or
+        ``partition_cols`` changed builds anew."""
+        key = (df.schema, tuple(self.checks), tuple(self.partition_cols))
+        cols = self._columns.get(key)
+        if cols is None:
+            cols = self._columns[key] = _Columns(self, df)
+        return cols
 
     # -- manifest / resume (C3) -------------------------------------------
     @staticmethod
@@ -171,6 +217,19 @@ class ValidationSuite(object):
         lock and the single-writer discipline falls to the orchestrator
         (documented, same as Delta-less parquet sinks everywhere).
 
+        Two rules keep a run's fixed cost down. (a) A run pays only for
+        rows it still has to validate: when the stats pass returns no
+        partition (every partition is already complete, or the input is
+        empty), the checks read ``keyed.limit(0)``, an empty relation
+        Catalyst folds, so no check scans or shuffles the input; with no
+        violation the acceptances are not applied, and a run that
+        validated no partition writes no manifest file. The checks still
+        see zero rows, so the outputs do not change. (b) The
+        partition-key Column, the stats aggregates and the fused
+        row-check projection are built once per (input schema, check
+        objects, partition columns) and reused by later runs; a new
+        schema or a changed ``checks`` list builds anew.
+
         ``SuiteResult.phases`` records the wall seconds of each phase,
         in order: setup, stats_pass, plan_build, violations_eval,
         acceptances, sink_write, verdicts_manifest — the first place to
@@ -227,25 +286,22 @@ class ValidationSuite(object):
         def _mark(name):
             marks.append((name, time.perf_counter()))
 
-        keyed = df.withColumn(
-            "partition_key", partition_key_col(self.partition_cols)
-        )
-        # built before any job: a stat no column supports raises here
-        stat_exprs = declared_stat_exprs(df, dict.fromkeys(
-            n for c in self.checks if c.uses_stats for n in c.stat_names()
-        ))
+        cols = self._columns_for(df)
+        keyed = df.withColumn("partition_key", cols.partition_key)
 
+        # only the resume guard and the manifest read the input hash
         input_files_hash = None
-        try:
-            files = sorted(df.inputFiles())
-            if files:
-                import hashlib
+        if manifest_dir:
+            try:
+                files = sorted(df.inputFiles())
+                if files:
+                    import hashlib
 
-                input_files_hash = hashlib.sha256(
-                    "\n".join(files).encode()
-                ).hexdigest()[:16]
-        except Exception:
-            pass
+                    input_files_hash = hashlib.sha256(
+                        "\n".join(files).encode()
+                    ).hexdigest()[:16]
+            except Exception:
+                pass
 
         skipped_metrics = {}
         if resume and manifest_dir:
@@ -310,22 +366,25 @@ class ValidationSuite(object):
         # shuffle, which absorbs a hot partition key
         stats_rows = [
             r.asDict()
-            for r in keyed.groupBy("partition_key").agg(*stat_exprs).collect()
+            for r in keyed.groupBy("partition_key").agg(*cols.stat_exprs)
+            .collect()
         ]
         _mark("stats_pass")
+        if not stats_rows:
+            # every row of keyed belongs to a completed partition (or the
+            # input is empty): the checks read an empty relation, which
+            # Catalyst folds, so no check scans or shuffles the input.
+            # They still see zero rows, so their outputs do not change.
+            keyed = keyed.limit(0)
         # resumed partitions count toward the total: a monitor comparing
         # n_rows against the expected table size must not false-alarm on
         # every resumed run
         n_rows_total = sum(r["n_rows"] for r in stats_rows) + resumed_rows
         all_partitions = sorted(r["partition_key"] for r in stats_rows)
 
-        # (b)+(c) violation plans per check. Row-level checks that expose
-        # row_conditions() are FUSED into one input scan (shuffle family
-        # (c) = exactly one job); join/agg checks keep dedicated plans.
-        # Each check's conditions are built once and handed to the fuser.
+        # (b)+(c) violation plans per check: the dedicated plans of the
+        # join/agg checks, then the one fused scan of every row check
         driver_rows = []
-        plans = []
-        fusable = []
         for check in self.checks:
             if isinstance(check, SchemaConformanceCheck):
                 for d in check.schema_violations(keyed):
@@ -335,17 +394,12 @@ class ValidationSuite(object):
                 driver_rows.extend(check.drift_violations(keyed))
             elif check.uses_stats:
                 driver_rows.extend(check.stats_violations(stats_rows))
-            else:
-                conds = check.row_conditions(keyed)
-                if conds is not None:
-                    fusable.append((check.check_id, conds))
-                else:
-                    plan = check.violations(keyed)
-                    if plan is not None:
-                        plans.append(plan)
-        fused = fuse_row_conditions(keyed, fusable)
-        if fused is not None:
-            plans.append(fused)
+        plans = [
+            p for p in (c.violations(keyed) for c in cols.plan_checks)
+            if p is not None
+        ]
+        if cols.scan is not None:
+            plans.append(cols.scan(keyed))
 
         _mark("plan_build")
 
@@ -388,21 +442,21 @@ class ValidationSuite(object):
         }
 
         _mark("violations_eval")
+        # acceptances only remove rows: with no violation there is
+        # nothing to accept, and the counts stay empty
+        accepted = bool(self.acceptances and pre_counts)
         accepted_df = violations
-        for acc in self.acceptances:
-            accepted_df = acc.apply(accepted_df)
-        if self.acceptances:
+        post_counts = dict(pre_counts)
+        if accepted:
+            for acc in self.acceptances:
+                accepted_df = acc.apply(accepted_df)
             accepted_df = accepted_df.persist()
-        post_counts = (
-            {
+            post_counts = {
                 (r["partition_key"], r["check_id"]): r["n"]
                 for r in accepted_df.groupBy("partition_key", "check_id")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            if self.acceptances
-            else dict(pre_counts)
-        )
 
         _mark("acceptances")
         if violations_sink:
@@ -498,7 +552,9 @@ class ValidationSuite(object):
                 )
         verdicts = local_frame(spark, verdict_rows, VERDICT_SCHEMA)
 
-        if manifest_dir:
+        # a run that validated no partition has nothing to record (a
+        # missing manifest reads as no completed partitions)
+        if manifest_dir and all_partitions:
             partition_rows = [
                 (
                     pk,
@@ -553,7 +609,7 @@ class ValidationSuite(object):
             name: t - prev for (_, prev), (name, t) in zip(marks, marks[1:])
         }
         persisted = [violations]
-        if self.acceptances:
+        if accepted:
             persisted.append(accepted_df)
         return SuiteResult(
             run_id, accepted_df, verdicts, stats_rows, wall_ms, n_rows_total,

@@ -37,6 +37,7 @@ from .predicates import (
     compile_row_predicate,
     is_numeric_scalar,
 )
+from .session import local_frame
 
 CORE_COLS = ["kind", "group_key", "doc_id", "value", "expected", "deviation", "detail"]
 
@@ -70,7 +71,7 @@ def _empty_core(spark):
             T.StructField("detail", T.MapType(T.StringType(), T.StringType())),
         ]
     )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _core_select(

@@ -1154,3 +1154,198 @@ class TestBenfordCheck:
 
         with pytest.raises(ValueError, match="max_chi2"):
             BenfordCheck("v", max_chi2=0)
+
+
+def _jobs_and_plans(spark, group, fn):
+    """Run ``fn()`` under a job group; return its result, the group's
+    (jobs, stages) and the physical plans of the SQL executions it ran."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    # the store keeps the latest executions in id order
+    execs = store.executionsList()
+    last = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(group + "-done", "")
+    bus.waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    plans = []
+    execs = store.executionsList()
+    for i in range(execs.size() - 1, -1, -1):
+        if execs.apply(i).executionId() <= last:
+            break
+        plans.append(execs.apply(i).physicalPlanDescription())
+    return out, (len(jobs), stages), plans
+
+
+class TestFullSkipResume:
+    """A resume whose partitions are all complete evaluates its checks
+    over an empty relation: no check scans or shuffles the input, and
+    the outputs are those of the checks over zero rows."""
+
+    def test_resume_runs_pinned_jobs_and_no_token_scan(
+        self, spark, seqs, tmp_path
+    ):
+        path = str(tmp_path / "t")
+        seqs.write.parquet(path)
+        table = spark.read.parquet(path)
+        kw = dict(run_id="fs1", manifest_dir=str(tmp_path / "m"),
+                  violations_sink=str(tmp_path / "v"))
+        suite = north_star_suite(ALLOWED_SOURCES)
+        suite.run(table, **kw).unpersist()
+        counts = []
+        for i in range(2):
+            res, jobs, plans = _jobs_and_plans(
+                spark, "full-skip-%d" % i,
+                lambda: suite.run(spark.read.parquet(path), **kw),
+            )
+            res.unpersist()
+            assert res.stats_rows == []
+            assert plans and all("tokens" not in p for p in plans), plans
+            counts.append(jobs[0])
+        # the manifest read, the stats pass (map and result job) and the
+        # verdict counts over the empty violations; with the full scan it
+        # was 7
+        assert counts == [4, 4]
+
+    def test_zero_row_outputs_unchanged(self, spark, tmp_path):
+        # the rows a full-skip resume returns for checks that report
+        # from zero rows: every reference id, required source and drift
+        # baseline group reads as missing (pinned from the full-scan
+        # implementation, which gave the same rows)
+        from collections import Counter
+
+        data = tokenized_sequences(spark, 60, seed=5, dup_rate=0,
+                                   len_mismatch_rate=0, bad_source_rate=0,
+                                   null_rate=0)
+        required = ReferentialCheck("source", allowed=ALLOWED_SOURCES,
+                                    require_all_present=True)
+        required.check_id = "required_sources"
+        suite = north_star_suite(
+            ALLOWED_SOURCES,
+            drift_baseline=histogram(data, "n_tok", "source", 0.0, 4096.0,
+                                     32),
+            reference_tokens=ref_tokens(spark, 60, seed=5, corrupt_rate=0,
+                                        missing_rate=0),
+            extra_checks=[required],
+        )
+        kw = dict(run_id="fs2", manifest_dir=str(tmp_path / "m"))
+        first = suite.run(data, **kw)
+        assert not first.failed
+        first.unpersist()
+        res = suite.run(data, **kw)
+        res.unpersist()
+        verdicts = res.verdicts.collect()
+        assert len(verdicts) == 110
+        sources = ["books", "code", "forums", "web", "wiki"]
+        assert sorted(
+            (r["partition_key"], r["check_id"]) for r in verdicts
+            if r["status"] != "pass"
+        ) == sorted(
+            [("__global__", "required_sources"),
+             ("__global__", "token_equality")]
+            + [("source=" + s, "distribution_drift") for s in sources]
+        )
+        assert Counter(
+            (r["check_id"], r["kind"], r["partition_key"], r["group_key"])
+            for r in res.violations.collect()
+        ) == Counter(
+            {("token_equality", "missing", None, None): 60,
+             ("required_sources", "missing", None, None): 5,
+             **{("distribution_drift", "missing", "source=" + s, s): 1
+                for s in sources}}
+        )
+
+    def test_clean_input_skips_acceptances(self, spark):
+        clean = tokenized_sequences(spark, 800, seed=11, dup_rate=0,
+                                    len_mismatch_rate=0, bad_source_rate=0,
+                                    null_rate=0)
+        clean.persist().count()
+        got = {}
+        for name, acc in (
+            ("plain", None),
+            ("accepted", [accepted.tolerance(5) | accepted.count(50)]),
+        ):
+            suite = north_star_suite(ALLOWED_SOURCES, acceptances=acc)
+            suite.run(clean, run_id="warm").unpersist()
+            res, jobs, _plans = _jobs_and_plans(
+                spark, "clean-" + name,
+                lambda: suite.run(clean, run_id="ca"),
+            )
+            rows = sorted(
+                (r["partition_key"], r["check_id"], r["status"],
+                 r["n_violations"], r["n_rows"])
+                for r in res.verdicts.collect()
+            )
+            assert res.violations.count() == 0
+            res.unpersist()
+            got[name] = (rows, jobs)
+        clean.unpersist()
+        assert got["plain"][0] == got["accepted"][0]
+        assert {s for (_p, _c, s, _n, _r) in got["plain"][0]} == {"pass"}
+        # no acceptance job: with no violation there is nothing to accept
+        assert got["plain"][1] == got["accepted"][1]
+
+
+class TestColumnReuse:
+    """A suite builds its Columns once per input schema and check list,
+    and a run over a new schema or after ``checks`` changed equals a
+    fresh suite's run."""
+
+    @staticmethod
+    def _outputs(res):
+        out = (
+            sorted(map(tuple, res.verdicts.drop("run_id", "wall_ms")
+                       .collect()), key=repr),
+            sorted(map(tuple, res.violations.drop("run_id", "detail")
+                       .collect()), key=repr),
+        )
+        res.unpersist()
+        return out
+
+    def test_new_schema_and_checks_rebuild(self, spark, seqs):
+        from datatest_spark.operators.checks import LengthBoundCheck
+
+        def make():
+            return ValidationSuite([
+                NullRateCheck({"n_tok": 0.01}),
+                ConsistencyCheck(),
+                TokenRangeCheck(),
+                ReferentialCheck("source", allowed=ALLOWED_SOURCES),
+            ])
+
+        built = []
+        suite = make()
+        check = suite.checks[1]
+        row_conditions = check.row_conditions
+
+        def counting(df):
+            built.append(tuple(df.columns))
+            return row_conditions(df)
+
+        check.row_conditions = counting
+        frames = [
+            seqs,
+            seqs,
+            seqs.drop("doc_id"),
+            seqs.withColumn("extra", F.lit(1)),
+        ]
+        for i, df in enumerate(frames):
+            assert self._outputs(suite.run(df, run_id="cr")) == (
+                self._outputs(make().run(df, run_id="cr"))
+            ), i
+        # one build per schema: the second run over seqs reused it
+        assert len(built) == 3
+        suite.checks.append(LengthBoundCheck(max_len=100))
+        fresh = make()
+        fresh.checks.append(LengthBoundCheck(max_len=100))
+        got = self._outputs(suite.run(seqs, run_id="cr"))
+        assert got == self._outputs(fresh.run(seqs, run_id="cr"))
+        assert any(r[0] == "length_bound" for r in got[1])
+        assert len(built) == 4
